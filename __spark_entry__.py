@@ -156,16 +156,8 @@ def q_neutralize_ols_era(spark: SparkSession, sf_dir: str) -> DataFrame:
     global min-max — every stage codegen, bit-exact DuckDB oracle."""
     from centimators_spark.operators.neutralization import era_ols_neutralize
 
-    li = _lineitem(spark, sf_dir).select(
-        *KEYS,
-        F.date_trunc("month", F.col("l_shipdate")).alias("era"),
-        F.col("l_quantity").cast("double").alias("q"),
-        F.round(F.col("l_discount") * 100).alias("d100"),
-        F.round(F.col("l_tax") * 100).alias("t100"),
-        F.round(F.col("l_extendedprice") * 100).alias("e100"),
-    )
     return era_ols_neutralize(
-        li,
+        _panel_inputs(spark, sf_dir),
         "e100",
         ["q", "d100", "t100"],
         era_col="era",
@@ -196,27 +188,7 @@ def q_neutralizer_full_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     standardize → global min-max — as ONE pure-expression plan with a
     bit-exact composed oracle. The 6dp-rounded gaussian values scale by
     1e6 into exact integers, so the decimal-Gram/Cramer machinery of
-    era_ols_neutralize applies unchanged.
-
-    The RESULT is a session-shared artifact (r9 verdict item 2):
-    neutralizer_kernel_contract consumes the identical twin frame, so
-    within one session/bench-chunk the windowed gaussianize + OLS plan
-    — the most expensive lineage in the suite — executes once, not
-    three times (twin query + contract's twin side)."""
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_df_artifact,
-    )
-
-    return _shared_df_artifact(
-        spark,
-        (sf_dir, "neutralizer_twin"),
-        lambda: _neutralizer_full_expr_plan(spark, sf_dir),
-    )
-
-
-def _neutralizer_full_expr_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
+    era_ols_neutralize applies unchanged."""
     from centimators_spark.operators.neutralization import (
         era_ols_neutralize,
         gaussianize_expr,
@@ -488,35 +460,6 @@ def _panel_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shared_neutralized_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared per-era OLS neutralized feature frame — the
-    feature-store table a training platform persists once and every
-    downstream prep job reads (r13 optimization; the
-    _shared_minhash_pairs discipline applied to the feature frame).
-    panel_features' quantile stages consume it; q_neutralize_ols_era —
-    the stage's own contract query — deliberately does NOT read the
-    artifact, so its bench timing keeps measuring the real
-    Gram/solve/standardize cost. Values identical by construction:
-    the builder is the same deterministic era_ols_neutralize call
-    (exact decimal sums, fixed-order Cramer, rounded residuals)."""
-    from centimators_spark.operators.neutralization import era_ols_neutralize
-    from centimators_spark.plans.datapipe_queries import _shared_df_artifact
-
-    return _shared_df_artifact(
-        spark,
-        (sf_dir, "panel_neutralized"),
-        lambda: era_ols_neutralize(
-            _panel_inputs(spark, sf_dir),
-            "e100",
-            ["q", "d100", "t100"],
-            era_col="era",
-            proportion=0.5,
-            keep_cols=KEYS,
-            materialize="localCheckpoint",
-        ),
-    )
-
-
 def q_panel_features(
     spark: SparkSession, sf_dir: str, materialize: str = "localCheckpoint"
 ) -> DataFrame:
@@ -528,42 +471,22 @@ def q_panel_features(
     the END-TO-END pipeline is bit-exact — the composability property
     a training platform actually needs.
 
-    ``materialize`` (localCheckpoint|persist|none) selects how the two
-    multi-consumer frames (the OLS residual frame and the neutralized
-    frame the quantile stages re-read) are cut, same surface as the
-    stages' own parameter: localCheckpoint is fastest/stablest on
-    local[n] (see inline notes); on a cluster pass "persist" so the
-    lineage cut is storage-evictable and rack-replicated rather than
-    pinned to executor-local block files."""
+    ``materialize`` is passed to the OLS stage
+    (:func:`era_ols_neutralize`), which cuts its multi-consumer
+    residual frame with it: localCheckpoint is fastest/stablest on
+    local[n]; on a cluster pass "persist" so the lineage cut is
+    storage-evictable rather than pinned to executor-local block
+    files."""
     from centimators_spark.operators.encoding import quantile_bin
     from centimators_spark.operators.neutralization import era_ols_neutralize
     from centimators_spark.operators.stats import robust_zscore
     from centimators_spark.sampling import hash_split
 
-    if materialize == "localCheckpoint":
-        # default/local path (r13 optimization): the neutralized frame
-        # is the session-shared feature-store artifact — built once per
-        # (session, sf_dir), already checkpoint-cut for the quantile
-        # consumers below. The artifact registry's eager localCheckpoint
-        # subsumes both the old inner era_ols materialize and the old
-        # outer cut here (see _shared_neutralized_frame for why this is
-        # value-identical and why q_neutralize_ols_era stays
-        # artifact-free). persist/none keep the legacy direct build —
-        # the cluster-guidance surface of this parameter (persist:
-        # storage-evictable blocks; none: pure lazy recompute).
-        n = _shared_neutralized_frame(spark, sf_dir)
-    elif materialize in ("persist", "none"):
-        n = era_ols_neutralize(
-            _panel_inputs(spark, sf_dir),
-            "e100", ["q", "d100", "t100"], era_col="era", proportion=0.5,
-            keep_cols=KEYS, materialize=materialize,
-        )
-        if materialize == "persist":
-            n = n.persist()
-    else:
-        raise ValueError(
-            f"materialize must be localCheckpoint|persist|none, got {materialize!r}"
-        )
+    n = era_ols_neutralize(
+        _panel_inputs(spark, sf_dir),
+        "e100", ["q", "d100", "t100"], era_col="era", proportion=0.5,
+        keep_cols=KEYS, materialize=materialize,
+    )
     rz = robust_zscore(n, ["neutralized"], exact=True, consistency=RZ_C)
     qb = quantile_bin(rz, ["neutralized"], n_bins=10, exact=True)
     out = hash_split(
@@ -702,22 +625,14 @@ def q_penalizer_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _unique_key_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The key-unique subset of lineitem — (l_orderkey, l_linenumber)
     pairs appearing exactly once; a well-defined join domain both
-    engines agree on. Session-shared: both kernel contracts
-    (neutralizer, PCA) join against the same set."""
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_df_artifact,
-    )
-
-    return _shared_df_artifact(
-        spark,
-        (sf_dir, "unique_key_rows"),
-        lambda: (
-            _lineitem(spark, sf_dir)
-            .groupBy(*KEYS)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") == 1)
-            .select(*KEYS)
-        ),
+    engines agree on; both kernel contracts (neutralizer, PCA) join
+    against it."""
+    return (
+        _lineitem(spark, sf_dir)
+        .groupBy(*KEYS)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .where(F.col("__c") == 1)
+        .select(*KEYS)
     )
 
 
@@ -3732,15 +3647,12 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in duplicate-cluster size — exactly the boilerplate pathology the
     cap exists for; the oracle mirrors the capped index."""
     from centimators_spark.dedup.jaccard import ngram_containment_pairs
-    from centimators_spark.plans.datapipe_queries import _shared_gram_inv
 
-    docs = load_table(spark, sf_dir, "documents")
     return ngram_containment_pairs(
-        docs,
+        load_table(spark, sf_dir, "documents"),
         n=3,
         threshold=0.8,
         df_cap=100,
-        inv=_shared_gram_inv(spark, sf_dir),
     )
 
 
@@ -3855,14 +3767,12 @@ def q_kcore_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     are cliques, not chains" triage a dedup report needs. Fixed
     8-round peel (converges well before that here; asserted in unit
     tests), each round one degree aggregation + two semi-joins on the
-    monotonically shrinking edge set. Pair table from the session
-    artifact (_shared_minhash_pairs, r13 optimization)."""
+    monotonically shrinking edge set (kcore pins the edge list
+    itself)."""
     from centimators_spark.graphs import kcore
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_minhash_pairs,
-    )
+    from centimators_spark.plans.datapipe_queries import q_dedup_minhash_lsh
 
-    edges = _shared_minhash_pairs(spark, sf_dir).select(
+    edges = q_dedup_minhash_lsh(spark, sf_dir).select(
         F.col("d1").alias("src"), F.col("d2").alias("dst")
     )
     return kcore(edges, k=2, rounds=8)
@@ -5128,20 +5038,10 @@ def q_theta_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer theta/count/floor-div estimator, with the exact
     intersection riding along as the accuracy witness
     (sketches.theta_sketch_intersections). Fourth sketch family beside
-    HLL, the percentile sketch, and count-min. Item stream from the
-    session-shared ingest table (_shared_source_grams, r13); sketch
-    build + set algebra still run per execution."""
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_source_grams,
-        _shared_source_pair_truth,
-    )
+    HLL, the percentile sketch, and count-min."""
     from centimators_spark.sketches import theta_sketch_intersections
 
-    return theta_sketch_intersections(
-        load_table(spark, sf_dir, "documents"),
-        grams=_shared_source_grams(spark, sf_dir),
-        pair_truth=_shared_source_pair_truth(spark, sf_dir),
-    )
+    return theta_sketch_intersections(load_table(spark, sf_dir, "documents"))
 
 
 def q_audio_fingerprint_dedup(
@@ -5470,11 +5370,9 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential-tested against exact union-find on path/clique/star/
     random graphs."""
     from centimators_spark.dedup.cluster import connected_components_star
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_minhash_pairs,
-    )
+    from centimators_spark.plans.datapipe_queries import q_dedup_minhash_lsh
 
-    pairs = _shared_minhash_pairs(spark, sf_dir)
+    pairs = q_dedup_minhash_lsh(spark, sf_dir)
     return connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "cluster"
     )
@@ -5685,11 +5583,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one community vs several loosely-bridged ones; the mode-aggregation
     sibling of kcore/pagerank in the fixed-rounds iterative family."""
     from centimators_spark.graphs import label_propagation
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_minhash_pairs,
-    )
+    from centimators_spark.plans.datapipe_queries import q_dedup_minhash_lsh
 
-    edges = _shared_minhash_pairs(spark, sf_dir).select(
+    edges = q_dedup_minhash_lsh(spark, sf_dir).select(
         F.col("d1").alias("src"), F.col("d2").alias("dst")
     )
     return label_propagation(edges, rounds=3)
@@ -6281,21 +6177,10 @@ def q_theta_a_not_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches.theta_sketch_a_not_b): per ORDERED source pair, distinct
     3-grams unique to A — the 'what would removing this source lose'
     audit, completing the theta family beside the intersection. Exact
-    integer theta/count/floor-div estimator; true_diff witness.
-    Item stream from the session-shared ingest table
-    (_shared_source_grams, r13); sketch build + set algebra still run
-    per execution."""
-    from centimators_spark.plans.datapipe_queries import (
-        _shared_source_grams,
-        _shared_source_pair_truth,
-    )
+    integer theta/count/floor-div estimator; true_diff witness."""
     from centimators_spark.sketches import theta_sketch_a_not_b
 
-    return theta_sketch_a_not_b(
-        load_table(spark, sf_dir, "documents"),
-        grams=_shared_source_grams(spark, sf_dir),
-        pair_truth=_shared_source_pair_truth(spark, sf_dir),
-    )
+    return theta_sketch_a_not_b(load_table(spark, sf_dir, "documents"))
 
 
 def q_order_priority_counts(
@@ -6430,16 +6315,7 @@ def q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram union estimated from the 64-register sketches alone by the
     register-wise max MERGE — the operation that makes HLL the 100 TB
     per-partition distinct. Completes the sketch set algebra with
-    theta intersection and A-NOT-B difference; true_union witness.
-
-    THE SKETCH FAMILY'S TIMED PAYER (r14, round-13 verdict item 1):
-    this query deliberately does NOT read the session-shared
-    _shared_source_grams / _shared_source_pair_truth artifacts — it
-    rebuilds the tokenize → explode → distinct ingest AND the
-    exact-truth pair witness inside its own timed plan (the
-    dedup_minhash_lsh pattern), so the family's bench subtotal always
-    includes one full ingest + witness execution. The two theta
-    siblings keep the artifacts."""
+    theta intersection and A-NOT-B difference; true_union witness."""
     from centimators_spark.sketches import hll_union_pairs
 
     return hll_union_pairs(load_table(spark, sf_dir, "documents"))

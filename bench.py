@@ -25,6 +25,13 @@ process therefore splits the query list into chunks of
 protocol is unchanged: warm run, best-of-2 (+1 adaptive rerun on >2x
 disagreement), clearCache + System.gc between queries. Pass
 ``--single-session`` to reproduce the old monolithic behavior.
+
+Every query builds its own inputs inside its own plan, so a query's
+timing does not depend on which chunk it lands in or what ran before
+it. A run that times fewer queries than ``queries()`` declares (a
+chunk crashed) still prints both JSON lines, with the lost names under
+``"missing"``, and then exits non-zero instead of reporting a smaller
+total.
 """
 
 from __future__ import annotations
@@ -40,33 +47,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 CHUNK = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "24"))
 _CHILD_MARK = "##BENCH_CHUNK_RESULT## "
-
-# (follower, leader) pairs sharing a session artifact (gram inverted
-# index, neutralizer twin frame, clustered ANN fixture): they must
-# land in the SAME fresh-JVM chunk or the artifact rebuilds — used by
-# both the chunk planner and the outlier re-run below.
-FAMILY_PAIRS = [
-    ("containment_pairs", "dedup_ngram_jaccard"),
-    ("neutralizer_kernel_contract", "neutralizer_full_expr"),
-    ("pca_kernel_contract", "neutralizer_kernel_contract"),
-    ("sq8_clustered_contract", "ivfpq_pruned_contract"),
-    # r13 optimization: five queries consume the session-shared
-    # MinHash pair table (_shared_minhash_pairs); chain them behind
-    # dedup_clusters so one fresh JVM builds the artifact once
-    # (dedup_minhash_lsh itself stays artifact-free: its timing is
-    # the pair-pipeline cost, see _shared_minhash_pairs docstring)
-    ("dedup_clusters_star", "dedup_clusters"),
-    ("kcore_dupgraph", "dedup_clusters_star"),
-    ("label_propagation", "kcore_dupgraph"),
-    ("corpus_clean", "label_propagation"),
-    # r13/r14: the two THETA set-algebra audits consume the
-    # session-shared (source, gram) ingest table (_shared_source_grams)
-    # — chain them so one fresh JVM ingests once. hll_union is the
-    # family's TIMED PAYER (r13 verdict item 1): it rebuilds
-    # ingest + witness artifact-free inside its own plan, so it needs
-    # no chunk placement — its timing is the same in any JVM.
-    ("theta_a_not_b", "theta_intersections"),
-]
 
 # The one-pass resampling family's 33-66 decimal aggregation buffers
 # are bimodal under heap pressure from the theta/HLL sketch-algebra
@@ -163,50 +143,15 @@ def pick_outliers(
     ]
 
 
-def rerun_chunk_names(outliers: list[str]) -> list[str]:
-    """Outliers plus any family leaders they depend on (leader first,
-    so the shared artifact exists before the follower times)."""
-    leaders = dict(FAMILY_PAIRS)
-    names: list[str] = []
-    for n in outliers:
-        chain = []
-        cur = n
-        seen = set()
-        while cur in leaders and cur not in seen:
-            seen.add(cur)
-            cur = leaders[cur]
-            chain.append(cur)
-        for ld in reversed(chain):
-            if ld not in names:
-                names.append(ld)
-        if n not in names:
-            names.append(n)
-    return names
-
-
-def plan_rerun_chunks(outliers: list[str]) -> list[list[str]]:
-    """Fresh-JVM chunk plan for the outlier re-run pass (r12 advice
-    item 2): ISOLATED_CHUNK members keep their own-JVM placement even
-    on re-run (the heap-pressure bimodality the isolation exists to
-    avoid), and the rest is split at the CHUNK cap without ever
-    splitting a leader→follower family chain across a JVM boundary
-    (each fresh JVM must rebuild its own shared artifact)."""
+def plan_rerun_chunks(names: list[str]) -> list[list[str]]:
+    """Fresh-JVM chunk plan for the main pass and the outlier re-run
+    pass (r12 advice item 2): ISOLATED_CHUNK members get their own JVM
+    (the heap-pressure bimodality the isolation exists to avoid), and
+    the rest is split at the CHUNK cap."""
     iso_set = set(ISOLATED_CHUNK)
-    iso = [n for n in outliers if n in iso_set]
-    groups = [
-        rerun_chunk_names([n]) for n in outliers if n not in iso_set
-    ]
-    chunks: list[list[str]] = []
-    current: list[str] = []
-    for g in groups:
-        add = [x for x in g if x not in current]
-        if current and len(current) + len(add) > CHUNK:
-            chunks.append(current)
-            current = []
-            add = list(dict.fromkeys(g))
-        current.extend(add)
-    if current:
-        chunks.append(current)
+    iso = [n for n in names if n in iso_set]
+    rest = [n for n in names if n not in iso_set]
+    chunks = [rest[s : s + CHUNK] for s in range(0, len(rest), CHUNK)]
     if iso:
         chunks.append(iso)
     return chunks
@@ -288,24 +233,6 @@ def main():
     import __spark_entry__ as entrymod
 
     all_names = list(entrymod.queries())
-    # family-aware chunking (bench-only reorder; the driver window is
-    # queries()' order, untouched): queries sharing a session artifact
-    # must land in the SAME fresh-JVM chunk or the artifact rebuilds —
-    # containment_pairs shares the gram inverted index with
-    # dedup_ngram_jaccard/blocking_quality; neutralizer_kernel_contract
-    # consumes neutralizer_full_expr's shared twin frame (r9 verdict
-    # item 2) and both kernel contracts share the unique-key-rows set
-    for follower, leader in FAMILY_PAIRS:
-        if follower in all_names and leader in all_names:
-            all_names.remove(follower)
-            all_names.insert(all_names.index(leader) + 1, follower)
-    # the resampling family's decimal aggs get their own fresh JVM
-    # (r11 verdict item 4) — pulled out BEFORE chunk boundaries are cut
-    isolated = [n for n in ISOLATED_CHUNK if n in all_names]
-    rest = [n for n in all_names if n not in set(isolated)]
-    chunks = [rest[s : s + CHUNK] for s in range(0, len(rest), CHUNK)]
-    if isolated:
-        chunks.append(isolated)
 
     def _run_child_chunk(chunk: list[str]) -> dict[str, float] | None:
         out = subprocess.run(
@@ -320,7 +247,7 @@ def main():
         for line in out.stdout.splitlines():
             if line.startswith(_CHILD_MARK):
                 got = json.loads(line[len(_CHILD_MARK):])
-        if got is None:  # chunk crashed: surface loudly, keep going
+        if got is None:  # chunk crashed: report, then fail the run
             sys.stderr.write(
                 f"chunk FAILED ({chunk[:3]}...)\n{out.stderr[-2000:]}\n"
             )
@@ -329,11 +256,11 @@ def main():
     if "--single-session" in sys.argv:
         timings = run_queries(all_names)
     else:
+        # the resampling family's decimal aggs get their own fresh JVM
+        # (r11 verdict item 4) — pulled out BEFORE chunk boundaries are cut
         timings = {}
-        for chunk in chunks:
-            got = _run_child_chunk(chunk)
-            if got is not None:
-                timings.update(got)
+        for chunk in plan_rerun_chunks(all_names):
+            timings.update(_run_child_chunk(chunk) or {})
 
     # suite-level host-load guard (r11 verdict item 3): any query
     # reading >RERUN_FACTOR (2.0)x its recorded trailing-min AND
@@ -356,6 +283,7 @@ def main():
                 timings[n] = round(min(timings[n], got[n]), 3)
 
     total = round(sum(timings.values()), 3)
+    missing = [n for n in all_names if n not in timings]
 
     # verification queries (hash-contract twins whose cost is dominated
     # by the oracle side — brute-force recall baselines, kernel-vs-twin
@@ -388,6 +316,7 @@ def main():
         "n_queries": len(timings),
         "subtotals": subtotals,
         "reruns": reruns,
+        "missing": missing,
     }
     # append this run to the trailing-min history the guard reads
     try:
@@ -397,11 +326,8 @@ def main():
         pass
     # full per-query map: to a sidecar file + an EARLY stdout line (so a
     # human or tools/bench_compare.py can always find it) ...
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
     try:
-        with open(detail_path, "w") as fh:
+        with open(_repo_file("BENCH_DETAIL.json"), "w") as fh:
             json.dump(full, fh)
             fh.write("\n")
     except OSError:
@@ -422,10 +348,16 @@ def main():
                 "sf": sf_val,
                 "n_queries": len(timings),
                 "subtotals": subtotals,
+                "missing": missing,
                 "detail": "BENCH_DETAIL.json",
             }
         )
     )
+    if missing:
+        sys.exit(
+            f"bench incomplete: {len(timings)} of {len(all_names)} "
+            f"queries timed; missing {missing}"
+        )
 
 
 if __name__ == "__main__":

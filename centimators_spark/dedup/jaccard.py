@@ -35,18 +35,17 @@ def gram_inverted_index(
     content_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The uncapped (doc_id, g) inverted index — the Arrow shingling
-    pass both pair detectors consume. Build it ONCE per session (eager
-    localCheckpoint; at cluster scale: a bucketed table) and pass it to
+    pass both pair detectors consume, pinned with an eager
+    localCheckpoint (at cluster scale: a bucketed table). Pass it to
     :func:`ngram_jaccard_pairs` / :func:`ngram_containment_pairs` via
-    ``inv=`` so the Python boundary runs once, not once per query.
-    checkpoint=False when the caller materializes it itself (e.g. the
-    session artifact registry)."""
+    ``inv=`` when one plan runs several detectors over the same corpus,
+    so the Python boundary runs once."""
     grams = _gram_sets(df, content_col, id_col, n)
-    inv = grams.select("doc_id", F.explode("grams").alias("g"))
-    return inv.localCheckpoint(eager=True) if checkpoint else inv
+    return grams.select("doc_id", F.explode("grams").alias("g")).localCheckpoint(
+        eager=True
+    )
 
 
 def ngram_jaccard_pairs(
@@ -70,9 +69,9 @@ def ngram_jaccard_pairs(
     one side only). df_cap=None gives exact all-grams Jaccard (only
     sensible when the corpus is known boilerplate-free).
 
-    inv: optionally, a prebuilt :func:`gram_inverted_index` — pass the
-    session-shared artifact when several detectors run over the same
-    corpus so the Arrow shingling pass executes once."""
+    inv: optionally, a prebuilt :func:`gram_inverted_index` (or the
+    same (doc_id, g) postings exploded from a shingle frame the caller
+    already holds) so the Arrow shingling pass executes once."""
     inv = _capped_index(df, content_col, id_col, n, df_cap, inv)
     # grams are distinct per doc → set size == exploded row count; deriving
     # sizes from the (capped) inv reuses the single shingling pass and keeps
@@ -120,8 +119,8 @@ def _capped_index(
     inv: DataFrame | None,
 ) -> DataFrame:
     """(doc_id, g) postings with the stop-gram cap applied; builds (and
-    checkpoint-materializes) the inverted index unless a session-shared
-    one is passed in."""
+    checkpoint-materializes) the inverted index unless one is passed
+    in."""
     if inv is None:
         inv = gram_inverted_index(df, content_col, id_col, n)
     if df_cap is not None:

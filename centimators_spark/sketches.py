@@ -369,6 +369,29 @@ def theta_retained_rows(
     )
 
 
+def _source_gram_items(
+    df: DataFrame, content_col: str, by: str, n: int
+) -> DataFrame:
+    """The distinct (g, gram) item stream the set-algebra sketches
+    audit: token n-gram shingles per ``by`` group. Pinned with ONE
+    eager localCheckpoint because every sketch reads it several times
+    (hashes/registers, per-group totals, the exact-truth witness) —
+    the lazy form re-ran tokenize+explode+distinct from the scan per
+    consumer (r13 optimization)."""
+    from centimators_spark.text.portable import token_ngrams
+
+    return (
+        df.select(
+            F.col(by).alias("g"),
+            F.explode(token_ngrams(tokens(F.col(content_col)), n)).alias(
+                "gram"
+            ),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 def _source_pair_counts(
     grams: DataFrame, out_col: str = "n_common"
 ) -> DataFrame:
@@ -410,8 +433,6 @@ def theta_sketch_intersections(
     by: str = "source",
     k: int = THETA_K,
     n: int = 3,
-    grams: DataFrame | None = None,
-    pair_truth: DataFrame | None = None,
 ) -> DataFrame:
     """Theta/KMV sketch set-intersection audit (Dasgupta et al. 2016,
     the DataSketches theta family) — "how many distinct items appear
@@ -438,26 +459,9 @@ def theta_sketch_intersections(
     corpus-sized shuffles are the distinct and the exact-truth gram
     join (drop true_common in production and the sketch join is the
     ONLY pair cost — the point of theta sketches)."""
-    from centimators_spark.text.portable import token_ngrams
-
     from pyspark.sql import Window
 
-    if grams is None:
-        grams = (
-            df.select(
-                F.col(by).alias("g"),
-                F.explode(
-                    token_ngrams(tokens(F.col(content_col)), n)
-                ).alias("gram"),
-            )
-            .distinct()
-            # ONE corpus derivation for both the sketch path and the
-            # exact-truth witness (r13 optimization: the lazy form
-            # re-ran tokenize+explode+distinct per consumer); pass
-            # grams= (the session-shared ingest table) when several
-            # sketch queries audit the same item stream
-            .localCheckpoint(eager=True)
-        )
+    grams = _source_gram_items(df, content_col, by, n)
     hashes = grams.select(
         "g", md5_long(F.col("gram")).alias("h")
     ).distinct()
@@ -506,14 +510,8 @@ def theta_sketch_intersections(
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
-    # truth witness from per-gram source sets, no corpus self-join;
-    # pair_truth = the session-shared (src_a, src_b, n_common) table
-    # when several sketch audits witness the same ingested stream
-    truth = (
-        pair_truth.withColumnRenamed("n_common", "true_common")
-        if pair_truth is not None
-        else _source_pair_counts(grams, "true_common")
-    )
+    # truth witness from per-gram source sets, no corpus self-join
+    truth = _source_pair_counts(grams, "true_common")
     num = (
         F.coalesce(F.col("n_common"), F.lit(0)).cast("decimal(38,0)")
         * F.lit(THETA_SPACE).cast("decimal(38,0)")
@@ -611,8 +609,6 @@ def theta_sketch_a_not_b(
     by: str = "source",
     k: int = THETA_K,
     n: int = 3,
-    grams: DataFrame | None = None,
-    pair_truth: DataFrame | None = None,
 ) -> DataFrame:
     """Theta/KMV A-NOT-B set-difference estimate (the DataSketches
     ``a_not_b`` operation) — per ORDERED source pair, how many distinct
@@ -637,22 +633,7 @@ def theta_sketch_a_not_b(
     production and no pair-stage shuffle ever touches the corpus."""
     from pyspark.sql import Window
 
-    from centimators_spark.text.portable import token_ngrams
-
-    if grams is None:
-        grams = (
-            df.select(
-                F.col(by).alias("g"),
-                F.explode(
-                    token_ngrams(tokens(F.col(content_col)), n)
-                ).alias("gram"),
-            )
-            .distinct()
-            # ONE corpus derivation for the sketch path, the per-group
-            # totals and the truth witness (r13 optimization); grams=
-            # for the session-shared ingest table
-            .localCheckpoint(eager=True)
-        )
+    grams = _source_gram_items(df, content_col, by, n)
     hashes = grams.select(
         "g", md5_long(F.col("gram")).alias("h")
     ).distinct()
@@ -709,12 +690,8 @@ def theta_sketch_a_not_b(
     )
     # truth witness ONCE unordered (a<b — half the pair fan-out) from
     # per-gram source sets (no corpus self-join); both orientations by
-    # a rename union; pair_truth = the session-shared table
-    common_uo = (
-        pair_truth
-        if pair_truth is not None
-        else _source_pair_counts(grams, "n_common")
-    )
+    # a rename union
+    common_uo = _source_pair_counts(grams, "n_common")
     common = common_uo.unionByName(
         common_uo.select(
             F.col("src_b").alias("src_a"),
@@ -1377,8 +1354,6 @@ def hll_union_pairs(
     content_col: str = "text",
     by: str = "source",
     n: int = 3,
-    grams: DataFrame | None = None,
-    pair_truth: DataFrame | None = None,
 ) -> DataFrame:
     """HLL union per group pair — the MERGE operation that is the
     whole point of HLL (register-wise max): estimate the distinct
@@ -1399,19 +1374,7 @@ def hll_union_pairs(
     pair stage merges 64-row register tables per group — KBs
     regardless of corpus size. Drop true_union in production and pair
     cost is register-table-sized."""
-    from centimators_spark.text.portable import token_ngrams
-
-    if grams is None:
-        grams = (
-            df.select(
-                F.col(by).alias("g"),
-                F.explode(
-                    token_ngrams(tokens(F.col(content_col)), n)
-                ).alias("gram"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    grams = _source_gram_items(df, content_col, by, n)
     # no .distinct() on the hash projection: _hll_registers takes a
     # per-register MAX, which is multiplicity-invariant — the dedup
     # shuffle bought nothing (r13 optimization; md5-collision dedup
@@ -1464,13 +1427,8 @@ def hll_union_pairs(
         F.sum(term.cast(d38)).cast(d38).alias("S_used"),
         F.count(F.lit(1)).cast("long").alias("n_used"),
     )
-    # truth witness from per-gram source sets, no corpus self-join;
-    # pair_truth = the session-shared table (see theta siblings)
-    truth = (
-        pair_truth
-        if pair_truth is not None
-        else _source_pair_counts(grams, "n_common")
-    )
+    # truth witness from per-gram source sets, no corpus self-join
+    truth = _source_pair_counts(grams, "n_common")
     totals = grams.groupBy("g").agg(
         F.count(F.lit(1)).cast("long").alias("n_tot")
     )

@@ -129,11 +129,9 @@ def minhash_signatures_udf(
     """(doc_id, grams, sig: array<long>[NUM_PERM]) via Arrow-batched numpy.
 
     ``grams``: optionally a prebuilt :func:`gram_frame` (doc_id, grams)
-    — pass the session-shared shingling artifact when several
-    consumers run over the same corpus so tokenize+shingle executes
-    once (r14; the 64-perm signature kernel below still runs in full
-    per execution, and the values are identical because gram_frame is
-    deterministic)."""
+    — pass it when the same plan also builds a gram index from the
+    shingles, so tokenize+shingle executes once (the values are
+    identical because gram_frame is deterministic)."""
     if grams is None:
         grams = gram_frame(df, content_col, id_col, n)
     out_schema = StructType(

@@ -4,10 +4,9 @@ engine's hash-proven kernels use (text/portable.py's md5_long /
 sql_md5_long family), for batches of SHORT messages.
 
 Motivation (guide §4.2 — do the heavy lifting in vectorized native
-code): the Arrow partial-aggregation kernels (ml/bootstrap.py) and the
-gram-hash kernels (text/hashing_udf.py) spend most of their Python
-time in per-message ``hashlib.md5`` calls (~1.1 µs each, measured
-70% of the Poisson kernel). A message of ≤ 55 bytes pads to exactly
+code): the Arrow partial-aggregation kernels (ml/bootstrap.py) spend
+most of their Python time in per-message ``hashlib.md5`` calls
+(~1.1 µs each, measured 70% of the Poisson kernel). A message of ≤ 55 bytes pads to exactly
 ONE 64-byte MD5 block, so the whole digest is one 64-round
 compression — expressible as ~7 uint32 numpy ops per round over the
 entire batch at once. Measured 5-8x over the hashlib loop on the
@@ -21,7 +20,6 @@ fall back to hashlib for messages that are non-ASCII or longer than
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
@@ -142,53 +140,3 @@ def finish_blocks(
     blocks[idx, tl] = 0x80
     blocks[:, 56:64] = (tl * 8).astype("<u8").view(np.uint8).reshape(n, 8)
     return md5_60_block(blocks.view("<u4"))
-
-
-def md5_60_many(strs: np.ndarray) -> np.ndarray:
-    """MD5-60 for an object array of strings: vectorized for the
-    ASCII ≤55-byte subset, hashlib for the rest — values identical by
-    construction."""
-    n = len(strs)
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    try:
-        s = strs.astype("S")
-    except (UnicodeEncodeError, UnicodeDecodeError, ValueError):
-        s = None
-    if s is not None:
-        blens = np.char.str_len(s).astype(np.int64)
-        clens = np.fromiter((len(x) for x in strs), dtype=np.int64, count=n)
-        ok = (blens == clens) & (clens <= MAX_MSG)
-        if ok.all():
-            return finish_blocks(*_from_s(s, blens))
-        if ok.any():
-            w = min(s.dtype.itemsize, MAX_MSG + 1)
-            sub = np.ascontiguousarray(
-                np.frombuffer(s.tobytes(), dtype=np.uint8).reshape(
-                    n, s.dtype.itemsize
-                )[ok, :w]
-            )
-            base = np.zeros((int(ok.sum()), 64), dtype=np.uint8)
-            base[:, :w] = sub
-            out[ok] = finish_blocks(base, blens[ok])
-            rest = np.nonzero(~ok)[0]
-        else:
-            rest = np.arange(n)
-    else:
-        rest = np.arange(n)
-    md5 = hashlib.md5
-    fb = int.from_bytes
-    for i in rest:
-        out[i] = fb(md5(strs[i].encode("utf-8")).digest()[:8], "big") >> 4
-    return out
-
-
-def _from_s(s: np.ndarray, blens: np.ndarray):
-    n = len(s)
-    w = s.dtype.itemsize
-    base = np.zeros((n, 64), dtype=np.uint8)
-    base[:, : min(w, 64)] = np.frombuffer(s.tobytes(), dtype=np.uint8).reshape(
-        n, w
-    )[:, :64]
-    return base, blens

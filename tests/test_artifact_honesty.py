@@ -1,94 +1,33 @@
-"""Artifact-honesty guard (r14, round-13 verdict item 2).
+"""Artifact-free guard for the queries that pay their whole pipeline
+inside their own timed plan.
 
-Session-shared DataFrame artifacts (plans.datapipe_queries
-._shared_df_artifact) are built once per session; because the bench's
-untimed pre-pass executes every query before timing starts, the build
-cost of an artifact appears in NO timed window. That is only honest
-when a declared query pays the equivalent pipeline ARTIFACT-FREE
-inside its own timed plan (the dedup_minhash_lsh pattern), or when the
-artifact is one of the two judged-acceptable exemption classes
-(fixture data generation, train-once model/index artifacts).
-
-Three mechanical assertions:
-
-1. Every ``_shared_df_artifact(`` call site in the repo names a tag
-   declared in ``ARTIFACT_POLICY`` — a NEW artifact without a policy
-   entry fails loudly.
-2. Every declared payer is a declared query in ``queries()``.
-3. Building each payer's DataFrame triggers no ``_shared_df_artifact``
-   call at all — a payer that silently starts READING an artifact
-   (e.g. reverting the r14 hll_union fix) turns this test red.
+The session registry (plans.datapipe_queries._shared_df_artifact)
+only holds fixture tables and train-once ANN indexes. These queries
+must not read any registry DataFrame: a query that starts reading one
+would hide part of its cost in whichever query built the entry first.
+The wider self-containment check lives in tests/test_self_contained.py.
 """
 
 from __future__ import annotations
-
-import os
-import re
 
 import pytest
 
 import __spark_entry__ as entrymod
 from centimators_spark.plans import datapipe_queries as dq
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 
-SOURCES = [
-    os.path.join(REPO, "__spark_entry__.py"),
-]
-for root, _dirs, files in os.walk(os.path.join(REPO, "centimators_spark")):
-    SOURCES.extend(
-        os.path.join(root, f) for f in files if f.endswith(".py")
-    )
-
-
-def _call_site_tags() -> list[tuple[str, set[str]]]:
-    """(location, string-literals) for every _shared_df_artifact call
-    site (the key-tail expression within the next few lines)."""
-    sites = []
-    for path in SOURCES:
-        with open(path) as fh:
-            lines = fh.readlines()
-        for i, line in enumerate(lines):
-            if "_shared_df_artifact(" in line and "def _shared_df_artifact" not in line:
-                window = "".join(lines[i : i + 4])
-                lits = set(re.findall(r"\"([A-Za-z0-9_]+)\"", window))
-                sites.append((f"{os.path.relpath(path, REPO)}:{i + 1}", lits))
-    return sites
-
-
-def test_every_call_site_tag_is_declared():
-    sites = _call_site_tags()
-    assert sites, "no _shared_df_artifact call sites found (scan broken?)"
-    declared = set(dq.ARTIFACT_POLICY)
-    for loc, lits in sites:
-        assert lits & declared, (
-            f"artifact call at {loc} has no declared tag in "
-            f"ARTIFACT_POLICY (literals seen: {sorted(lits)}); declare a "
-            "payer query or a documented exemption"
-        )
-
-
-def test_policy_entries_are_payer_or_exempt():
-    for tag, pol in dq.ARTIFACT_POLICY.items():
-        assert ("payer" in pol) ^ ("exempt" in pol), tag
-        if "exempt" in pol:
-            assert len(pol["exempt"]) > 20, f"{tag}: explain the exemption"
-
-
-def test_payers_are_declared_queries():
-    names = set(entrymod.queries())
-    for tag, pol in dq.ARTIFACT_POLICY.items():
-        if "payer" in pol:
-            assert pol["payer"] in names, f"{tag}: payer not declared"
-
-
-@pytest.mark.parametrize(
-    "payer",
-    sorted({p["payer"] for p in dq.ARTIFACT_POLICY.values() if "payer" in p}),
+ARTIFACT_FREE = (
+    "ann_cosine_topk",
+    "dedup_minhash_lsh",
+    "hll_union",
+    "neutralize_ols_era",
 )
+
+
+@pytest.mark.parametrize("payer", ARTIFACT_FREE)
 def test_payer_builds_artifact_free(spark, payer, monkeypatch):
-    """Constructing the payer's DataFrame must not touch the session
+    """Constructing the query's DataFrame must not touch the session
     artifact registry: its timed plan carries the full pipeline."""
     recorded: list[tuple] = []
     real = dq._shared_df_artifact
@@ -99,8 +38,4 @@ def test_payer_builds_artifact_free(spark, payer, monkeypatch):
 
     monkeypatch.setattr(dq, "_shared_df_artifact", spy)
     entrymod.queries()[payer](spark, SF)
-    assert recorded == [], (
-        f"{payer} reads session artifacts {recorded} but is declared the "
-        "artifact-free payer — either it regressed or ARTIFACT_POLICY "
-        "needs a new payer"
-    )
+    assert recorded == [], f"{payer} reads session artifacts {recorded}"

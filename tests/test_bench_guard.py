@@ -1,11 +1,14 @@
 """The bench suite's host-load guard (r11 verdict item 3): outlier
-selection, trailing-min history, and family-leader re-run planning —
-pure functions, no Spark session. A synthetic loaded-host reading
+selection, trailing-min history, and re-run chunk planning — pure
+functions, no Spark session. A synthetic loaded-host reading
 (panel_features 5 s → 49 s, the BENCH_r11 incident) must be selected
-for re-run; noise-band flutter must not."""
+for re-run; noise-band flutter must not. A run that loses queries to
+a crashed chunk must fail instead of reporting a smaller total."""
 
 import json
 import sys
+
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -37,27 +40,6 @@ def test_pick_outliers_ignores_subhalfsecond_flutter():
     # never worth a fresh JVM
     trailing = {"tiny": 0.1}
     assert bench.pick_outliers({"tiny": 0.4}, trailing) == []
-
-
-def test_rerun_chunk_includes_family_leaders_in_order():
-    # pca_kernel_contract chains through neutralizer_kernel_contract
-    # to neutralizer_full_expr: leaders must run FIRST so the shared
-    # twin frame exists before the follower times
-    names = bench.rerun_chunk_names(["pca_kernel_contract"])
-    assert names == [
-        "neutralizer_full_expr",
-        "neutralizer_kernel_contract",
-        "pca_kernel_contract",
-    ]
-    # a leaderless query re-runs alone; duplicates collapse
-    names = bench.rerun_chunk_names(
-        ["panel_features", "containment_pairs", "dedup_ngram_jaccard"]
-    )
-    assert names == [
-        "panel_features",
-        "dedup_ngram_jaccard",
-        "containment_pairs",
-    ]
 
 
 def test_load_trailing_min_reads_history_then_detail(tmp_path, monkeypatch):
@@ -132,23 +114,9 @@ def test_plan_rerun_chunks_caps_and_isolates(monkeypatch):
     for c in chunks[:-1]:
         assert not (set(c) & iso)
         assert len(c) <= 4
-    # family chains stay whole inside one JVM, leaders first
-    pca_chunk = next(c for c in chunks if "pca_kernel_contract" in c)
-    i_full = pca_chunk.index("neutralizer_full_expr")
-    i_kern = pca_chunk.index("neutralizer_kernel_contract")
-    i_pca = pca_chunk.index("pca_kernel_contract")
-    assert i_full < i_kern < i_pca
     # every outlier is covered exactly once across the plan
     flat = [n for c in chunks for n in c]
-    assert set(outliers) <= set(flat)
-    # a chain longer than the cap still lands in one chunk (never split)
-    monkeypatch.setattr(bench, "CHUNK", 2)
-    chunks = bench.plan_rerun_chunks(["pca_kernel_contract"])
-    assert chunks == [[
-        "neutralizer_full_expr",
-        "neutralizer_kernel_contract",
-        "pca_kernel_contract",
-    ]]
+    assert sorted(flat) == sorted(outliers)
 
 
 def test_isolated_chunk_names_are_declared_queries():
@@ -159,6 +127,39 @@ def test_isolated_chunk_names_are_declared_queries():
     q = set(entrymod.queries())
     missing = [n for n in bench.ISOLATED_CHUNK if n not in q]
     assert missing == [], missing
-    # and the family pairs too
-    for follower, leader in bench.FAMILY_PAIRS:
-        assert follower in q and leader in q, (follower, leader)
+
+
+def test_main_fails_loudly_on_lost_chunk(tmp_path, monkeypatch, capsys):
+    """A chunk whose child process crashes loses its queries: main
+    still prints both JSON lines, names the lost queries under
+    "missing", and exits non-zero instead of reporting a smaller
+    total. History and detail files land in tmp_path, never in the
+    checkout."""
+    import subprocess
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setattr(
+        bench, "_repo_file", lambda name: str(tmp_path / name)
+    )
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    crashed: list[str] = []
+
+    def fake_run(cmd, **kwargs):
+        names = cmd[cmd.index("--chunk-names") + 1].split(",")
+        if not crashed:  # the first chunk dies without a result line
+            crashed.extend(names)
+            return subprocess.CompletedProcess(cmd, 1, "", "Traceback ...")
+        line = bench._CHILD_MARK + json.dumps({n: 0.1 for n in names})
+        return subprocess.CompletedProcess(cmd, 0, line + "\n", "")
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code not in (None, 0)
+    lines = capsys.readouterr().out.strip().splitlines()
+    full, last = json.loads(lines[-2]), json.loads(lines[-1])
+    n_all = len(entrymod.queries())
+    assert crashed and full["missing"] == crashed == last["missing"]
+    assert full["n_queries"] == n_all - len(crashed)
+    assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text()) == full

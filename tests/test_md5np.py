@@ -6,54 +6,14 @@ hash-proven kernel that adopts the vectorized path."""
 from __future__ import annotations
 
 import hashlib
-import random
-import string
 
 import numpy as np
 
-from centimators_spark.text.md5np import (
-    MAX_MSG,
-    finish_blocks,
-    md5_60_many,
-    pack_base,
-)
+from centimators_spark.text.md5np import finish_blocks, pack_base
 
 
 def _ref(msg: bytes) -> int:
     return int(hashlib.md5(msg).hexdigest()[:15], 16)
-
-
-def test_md5_60_many_random_short_ascii():
-    rng = random.Random(11)
-    strs = np.array(
-        [
-            "".join(
-                rng.choices(string.ascii_letters + string.digits + ":.,- ", k=rng.randint(0, MAX_MSG))
-            )
-            for _ in range(4000)
-        ],
-        dtype=object,
-    )
-    ref = np.array([_ref(s.encode()) for s in strs], dtype=np.int64)
-    assert (md5_60_many(strs) == ref).all()
-
-
-def test_md5_60_many_mixed_long_nonascii_and_nul():
-    rng = random.Random(12)
-    pool = [
-        "",  # empty message
-        "x" * 55,  # boundary
-        "y" * 56,  # one past the single-block limit -> hashlib path
-        "z" * 200,  # long -> hashlib path
-        "héllo wörld",  # non-ASCII -> whole-batch hashlib path
-        "nul\x00tail\x00",  # trailing NULs -> length guard
-    ]
-    strs = np.array(
-        pool + ["".join(rng.choices(string.printable, k=rng.randint(0, 90))) for _ in range(500)],
-        dtype=object,
-    )
-    ref = np.array([_ref(s.encode("utf-8")) for s in strs], dtype=np.int64)
-    assert (md5_60_many(strs) == ref).all()
 
 
 def test_pack_base_suffix_matches_hashlib():
