@@ -164,8 +164,7 @@ def run_queries(names: list[str]) -> dict[str, float]:
     import __spark_entry__ as entrymod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("centimators-bench", cpus=cpus)
+    spark = get_spark("centimators-bench")
     spark.sparkContext.setLogLevel("ERROR")
     registry = entrymod.queries()
 

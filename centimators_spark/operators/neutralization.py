@@ -18,11 +18,15 @@ Spark plan:
   gaussianize+lstsq work the reference recomputes per task);
 - the global min-max is a deliberate two-phase plan: tiny agg →
   broadcast crossJoin → column arithmetic (SURVEY.md §4 note 2), never
-  an unpartitioned window.
+  an unpartitioned window. Both phases read the kernel output through
+  one exchange keyed on every output column, which Spark plans once and
+  reuses, so each era's kernel runs once per transform.
 
-Scale: the only shuffle is the era hash-partition; each era must fit one
-task (inherent to exact per-era lstsq — at 100 TB choose era granularity
-accordingly). Arrow moves the batches; the kernel is vectorized numpy.
+Scale: two shuffles — the era hash-partition into the kernel and the
+exchange of the kernel output that both min-max phases share. Each era
+must fit one task (inherent to exact per-era lstsq — at 100 TB choose
+era granularity accordingly). Arrow moves the batches; the kernel is
+vectorized numpy.
 """
 
 from __future__ import annotations
@@ -125,9 +129,19 @@ def global_min_max_scale(
     df: DataFrame, cols: Sequence[str], eps: float = 1e-10
 ) -> DataFrame:
     """Scale each col to [0,1] over the WHOLE frame (two-phase agg+broadcast);
-    constant column → 0.5 (reference base.py:17-23)."""
+    constant column → 0.5 (reference base.py:17-23).
+
+    Both phases read ``df`` through ONE exchange keyed on every column
+    (AQE sizes it). Spark plans the second read as a ReusedExchange, so
+    an expensive ``df`` — a per-era Python kernel — is evaluated once.
+    Every column must be a key: with fewer keys, column pruning pushes a
+    narrower Project under the bounds side's exchange, the two exchanges
+    differ and ``df`` runs twice. A filter applied to the result is
+    pushed under the row side only, with the same effect: the output is
+    still correct, but ``df`` is evaluated twice."""
     # output names may contain dots (e.g. "..._neutralized_0.5") — address
-    # via df[...] (literal resolution) and dot-free temp aliases
+    # via backquoted references and dot-free temp aliases
+    df = df.repartition(*[F.col(f"`{c}`") for c in df.columns])
     safe = {c: c.replace(".", "_") for c in cols}
     aggs = []
     for c in cols:
@@ -386,7 +400,59 @@ def era_ols_neutralize_oracle_sql(
     """
 
 
-class FeatureNeutralizer:
+class EraKernelTransformer:
+    """Set-up shared by the per-era kernel transformers
+    (FeatureNeutralizer, FeaturePenalizer): the column arguments, the
+    ``era_col=None`` single-era fallback, feature inference, the narrow
+    kernel input and the kernel's output schema. Subclasses set
+    ``_output_names``."""
+
+    def __init__(self, pred_name, feature_names, suffix, era_col, order_col, keep_cols):
+        self.pred_names = [pred_name] if isinstance(pred_name, str) else list(pred_name)
+        self.feature_names = list(feature_names) if feature_names else None
+        self.suffix = suffix
+        self.era_col = era_col
+        self.order_col = (
+            [order_col] if isinstance(order_col, str) else list(order_col) if order_col else None
+        )
+        self.keep_cols = list(keep_cols) if keep_cols else []
+
+    def get_feature_names_out(self) -> list[str]:
+        return list(self._output_names)
+
+    def _kernel_input(self, df: DataFrame):
+        """→ (narrow frame, era column, features, passthrough columns,
+        kernel output schema)."""
+        era_col = self.era_col
+        if era_col is None:
+            # reference fallback (neutralization.py:146-153): no era_series
+            # → single era, with the same warning; one task processes all
+            # rows (inference-sized frames only)
+            warnings.warn(
+                "era_col not provided. Treating all data as a single era. "
+                "This is fine for live inference (1 era) but may be "
+                "incorrect for training data with multiple eras.",
+                UserWarning,
+            )
+            era_col = "__era"
+            df = df.withColumn(era_col, F.lit(0))
+        order = self.order_col or []
+        if not order:
+            warnings.warn(
+                "order_col not set: ordinal tie-breaking in gaussianize will "
+                "depend on partition order and is not deterministic."
+            )
+        skip = set(self.pred_names + self.keep_cols + [era_col] + order)
+        feats = self.feature_names or [c for c in df.columns if c not in skip]
+        passthrough = list(dict.fromkeys(order + self.keep_cols + [era_col]))
+        narrow = df.select(*dict.fromkeys(passthrough + self.pred_names + feats))
+        schema = StructType([narrow.schema[c] for c in passthrough])
+        for name in self._output_names:
+            schema = schema.add(name, "double")
+        return narrow, era_col, feats, passthrough, schema
+
+
+class FeatureNeutralizer(EraKernelTransformer):
     """Spark port of the reference FeatureNeutralizer (see module doc)."""
 
     def __init__(
@@ -400,7 +466,7 @@ class FeatureNeutralizer:
         order_col: str | Sequence[str] | None = None,
         keep_cols: Sequence[str] | None = None,
     ):
-        self.pred_names = [pred_name] if isinstance(pred_name, str) else list(pred_name)
+        super().__init__(pred_name, feature_names, suffix, era_col, order_col, keep_cols)
         self.proportions = (
             [proportion] if isinstance(proportion, (int, float)) else list(proportion)
         )
@@ -409,89 +475,30 @@ class FeatureNeutralizer:
         for p in self.proportions:
             if not 0.0 <= p <= 1.0:
                 raise ValueError(f"proportion should be in [0, 1]. Got {p}.")
-        self.feature_names = list(feature_names) if feature_names else None
-        self.suffix = suffix
-        self.era_col = era_col
-        self.order_col = (
-            [order_col] if isinstance(order_col, str) else list(order_col) if order_col else None
-        )
-        self.keep_cols = list(keep_cols) if keep_cols else []
         self._output_names = [
             f"{pn}_neutralized_{pr}_{suffix}" if suffix else f"{pn}_neutralized_{pr}"
             for pn in self.pred_names
             for pr in self.proportions
         ]
 
-    def get_feature_names_out(self) -> list[str]:
-        return list(self._output_names)
-
     def transform(self, df: DataFrame) -> DataFrame:
-        if self.era_col is None:
-            # reference fallback (neutralization.py:146-153): no era_series
-            # → single era, with the same warning; one task processes all
-            # rows (inference-sized frames only)
-            import pyspark.sql.functions as F
-
-            warnings.warn(
-                "era_col not provided. Treating all data as a single era. "
-                "This is fine for live inference (1 era) but may be "
-                "incorrect for training data with multiple eras.",
-                UserWarning,
-            )
-            self_era = "__era"
-            df = df.withColumn(self_era, F.lit(0))
-        else:
-            self_era = self.era_col
-        feats = self.feature_names or [
-            c
-            for c in df.columns
-            if c
-            not in set(self.pred_names + self.keep_cols + [self_era] + (self.order_col or []))
-        ]
-        preds, props = self.pred_names, self.proportions
-        era_col, order_col = self_era, self.order_col
+        narrow, era_col, feats, passthrough, schema = self._kernel_input(df)
+        preds, props, order_col = self.pred_names, self.proportions, self.order_col
         out_names = self._output_names
-        if order_col is None:
-            warnings.warn(
-                "order_col not set: ordinal tie-breaking in gaussianize will "
-                "depend on partition order and is not deterministic."
-            )
-
-        needed = list(
-            dict.fromkeys(
-                (order_col or [])
-                + self.keep_cols
-                + [era_col]
-                + preds
-                + feats
-            )
-        )
-        narrow = df.select(*needed)
-
-        passthrough = (order_col or []) + self.keep_cols + [era_col]
-        schema = StructType(
-            [narrow.schema[c] for c in dict.fromkeys(passthrough)]
-        )
-        for name in out_names:
-            schema = schema.add(name, "double")
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if order_col is not None:
-                pdf = pdf.sort_values(list(order_col), kind="stable")
+            if order_col:
+                pdf = pdf.sort_values(order_col, kind="stable")
             X = pdf[feats].to_numpy(dtype=np.float64)
-            out = {c: pdf[c] for c in dict.fromkeys(passthrough)}
+            out = {c: pdf[c] for c in passthrough}
+            names = iter(out_names)
             for pn in preds:
                 gauss = gaussianize(pdf[pn].to_numpy(dtype=np.float64))
                 coeffs, _, _, _ = np.linalg.lstsq(X, gauss, rcond=None)
                 exposure = X @ coeffs
                 for pr in props:
-                    name = (
-                        f"{pn}_neutralized_{pr}_{self.suffix}"
-                        if self.suffix
-                        else f"{pn}_neutralized_{pr}"
-                    )
                     neut = gauss - pr * exposure
-                    out[name] = neut / np.std(neut)
+                    out[next(names)] = neut / np.std(neut)
             return pd.DataFrame(out)
 
         raw = narrow.groupBy(era_col).applyInPandas(kernel, schema)

@@ -19,24 +19,31 @@ The reference itself accepts cross-framework slack (output correlation
 > 0.95, exposure ≤ cap + 0.01 — tests/test_penalizer_comparison.py:264,316),
 which is the parity bar for this kernel too.
 
-Spark plan: identical shape to FeatureNeutralizer — one
-``groupBy(era).applyInPandas`` (eras parallel across executors; the
-100k-iteration optimizer runs vectorized inside the task) + broadcast
-global min-max. One shuffle total.
+Spark plan: like FeatureNeutralizer's, but the kernel groups by an era
+BUCKET, ``pmod(hash(era), spark.sql.shuffle.partitions)``, instead of by
+era: one kernel call runs the Adamax loop for every era of its bucket
+at once (``reduce_exposure_factored``), so the loop's per-iteration
+Python overhead is paid once per bucket rather than once per era.
+Buckets run in parallel across executors. Two shuffles: the bucket
+hash-partition into the kernel and the exchange of the kernel output
+that both phases of the global min-max share (each era's kernel runs
+once per transform).
 """
 
 from __future__ import annotations
 
-import warnings
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
 
 from centimators_spark.functions.normal import gaussianize
-from centimators_spark.operators.neutralization import global_min_max_scale
+from centimators_spark.operators.neutralization import (
+    EraKernelTransformer,
+    global_min_max_scale,
+)
 
 
 def _normalize_cols(x: np.ndarray) -> np.ndarray:
@@ -106,67 +113,103 @@ def reduce_exposure_factored(
     lr: float = 1e-3,
     max_iters: int = 100_000,
     tol: float = 1e-7,
+    starts: Sequence[int] = (0,),
 ) -> np.ndarray:
-    """O(k²)-per-iteration reformulation of ``reduce_exposure``.
+    """O(k²)-per-iteration reformulation of ``reduce_exposure``, run for
+    a batch of eras at once: era i is rows ``starts[i]:starts[i+1]``
+    (the last era runs to the end), and each era is optimized on its own
+    rows exactly as a batch of one would be.
 
     Every per-iteration quantity reduces to k-dimensional algebra over
-    Gram-style reductions computed ONCE (n-dim work):
+    Gram-style reductions computed ONCE per era (n-dim work):
       e       = (x̂ᵀp − x̂ᵀF·w)/‖c‖          (x̂ᵀ1 = 0 kills the mean term)
       ‖c‖²    = pᵀp − 2(Fᵀp)ᵀw + wᵀ(FᵀF)w − n·μ(w)²
       ∇w      = −(x̂ᵀF)ᵀs/‖c‖ + (Fᵀc/‖c‖)·(eᵀs)/‖c‖
-    (mean-gradient terms vanish because x̂ and c are centered). The
-    optimizer trajectory matches the direct kernel up to float
-    accumulation; the reference's own parity bar (output corr > 0.95,
-    exposure ≤ cap + 0.01) is asserted in tests. Cost per era drops
-    from O(n·k·iters) to O(n·k) + O(k²·iters) — the difference between
-    the era kernel dominating the job and being free."""
-    feats = (np.asarray(features, dtype=np.float64) - 0.5)
+    (mean-gradient terms vanish because x̂ and c are centered). One
+    Adamax loop then steps every era that has not converged; an era
+    stops once its loss is below ``tol`` or ‖c‖² ≤ 0. The optimizer
+    trajectory matches the direct kernel up to float accumulation; the
+    reference's own parity bar (output corr > 0.95, exposure ≤ cap +
+    0.01) is asserted in tests. Cost drops from O(n·k·iters) per era to
+    O(n·k) per era + O(k²·iters) per batch, and the loop's Python
+    overhead is paid once per batch instead of once per era."""
+    feats = np.asarray(features, dtype=np.float64) - 0.5
     pred = np.asarray(prediction, dtype=np.float64)[:, None]
-    n, k = feats.shape
-
-    xhat = _normalize_cols(feats)
-    ones = np.ones((n, 1))
-    A = feats.T @ feats                    # k×k
-    fp = feats.T @ pred                    # k×1
-    f1 = feats.T @ ones                    # k×1
-    xf = xhat.T @ feats                    # k×k
-    xp = xhat.T @ pred                     # k×1
-    pp = (pred.T @ pred).item()
-    p1 = (ones.T @ pred).item()
-
-    target = np.clip(xp / np.linalg.norm(pred - pred.mean()), -max_exp, max_exp)
-    # note: initial exposures at w=0: e0 = xp / ||pred - mean||
+    edges = list(starts) + [len(pred)]
+    stats = []
+    for a, b in zip(edges[:-1], edges[1:]):
+        # fresh copies: BLAS rounding can depend on an operand's memory
+        # alignment, and a slice's alignment depends on the era's offset
+        # in the batch; a copy is allocated as a batch of one's arrays are
+        f, p = feats[a:b].copy(), pred[a:b].copy()
+        xhat = _normalize_cols(f)
+        ones = np.ones((b - a, 1))
+        xf = xhat.T @ f
+        stats.append((
+            f.T @ f,                        # A   = FᵀF
+            xf,                             # xf  = x̂ᵀF
+            xf.T,                           # xfT = Fᵀx̂ (stacked as a C-order copy)
+            (f.T @ p)[:, 0],                # fp  = Fᵀp
+            (f.T @ ones)[:, 0],             # f1  = Fᵀ1
+            (xhat.T @ p)[:, 0],             # xp  = x̂ᵀp
+            (p.T @ p).item(),               # pp
+            (ones.T @ p).item(),            # p1
+            float(b - a),                   # n
+            np.linalg.norm(p - p.mean()),   # ‖p − p̄‖
+        ))
+    A, xf, xfT, fp, f1, xp, pp, p1, n, pnorm = (np.array(z) for z in zip(*stats))
+    # initial exposures at w=0: e0 = xp / ‖pred − mean‖
+    target = np.clip(xp / pnorm[:, None], -max_exp, max_exp)
     relu = lambda a: np.maximum(a, 0.0)  # noqa: E731
     t_pos, t_neg = relu(target), relu(-target)
+    # every product in the loop is an elementwise multiply summed along
+    # the last axis — no BLAS call, whose rounding can depend on where an
+    # era's block sits in memory — so an era's trajectory is the same
+    # whichever eras share its batch
+    dot = lambda a, b: (a * b).sum(axis=-1)  # noqa: E731
+    mv = lambda M, v: (M * v[:, None, :]).sum(axis=-1)  # noqa: E731
 
     beta1, beta2, eps = 0.9, 0.999, 1e-7
-    w = np.zeros((k, 1))
-    m = np.zeros((k, 1))
-    u = np.zeros((k, 1))
-
+    W = np.zeros_like(fp)          # final weights of every era
+    live = np.arange(len(n))       # eras still stepping
+    w, m, u = W.copy(), W.copy(), W.copy()
     for t in range(1, max_iters + 1):
-        mu = (p1 - (f1.T @ w).item()) / n
-        c2 = pp - 2.0 * (fp.T @ w).item() + (w.T @ A @ w).item() - n * mu * mu
-        if c2 <= 0:
-            break
-        norm = np.sqrt(c2)
-        e = (xp - xf @ w) / norm
+        Aw = mv(A, w)
+        mu = (p1 - dot(f1, w)) / n
+        c2 = pp - 2.0 * dot(fp, w) + dot(w, Aw) - n * mu * mu
+        norm = np.sqrt(np.where(c2 > 0, c2, 1.0))[:, None]
+        e = (xp - mv(xf, w)) / norm
         pos_excess = relu(relu(e) - t_pos)
         neg_excess = relu(relu(-e) - t_neg)
-        loss = float(np.sum(pos_excess + neg_excess))
-        if loss < tol:
-            break
-        s = ((pos_excess > 0) * (e > 0) * 1.0 - (neg_excess > 0) * (-e > 0) * 1.0)
-        fyhat = (fp - A @ w - mu * f1) / norm      # Fᵀŷ
-        grads = -(xf.T @ s - fyhat * (e.T @ s).item()) / norm
+        done = (c2 <= 0) | ((pos_excess + neg_excess).sum(axis=-1) < tol)
+        if done.any():
+            W[live[done]] = w[done]
+            go = ~done
+            if not go.any():
+                break
+            live = live[go]
+            A, xf, xfT, fp, f1, xp, pp, p1, n, t_pos, t_neg = (
+                z[go] for z in (A, xf, xfT, fp, f1, xp, pp, p1, n, t_pos, t_neg)
+            )
+            w, m, u, Aw, mu, norm, e, pos_excess, neg_excess = (
+                z[go] for z in (w, m, u, Aw, mu, norm, e, pos_excess, neg_excess)
+            )
+        s = (pos_excess > 0) * (e > 0) * 1.0 - (neg_excess > 0) * (-e > 0) * 1.0
+        fyhat = (fp - Aw - mu[:, None] * f1) / norm      # Fᵀŷ
+        grads = -(mv(xfT, s) - fyhat * dot(e, s)[:, None]) / norm
         m = beta1 * m + (1 - beta1) * grads
         u = np.maximum(beta2 * u, np.abs(grads))
         w = w - lr * (m / (1 - beta1**t)) / (u + eps)
+    else:
+        W[live] = w
 
-    return np.asarray(pred - feats @ w).squeeze()
+    return np.concatenate([
+        pred[a:b, 0] - dot(feats[a:b], W[i])
+        for i, (a, b) in enumerate(zip(edges[:-1], edges[1:]))
+    ])
 
 
-class FeaturePenalizer:
+class FeaturePenalizer(EraKernelTransformer):
     """Spark port of the reference FeaturePenalizer (see module doc)."""
 
     def __init__(
@@ -182,101 +225,49 @@ class FeaturePenalizer:
         era_col: str | None = "era",
         order_col: str | Sequence[str] | None = None,
         keep_cols: Sequence[str] | None = None,
-        method: str = "factored",
     ):
-        if method not in ("factored", "direct"):
-            raise ValueError(f"method must be factored|direct, got {method}")
-        self.method = method
-        self.pred_names = [pred_name] if isinstance(pred_name, str) else list(pred_name)
+        super().__init__(pred_name, feature_names, suffix, era_col, order_col, keep_cols)
         self.max_exposures = (
             [max_exposure] if isinstance(max_exposure, (int, float)) else list(max_exposure)
         )
         for e in self.max_exposures:
             if not 0.0 <= e <= 1.0:
                 raise ValueError(f"max_exposure should be in [0, 1]. Got {e}.")
-        self.feature_names = list(feature_names) if feature_names else None
-        self.suffix = suffix
         self.lr, self.max_iters, self.tol = lr, max_iters, tol
-        self.era_col = era_col
-        self.order_col = (
-            [order_col] if isinstance(order_col, str) else list(order_col) if order_col else None
-        )
-        self.keep_cols = list(keep_cols) if keep_cols else []
         self._output_names = [
             f"{pn}_penalized_{ex}_{suffix}" if suffix else f"{pn}_penalized_{ex}"
             for pn in self.pred_names
             for ex in self.max_exposures
         ]
 
-    def get_feature_names_out(self) -> list[str]:
-        return list(self._output_names)
-
     def transform(self, df: DataFrame) -> DataFrame:
-        if self.era_col is None:
-            # reference fallback (neutralization.py:146-153): no era_series
-            # → single era, with the same warning; one task processes all
-            # rows (inference-sized frames only)
-            import pyspark.sql.functions as F
-
-            warnings.warn(
-                "era_col not provided. Treating all data as a single era. "
-                "This is fine for live inference (1 era) but may be "
-                "incorrect for training data with multiple eras.",
-                UserWarning,
-            )
-            self_era = "__era"
-            df = df.withColumn(self_era, F.lit(0))
-        else:
-            self_era = self.era_col
-        feats = self.feature_names or [
-            c
-            for c in df.columns
-            if c
-            not in set(self.pred_names + self.keep_cols + [self_era] + (self.order_col or []))
-        ]
-        preds, exps = self.pred_names, self.max_exposures
-        era_col, order_col = self_era, self.order_col
+        narrow, era_col, feats, passthrough, schema = self._kernel_input(df)
+        preds, exps, order_col = self.pred_names, self.max_exposures, self.order_col
         lr, max_iters, tol = self.lr, self.max_iters, self.tol
-        suffix = self.suffix
-        kernel_fn = (
-            reduce_exposure_factored if self.method == "factored" else reduce_exposure
-        )
         out_names = self._output_names
-        if order_col is None:
-            warnings.warn(
-                "order_col not set: ordinal tie-breaking in gaussianize will "
-                "depend on partition order and is not deterministic."
-            )
-
-        needed = list(
-            dict.fromkeys(
-                (order_col or [])
-                + self.keep_cols
-                + [era_col]
-                + preds
-                + feats
-            )
-        )
-        narrow = df.select(*needed)
-        passthrough = list(
-            dict.fromkeys((order_col or []) + self.keep_cols + [era_col])
-        )
-        schema = StructType([narrow.schema[c] for c in passthrough])
-        for name in out_names:
-            schema = schema.add(name, "double")
+        buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if order_col is not None:
-                pdf = pdf.sort_values(list(order_col), kind="stable")
+            # rows of one era contiguous, each era in order_col order
+            if order_col:
+                pdf = pdf.sort_values(order_col, kind="stable")
+            codes = pd.factorize(pdf[era_col], use_na_sentinel=False)[0]
+            idx = np.argsort(codes, kind="stable")
+            pdf, codes = pdf.iloc[idx], codes[idx]
+            starts = np.flatnonzero(np.diff(codes, prepend=-1))
+            per_era = lambda v: np.split(v, starts[1:])  # noqa: E731
             X = pdf[feats].to_numpy(dtype=np.float64)
             out = {c: pdf[c] for c in passthrough}
+            names = iter(out_names)
             for pn in preds:
-                gauss = gaussianize(pdf[pn].to_numpy(dtype=np.float64))
+                gauss = np.concatenate([
+                    gaussianize(p) for p in per_era(pdf[pn].to_numpy(dtype=np.float64))
+                ])
                 for ex in exps:
-                    name = f"{pn}_penalized_{ex}_{suffix}" if suffix else f"{pn}_penalized_{ex}"
-                    pen = kernel_fn(gauss, X, ex, lr, max_iters, tol)
-                    out[name] = pen / np.std(pen)
+                    pen = reduce_exposure_factored(gauss, X, ex, lr, max_iters, tol, starts)
+                    out[next(names)] = np.concatenate([p / np.std(p) for p in per_era(pen)])
             return pd.DataFrame(out)
 
-        raw = narrow.groupBy(era_col).applyInPandas(kernel, schema)
+        bucket = F.pmod(F.hash(F.col(era_col)), F.lit(buckets))
+        raw = narrow.groupBy(bucket).applyInPandas(kernel, schema)
         return global_min_max_scale(raw, out_names)

@@ -6,6 +6,8 @@ Scale notes (100 TB design):
   data in columnar Arrow batches, not pickled rows.
 - shuffle.partitions defaults to 2x cores locally; on a real cluster this
   is overridden (or left to AQE's coalescing from a high initial value).
+- Local cores and driver heap fit the host (``host_defaults``) unless
+  ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` say otherwise.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-independent.
 """
@@ -17,6 +19,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults() -> tuple[str, str]:
+    """(local cores, driver heap) for ``get_spark``: ``SPARK_GRAFT_CPUS``
+    and ``SPARK_DRIVER_MEMORY`` when set, else the CPUs this process may
+    run on and half the host's physical RAM, at least 1g and at most
+    32g. In local mode the driver JVM hosts every executor thread, so a
+    heap larger than the host gets the JVM killed, not slowed."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(32, max(1, ram_gb // 2))}g"
+    return cpus, heap
+
+
 def get_spark(
     app_name: str = "centimators-spark",
     cpus: int | str | None = None,
@@ -24,7 +38,8 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with engine defaults applied."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus, heap = host_defaults()
+    cpus = cpus or host_cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -46,10 +61,9 @@ def get_spark(
         # probe side for filters like "orders of BUILDING customers"
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode: the driver JVM hosts all 32 executor threads plus
-        # storage (checkpoint blocks, broadcasts) — 16g showed full-GC
-        # stalls across long multi-query sessions; the box has 128 GiB
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # local mode: the driver JVM hosts every executor thread plus
+        # storage (checkpoint blocks, broadcasts)
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -66,7 +80,7 @@ def cluster_conf(
 ) -> dict[str, str]:
     """The conf dict this engine is DESIGNED for at cluster scale —
     pass to ``get_spark(extra_conf=cluster_conf())`` on a real cluster
-    (the local[32] defaults above are the test profile). Every choice
+    (the host-sized local defaults above are the test profile). Every choice
     is the one the operators assume:
 
     - shuffle.partitions sized so a full-input shuffle lands

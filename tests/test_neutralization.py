@@ -4,6 +4,7 @@ penalizer exposure-cap checks (test_penalizer_comparison.py:250-338).
 """
 
 import math
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -336,3 +337,160 @@ def test_full_expr_neutralizer_matches_kernel(spark):
     )
     assert np.corrcoef(expr_out, kernel_out)[0, 1] > 0.999999
     np.testing.assert_allclose(expr_out, kernel_out, atol=2e-4)
+
+
+def _per_era_factored(prediction, features, max_exp, lr=1e-3, max_iters=100_000, tol=1e-7):
+    """One era's factored Adamax loop, written out per era as the
+    specification the batched optimizer must reproduce."""
+    from centimators_spark.operators.penalization import _normalize_cols
+
+    feats = np.asarray(features, dtype=np.float64) - 0.5
+    pred = np.asarray(prediction, dtype=np.float64)[:, None]
+    n, k = feats.shape
+    xhat = _normalize_cols(feats)
+    ones = np.ones((n, 1))
+    A, fp, f1 = feats.T @ feats, feats.T @ pred, feats.T @ ones
+    xf, xp = xhat.T @ feats, xhat.T @ pred
+    pp, p1 = (pred.T @ pred).item(), (ones.T @ pred).item()
+    target = np.clip(xp / np.linalg.norm(pred - pred.mean()), -max_exp, max_exp)
+    t_pos, t_neg = np.maximum(target, 0.0), np.maximum(-target, 0.0)
+    w, m, u = np.zeros((k, 1)), np.zeros((k, 1)), np.zeros((k, 1))
+    for t in range(1, max_iters + 1):
+        mu = (p1 - (f1.T @ w).item()) / n
+        c2 = pp - 2.0 * (fp.T @ w).item() + (w.T @ A @ w).item() - n * mu * mu
+        if c2 <= 0:
+            break
+        norm = np.sqrt(c2)
+        e = (xp - xf @ w) / norm
+        pos = np.maximum(np.maximum(e, 0.0) - t_pos, 0.0)
+        neg = np.maximum(np.maximum(-e, 0.0) - t_neg, 0.0)
+        if float(np.sum(pos + neg)) < tol:
+            break
+        s = (pos > 0) * (e > 0) * 1.0 - (neg > 0) * (-e > 0) * 1.0
+        fyhat = (fp - A @ w - mu * f1) / norm
+        grads = -(xf.T @ s - fyhat * (e.T @ s).item()) / norm
+        m = 0.9 * m + 0.1 * grads
+        u = np.maximum(0.999 * u, np.abs(grads))
+        w = w - lr * (m / (1 - 0.9**t)) / (u + 1e-7)
+    return (pred - feats @ w)[:, 0], t
+
+
+def _unequal_eras(seed=5, sizes=(60, 150, 97, 230, 41), k=6):
+    """Eras of unequal size; the era at index 3 gets a prediction with
+    the features regressed out, so its exposures start within 0.1."""
+    rng = np.random.RandomState(seed)
+    weights = np.array([0.5, -0.4, 0.3, 0.0, 0.0, 0.0])
+    X, P = [], []
+    for i, n in enumerate(sizes):
+        x = rng.randn(n, k)
+        noise = rng.randn(n)
+        if i == 3:
+            xc = x - x.mean(axis=0)
+            p = noise - xc @ np.linalg.lstsq(xc, noise, rcond=None)[0]
+        else:
+            p = x @ weights + 0.1 * noise
+        X.append(x)
+        P.append(gaussianize(p))
+    return X, P
+
+
+def test_batched_adamax_matches_per_era_loop():
+    """All eras in one optimizer call == each era's own loop (≤1e-12),
+    an era already within the cap stops at t=1 untouched, a single era
+    is a batch of one, and an era's result does not depend on which
+    eras share its batch."""
+    from centimators_spark.operators.penalization import reduce_exposure_factored
+
+    X, P = _unequal_eras()
+    starts = np.cumsum([0] + [len(p) for p in P[:-1]])
+    got = reduce_exposure_factored(np.concatenate(P), np.vstack(X), 0.1, starts=starts)
+    iters = []
+    for i, part in enumerate(np.split(got, starts[1:])):
+        ref, t = _per_era_factored(P[i], X[i], 0.1)
+        iters.append(t)
+        np.testing.assert_allclose(part, ref, rtol=0, atol=1e-12)
+        alone = reduce_exposure_factored(P[i], X[i], 0.1)
+        np.testing.assert_allclose(part, alone, rtol=0, atol=1e-12)
+    fe = (X[3] - 0.5).astype(np.float32)
+    assert np.abs(exposures(fe, P[3][:, None].astype(np.float32))).max() < 0.1
+    assert iters[3] == 1
+    np.testing.assert_array_equal(np.split(got, starts[1:])[3], P[3])
+    assert min(iters[:3] + iters[4:]) > 1
+
+
+@pytest.mark.parametrize("era_col", ["era", None])
+def test_penalizer_transform_matches_per_era_loop(spark, era_col):
+    """The Spark transform (era buckets, or the single-era fallback) ==
+    per-era gaussianize → per-era loop → per-era std → global min-max."""
+    X, P = _unequal_eras()
+    feats = [f"feature{i}" for i in range(X[0].shape[1])]
+    pdf = pd.DataFrame(np.vstack(X), columns=feats)
+    pdf["prediction"] = np.concatenate(P)
+    pdf["era"] = np.repeat(np.arange(len(P)), [len(p) for p in P])
+    pdf["rid"] = np.arange(len(pdf))
+    t = FeaturePenalizer(
+        0.1, "prediction", feats, era_col=era_col, order_col="rid", keep_cols=["rid"],
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)
+        got = t.transform(spark.createDataFrame(pdf)).toPandas().sort_values("rid")
+    eras = [np.ones(len(pdf), bool)] if era_col is None else [
+        (pdf.era == e).to_numpy() for e in range(len(P))
+    ]
+    pen = np.empty(len(pdf))
+    for m in eras:
+        g = gaussianize(pdf.loc[m, "prediction"].to_numpy())
+        v, _ = _per_era_factored(g, pdf.loc[m, feats].to_numpy(), 0.1)
+        pen[m] = v / np.std(v)
+    expected = (pen - pen.min()) / (pen.max() - pen.min())
+    np.testing.assert_allclose(
+        got["prediction_penalized_0.1"].to_numpy(), expected, rtol=0, atol=1e-12
+    )
+
+
+def _kernel_transformers():
+    from centimators_spark.operators import neutralization, penalization
+
+    kw = dict(feature_names=FEATS, era_col="era", order_col="rid", keep_cols=["rid"])
+    return [
+        (neutralization, FeatureNeutralizer(0.5, "prediction", **kw), "prediction_neutralized_0.5"),
+        (penalization, FeaturePenalizer(0.1, "prediction", **kw), "prediction_penalized_0.1"),
+    ]
+
+
+@pytest.mark.parametrize("which", [0, 1], ids=["neutralizer", "penalizer"])
+@pytest.mark.parametrize("downstream", ["direct", "select"])
+def test_era_kernel_runs_once_per_era(spark, era_df, monkeypatch, which, downstream):
+    """An accumulator counts the kernel's per-era gaussianize calls on
+    the executors: one per era per transform, also under a downstream
+    projection — the global min-max's two phases share one exchange
+    of the kernel output instead of running the kernel twice."""
+    module, t, out_col = _kernel_transformers()[which]
+    acc = spark.sparkContext.accumulator(0)
+    real = module.gaussianize
+
+    def counted(values):
+        acc.add(1)
+        return real(values)
+
+    monkeypatch.setattr(module, "gaussianize", counted)
+    out = t.transform(era_df)
+    if downstream == "select":
+        out = out.select("rid", f"`{out_col}`")
+    assert out.count() == 100
+    assert acc.value == era_df.select("era").distinct().count() == 5
+
+
+@pytest.mark.parametrize("which", [0, 1], ids=["neutralizer", "penalizer"])
+def test_era_kernel_plan_reuses_exchange(spark, era_df, which):
+    """The executed plan holds the Python kernel once and reads its
+    output a second time through a ReusedExchange — no cache, no
+    checkpoint."""
+    _, t, _ = _kernel_transformers()[which]
+    out = t.transform(era_df)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in plan
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "InMemoryRelation" not in plan and "Scan ExistingRDD" not in plan

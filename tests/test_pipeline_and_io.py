@@ -279,3 +279,26 @@ def test_cluster_conf_profile():
     ):
         assert c[k] == "true"
     assert c["spark.sql.session.timeZone"] == "UTC"
+
+
+def test_host_defaults_fit_host_and_env_overrides(monkeypatch):
+    """Unset environment → cores from the CPU affinity mask and half the
+    physical RAM as heap, clamped to [1g, 32g]; the environment wins."""
+    from centimators_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    pages = {"SC_PAGE_SIZE": 4096}
+
+    def sysconf(name):
+        return pages[name]
+
+    monkeypatch.setattr(session.os, "sysconf", sysconf)
+    for ram_gb, heap in ((15, "7g"), (128, "32g"), (1, "1g")):
+        pages["SC_PHYS_PAGES"] = ram_gb * 2**30 // 4096
+        assert session.host_defaults() == ("3", heap)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert session.host_defaults() == ("5", "2g")

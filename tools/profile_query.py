@@ -67,8 +67,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("profile", cpus=cpus)
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     registry = entrymod.queries()
     try:
