@@ -206,13 +206,12 @@ def q_neutralizer_full_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, "l_extendedprice", era_col="era", order_col=ORDER
     ).withColumn("y6", F.round(F.col("l_extendedprice_gauss") * 1e6))
     # the OLS stage's consumers re-read their input several times
-    # (Gram aggregation + residual join + std/min-max recompute under
-    # materialize="none"); the gaussianize window is the one expensive
+    # (Gram aggregation + residual join + std/min-max recompute
+    # without a cut); the gaussianize window is the one expensive
     # lineage here — cut it ONCE, narrowed to what the OLS needs.
     # localCheckpoint measured both fastest AND stable under repeated
-    # in-session runs (1.6-1.9s at sf0.1 vs 2-14s for persist/none,
-    # whose cached copies churn storage memory across reruns); at
-    # cluster scale swap for .persist() + downstream unpersist
+    # in-session runs (1.6-1.9s at sf0.1 vs 2-14s for persist or no
+    # cut, whose cached copies churn storage memory across reruns)
     g = g.select(*KEYS, "era", "q", "d100", "t100", "y6").localCheckpoint(
         eager=True
     )
@@ -460,9 +459,7 @@ def _panel_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_panel_features(
-    spark: SparkSession, sf_dir: str, materialize: str = "localCheckpoint"
-) -> DataFrame:
+def q_panel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed training-prep flagship — per-era OLS neutralization →
     global robust z-score → decile binning → deterministic hash split,
     as ONE lazy plan whose oracle nests the individually-verified stage
@@ -471,12 +468,8 @@ def q_panel_features(
     the END-TO-END pipeline is bit-exact — the composability property
     a training platform actually needs.
 
-    ``materialize`` is passed to the OLS stage
-    (:func:`era_ols_neutralize`), which cuts its multi-consumer
-    residual frame with it: localCheckpoint is fastest/stablest on
-    local[n]; on a cluster pass "persist" so the lineage cut is
-    storage-evictable rather than pinned to executor-local block
-    files."""
+    The OLS stage (:func:`era_ols_neutralize`) cuts its multi-consumer
+    residual frame with one eager localCheckpoint."""
     from centimators_spark.operators.encoding import quantile_bin
     from centimators_spark.operators.neutralization import era_ols_neutralize
     from centimators_spark.operators.stats import robust_zscore
@@ -485,7 +478,7 @@ def q_panel_features(
     n = era_ols_neutralize(
         _panel_inputs(spark, sf_dir),
         "e100", ["q", "d100", "t100"], era_col="era", proportion=0.5,
-        keep_cols=KEYS, materialize=materialize,
+        keep_cols=KEYS, materialize="localCheckpoint",
     )
     rz = robust_zscore(n, ["neutralized"], exact=True, consistency=RZ_C)
     qb = quantile_bin(rz, ["neutralized"], n_bins=10, exact=True)

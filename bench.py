@@ -47,6 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 CHUNK = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "24"))
 _CHILD_MARK = "##BENCH_CHUNK_RESULT## "
+_PREPASS_MARK = "##BENCH_PREPASS_FAILED## "
 
 # The one-pass resampling family's 33-66 decimal aggregation buffers
 # are bimodal under heap pressure from the theta/HLL sketch-algebra
@@ -157,8 +158,9 @@ def plan_rerun_chunks(names: list[str]) -> list[list[str]]:
     return chunks
 
 
-def run_queries(names: list[str]) -> dict[str, float]:
-    """Time the given queries in THIS process's SparkSession."""
+def run_queries(names: list[str]) -> tuple[dict[str, float], list[str]]:
+    """Time the given queries in THIS process's SparkSession. Returns
+    the timings and the names whose untimed pre-pass raised."""
     from centimators_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -173,14 +175,17 @@ def run_queries(names: list[str]) -> dict[str, float]:
     # first ~6 queries of a fresh JVM reading ~1.36x vs ~1.07x for the
     # rest — common-infrastructure JIT (parquet reader, shuffle, codegen
     # scaffolding) that a single per-query warm run does not absorb.
-    # The pre-pass moves that cost outside every timing window.
+    # The pre-pass moves that cost outside every timing window. A
+    # failure here must not stop the timing pass, but it is reported.
+    prepass_failed = []
     for name in names:
         try:
             registry[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:  # noqa: BLE001 — pre-pass must never kill timing
-            pass
+        except Exception as e:  # noqa: BLE001 — reported, timing goes on
+            prepass_failed.append(name)
+            sys.stderr.write(f"pre-pass {name} raised {e!r}\n")
         spark.catalog.clearCache()
     gc.collect()
     spark.sparkContext._jvm.System.gc()
@@ -215,7 +220,7 @@ def run_queries(names: list[str]) -> dict[str, float]:
         gc.collect()
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
-    return timings
+    return timings, prepass_failed
 
 
 def main():
@@ -223,15 +228,17 @@ def main():
     sf = sf_dir.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    if "--chunk-names" in sys.argv:  # child: time a subset, emit one line
+    if "--chunk-names" in sys.argv:  # child: time a subset, emit two lines
         names = sys.argv[sys.argv.index("--chunk-names") + 1].split(",")
-        timings = run_queries(names)
+        timings, prepass_failed = run_queries(names)
+        print(_PREPASS_MARK + json.dumps(prepass_failed), flush=True)
         print(_CHILD_MARK + json.dumps(timings), flush=True)
         return
 
     import __spark_entry__ as entrymod
 
     all_names = list(entrymod.queries())
+    prepass_failed: list[str] = []
 
     def _run_child_chunk(chunk: list[str]) -> dict[str, float] | None:
         out = subprocess.run(
@@ -246,6 +253,8 @@ def main():
         for line in out.stdout.splitlines():
             if line.startswith(_CHILD_MARK):
                 got = json.loads(line[len(_CHILD_MARK):])
+            elif line.startswith(_PREPASS_MARK):
+                prepass_failed.extend(json.loads(line[len(_PREPASS_MARK):]))
         if got is None:  # chunk crashed: report, then fail the run
             sys.stderr.write(
                 f"chunk FAILED ({chunk[:3]}...)\n{out.stderr[-2000:]}\n"
@@ -253,7 +262,7 @@ def main():
         return got
 
     if "--single-session" in sys.argv:
-        timings = run_queries(all_names)
+        timings, prepass_failed = run_queries(all_names)
     else:
         # the resampling family's decimal aggs get their own fresh JVM
         # (r11 verdict item 4) — pulled out BEFORE chunk boundaries are cut
@@ -283,6 +292,7 @@ def main():
 
     total = round(sum(timings.values()), 3)
     missing = [n for n in all_names if n not in timings]
+    prepass_failed = sorted(set(prepass_failed))
 
     # verification queries (hash-contract twins whose cost is dominated
     # by the oracle side — brute-force recall baselines, kernel-vs-twin
@@ -316,6 +326,7 @@ def main():
         "subtotals": subtotals,
         "reruns": reruns,
         "missing": missing,
+        "prepass_failed": prepass_failed,
     }
     # append this run to the trailing-min history the guard reads
     try:
@@ -348,6 +359,7 @@ def main():
                 "n_queries": len(timings),
                 "subtotals": subtotals,
                 "missing": missing,
+                "prepass_failed": prepass_failed,
                 "detail": "BENCH_DETAIL.json",
             }
         )

@@ -28,7 +28,6 @@ def funnel(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    broadcast_stages: bool = True,
     within_seconds: int | None = None,
 ) -> DataFrame:
     """Ordered-funnel progression: for each user, the earliest time of
@@ -47,10 +46,8 @@ def funnel(
     Plan: one scan + k tiny conditional-min aggregations per stage,
     each broadcast back — the event table shuffles once per stage on
     the user key (at scale: pre-bucket the table by user and all k
-    aggregations are shuffle-free). broadcast_stages=True broadcasts
-    each stage's per-user aggregate — right when the stage-0 cohort is
-    dimension-sized; for hundreds of millions of users pass False and
-    let AQE plan the stage joins."""
+    aggregations are shuffle-free). Each stage's per-user aggregate is
+    broadcast, which assumes the stage-0 cohort is dimension-sized."""
     if len(stages) < 2:
         raise ValueError("funnel needs >= 2 stages")
     ev = events.select(
@@ -71,12 +68,7 @@ def funnel(
             )
         nxt = (
             ev.where(F.col("et") == stage)
-            .join(
-                F.broadcast(cur.select("user_id", f"t_{i-1}"))
-                if broadcast_stages
-                else cur.select("user_id", f"t_{i-1}"),
-                "user_id",
-            )
+            .join(F.broadcast(cur.select("user_id", f"t_{i-1}")), "user_id")
             .where(cond)
             .groupBy("user_id")
             .agg(F.min("ts").alias(f"t_{i}"))

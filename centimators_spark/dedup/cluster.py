@@ -22,7 +22,6 @@ def connected_components(
     a: str = "d1",
     b: str = "d2",
     driver_edge_cap: int = 5_000_000,
-    materialize: str = "localCheckpoint",
 ) -> DataFrame:
     """(node, cluster) for every node in `pairs`; cluster = min node id
     of its component.
@@ -35,39 +34,20 @@ def connected_components(
     Larger edge sets take the distributed min-label-propagation fixpoint
     (O(component diameter) rounds of hash-partitioned joins).
 
-    ``materialize``: how the EDGE LIST is pinned — 'localCheckpoint'
-    (fastest single-node; driver-disk blocks), 'persist' (cluster-scale:
-    executor blocks; the final labels frame stays cached for the
-    caller), or 'none' (re-run the lineage — only sane for cheap
-    ``pairs`` plans). The fixpoint's per-round labels always checkpoint
-    regardless: each round references the previous labels twice, so an
-    unpinned loop doubles the logical plan per round."""
-    if materialize not in ("localCheckpoint", "persist", "none"):
-        raise ValueError(
-            f"materialize must be localCheckpoint|persist|none, got {materialize!r}"
-        )
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if materialize == "localCheckpoint":
-            return df.localCheckpoint(eager=True)
-        if materialize == "persist":
-            df = df.persist()
-            df.count()
-            return df
-        return df
-
-    # materialize the edge list once — the fixpoint loop re-reads it every
+    The edge list and the fixpoint's per-round labels are cut with an
+    eager localCheckpoint: the loop re-reads the edge list every round,
+    and each round references the previous labels twice, so an unpinned
+    loop doubles the logical plan per round."""
+    # pin the edge list once — the fixpoint loop re-reads it every
     # round and `pairs` is usually an expensive lazy plan (LSH + verify)
-    edges = _pin(
+    edges = (
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     if driver_edge_cap and edges.count() <= driver_edge_cap:
-        out = _driver_union_find(edges)
-        if materialize == "persist":
-            edges.unpersist()
-        return out
+        return _driver_union_find(edges)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "cluster", F.col("node")
     )
@@ -88,18 +68,12 @@ def connected_components(
             )
         )
         prev_labels = labels
-        # per-round labels ALWAYS pin: `updated` references `labels`
-        # twice, so an unpinned fixpoint doubles the logical plan every
-        # round (exponential Catalyst blow-up) — materialize='none'
-        # governs the edge list only. Pin BEFORE the change count (r13
-        # optimization): the count and the next round are two
-        # consumers, and counting the unpinned frame re-ran the whole
-        # round subtree a second time.
-        labels = (
-            updated.localCheckpoint(eager=True)
-            if materialize != "persist"
-            else _pin(updated)
-        )
+        # `updated` references `labels` twice, so an unpinned fixpoint
+        # doubles the logical plan every round (exponential Catalyst
+        # blow-up). Pin BEFORE the change count (r13 optimization): the
+        # count and the next round are two consumers, and counting the
+        # unpinned frame re-ran the whole round subtree a second time.
+        labels = updated.localCheckpoint(eager=True)
         changed = (
             labels.alias("u")
             .join(prev_labels.alias("l"), "node")
@@ -107,8 +81,6 @@ def connected_components(
             .limit(1)
             .count()
         )
-        if materialize == "persist":
-            prev_labels.unpersist()
         if changed == 0:
             converged = True
             break
@@ -119,10 +91,6 @@ def connected_components(
             "the returned cluster labels are NOT a fixpoint; raise max_iter",
             RuntimeWarning,
         )
-    if materialize == "persist":
-        # labels is fully materialized (counted); its blocks no longer
-        # need the edge list
-        edges.unpersist()
     return labels
 
 

@@ -28,6 +28,9 @@ def _gram_sets(df: DataFrame, content_col: str, id_col: str, n: int) -> DataFram
 
 
 DEFAULT_DF_CAP = 1000
+# largest df_cap whose per-gram C(df_cap, 2) pair array the map-side
+# explode builds as one row; larger caps take the postings self-join
+EXPLODE_DF_CAP = DEFAULT_DF_CAP
 
 
 def gram_inverted_index(
@@ -98,11 +101,7 @@ def ngram_jaccard_pairs(
     # of double rounding — the final `jaccard >= t` filter stays the
     # authoritative test.
     t_num = int(math.floor(threshold * 10**6))
-    shared = (
-        _shared_gram_pair_counts(invn, t_num)
-        if df_cap is not None
-        else _shared_gram_pair_counts_join(invn, t_num)
-    )
+    shared = _pair_counts(invn, t_num, df_cap)
     jac = F.col("c").cast("double") / (F.col("n1") + F.col("n2") - F.col("c"))
     return (
         shared.select("d1", "d2", jac.alias("jaccard"))
@@ -129,6 +128,17 @@ def _capped_index(
     return inv
 
 
+def _pair_counts(
+    invn: DataFrame, length_t_num: int | None, df_cap: int | None
+) -> DataFrame:
+    """Shared-gram pair counts: the map-side explode when ``df_cap``
+    bounds each gram's postings to at most EXPLODE_DF_CAP docs, the
+    postings self-join otherwise."""
+    if df_cap is not None and df_cap <= EXPLODE_DF_CAP:
+        return _shared_gram_pair_counts(invn, length_t_num)
+    return _shared_gram_pair_counts_join(invn, length_t_num)
+
+
 def _shared_gram_pair_counts(
     invn: DataFrame, length_t_num: int | None
 ) -> DataFrame:
@@ -152,14 +162,15 @@ def _shared_gram_pair_counts(
     (min·10⁶ ≥ t_num·max), applied pair-local in the SAME map stage
     the explode runs in — exactly as pre-shuffle as the join's WHERE.
 
-    ONLY for capped postings (df_cap bounds the per-gram list): the
+    ONLY for postings capped at EXPLODE_DF_CAP docs per gram: the
     nested transform+slice is interpreted (no codegen) and the
     flatten materializes a gram's ENTIRE C(m,2) pair array as one
-    row before the explode — bounded and cheap when df_cap caps m,
-    but a single-row memory spike on an uncapped heavy gram, where
-    the codegen self-join streams the same pairs. Uncapped
-    (df_cap=None) callers therefore keep the join
-    (:func:`_shared_gram_pair_counts_join`); measured:
+    row before the explode — bounded and cheap when a small df_cap
+    caps m, but a single-row memory spike on an uncapped (or loosely
+    capped) heavy gram, where the codegen self-join streams the same
+    pairs. Those callers therefore take the join
+    (:func:`_shared_gram_pair_counts_join`, chosen by
+    :func:`_pair_counts`); measured:
     blocking_quality's uncapped truth pass regressed 5.8 → 8.6 s
     under the explode before this gate.
     """
@@ -205,8 +216,9 @@ def _shared_gram_pair_counts_join(
     invn: DataFrame, length_t_num: int | None
 ) -> DataFrame:
     """Self-join form of :func:`_shared_gram_pair_counts` — the
-    uncapped-postings path (see its docstring): codegen'd equi-join on
-    the gram, O(m²) per heavy gram, identical pair multiset."""
+    uncapped (or loosely capped) postings path (see its docstring):
+    codegen'd equi-join on the gram, O(m²) per heavy gram, identical
+    pair multiset."""
     cond = F.col("a.doc_id") < F.col("b.doc_id")
     if length_t_num is not None:
         cond = cond & (
@@ -252,11 +264,7 @@ def ngram_containment_pairs(
     inv = _capped_index(df, content_col, id_col, n, df_cap, inv)
     sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     invn = inv.join(F.broadcast(sizes), "doc_id")
-    sized = (
-        _shared_gram_pair_counts(invn, None)
-        if df_cap is not None
-        else _shared_gram_pair_counts_join(invn, None)
-    )
+    sized = _pair_counts(invn, None, df_cap)
     # BOTH directions ride one explode over the pair-count rows: the
     # old fwd/rev UNION fed `sized` to two lazy consumers, so the
     # whole gram join + aggregation subtree ran TWICE in one plan

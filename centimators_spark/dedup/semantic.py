@@ -137,8 +137,7 @@ def semantic_dedup(
       and ~100× cheaper per pair than expression evaluation inside a
       join residual (the 10x sweep measured 71s for 3.8M interpreted
       pair-cosines vs seconds in numpy); ``"expr"`` keeps the pure
-      Column-expression join as the semantic reference, exactly the
-      embedding_cosine_pairs blocked/expr split.
+      Column-expression join as the semantic reference.
     """
     base = df.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")

@@ -26,9 +26,10 @@ mass decays to the base term, the "remove dangling mass" variant.
 At 100 TB: the rank table is n_nodes rows (tiny next to edges); the
 per-iteration shuffle is the edge join keyed on src — pre-partition or
 bucket the edge list by src once and every iteration reuses that
-layout. ``materialize`` cuts the lineage per iteration (default
-``none`` composes one lazy plan — right for small iteration counts;
-use ``localCheckpoint``/``persist`` for deep loops).
+layout. The edge list, the node list and each iteration's rank table
+are cut with an eager ``localCheckpoint``, so every iteration reads
+fixed blocks instead of replaying the upstream plan, and no block
+outlives the returned frame's lineage in Spark's CacheManager.
 """
 
 from __future__ import annotations
@@ -45,36 +46,24 @@ def pagerank_int(
     iters: int = 3,
     scale: int = 10**9,
     damping_pct: int = 85,
-    materialize: str = "auto",
 ) -> DataFrame:
     """PageRank in exact BIGINT micro-units. Returns (node, rank_int)
     after ``iters`` damped iterations; Σ rank_int ≈ scale (minus
-    integer-floor and dangling leakage). materialize: "auto" (default)
-    cuts the edge/node lineage once via localCheckpoint and each
-    iteration's rank table too; "persist"/"localCheckpoint" control
-    the per-iteration cut explicitly; "none" composes one lazy plan."""
+    integer-floor and dangling leakage). Every iteration re-reads the
+    edge and node lists, so both are cut once with an eager
+    localCheckpoint (without a cut each re-read replays the full
+    upstream plan), and so is each iteration's rank table."""
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0,100], got {damping_pct}")
-    if materialize not in ("auto", "none", "localCheckpoint", "persist"):
-        raise ValueError(f"bad materialize {materialize!r}")
     e = edges.select(
         F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
-    )
-    if materialize == "auto":
-        # every iteration re-reads edges/nodes — without a lineage cut
-        # each re-read replays the FULL upstream plan (scan + distinct
-        # shuffle) per iteration; persist them once (measured fastest:
-        # 2.5s vs 3.2s lazy vs 4.6s localCheckpoint at sf0.1). The
-        # cached blocks outlive this call — long-lived sessions should
-        # clearCache() or persist an upstream frame they hold.
-        e = e.persist()
+    ).localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize == "auto":
-        nodes = nodes.persist()
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank_int", F.lit(0).cast("long"))
@@ -108,12 +97,7 @@ def pagerank_int(
                     f"({damping_pct} * coalesce(__s, 0L)) DIV 100"
                 )
             ).alias("rank_int"),
-        )
-        if materialize == "localCheckpoint":
-            r = r.localCheckpoint(eager=True)
-        elif materialize in ("persist", "auto"):
-            r = r.persist()
-            r.count()
+        ).localCheckpoint(eager=True)
     return r
 
 
@@ -195,8 +179,8 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .distinct()
         # the canonical edge set feeds FIVE consumers (degree union ×2,
         # wedge sides ×2, closing set, edge count); cut the lineage
-        # once — the same persisted-edge-list discipline pagerank_int
-        # documents. At cluster scale, write the canonical edges as a
+        # once — the same checkpointed-edge-list discipline as
+        # pagerank_int. At cluster scale, write the canonical edges as a
         # bucketed table instead.
         .localCheckpoint(eager=True)
     )

@@ -41,7 +41,6 @@ def target_encode(
     loo: bool = False,
     out_col: str | None = None,
     round_dp: int = 6,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Append ``out_col`` = smoothed mean target per category:
 
@@ -63,11 +62,9 @@ def target_encode(
 
     Plan: one grouped aggregation per scope (category stats; the era
     prior rides the same shuffle via a second tiny aggregation) joined
-    back. broadcast_stats=True (default) broadcasts the statistics so
-    the fact table never shuffles — right whenever |categories × eras|
-    is dimension-sized. For genuinely high-cardinality keys (user ids
-    at 100 TB) pass False and let AQE plan the stats join; the prior is
-    always broadcast (one row per era).
+    back. The statistics and the prior (one row per era) are broadcast,
+    so the fact table never shuffles — which assumes
+    |categories × eras| is dimension-sized.
     """
     out = out_col or f"{cat_col}_te"
     keys = [era_col] if era_col else []
@@ -85,12 +82,10 @@ def target_encode(
             F.sum("__yq").alias("__st"), F.count(F.lit(1)).alias("__nt")
         )
     )
-    if broadcast_stats:
-        cat_stats = F.broadcast(cat_stats)
     # NULL-SAFE equality: a NULL category (or era) forms its own group
     # in the aggregation, and its rows must re-attach — a plain equi
     # join would silently DROP every null-keyed row from the output
-    stat_side = cat_stats.select(
+    stat_side = F.broadcast(cat_stats).select(
         *[F.col(c).alias(f"__r_{c}") for c in keys + [cat_col]],
         "__s",
         "__n",
@@ -184,7 +179,6 @@ def woe_encode(
     smoothing: float = 0.5,
     out_col: str | None = None,
     round_dp: int = 6,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Append ``out_col`` = Weight of Evidence of the category against
     a binary label — the classification sibling of :func:`target_encode`
@@ -203,8 +197,8 @@ def woe_encode(
 
     Plan: one grouped count aggregation + broadcast join back (the
     global totals ride a second tiny aggregation) — the fact table
-    never shuffles when ``broadcast_stats`` (default; pass False for
-    genuinely high-cardinality keys and let AQE plan it)."""
+    never shuffles, which assumes the category count is
+    dimension-sized."""
     out = out_col or f"{cat_col}_woe"
     y = F.when(F.col(label_col).cast("boolean"), 1).otherwise(0)
     base = df.withColumn("__y", y)
@@ -216,9 +210,7 @@ def woe_encode(
         F.sum("__y").alias("__post"),
         F.sum(F.lit(1) - F.col("__y")).alias("__negt"),
     )
-    if broadcast_stats:
-        cat_stats = F.broadcast(cat_stats)
-    stat_side = cat_stats.select(
+    stat_side = F.broadcast(cat_stats).select(
         F.col(cat_col).alias("__r_cat"), "__pos", "__neg"
     )
     j = base.join(

@@ -43,13 +43,9 @@ from pyspark.sql.types import StructType
 from centimators_spark.functions.normal import gaussianize, ordinal_uniform
 
 
-# promoted to the shared centimators_spark.scanstats module (round-11
-# advice: bootstrap/relational callers imported an underscore-private
-# helper across modules); the old private names stay importable here
-# so history-pinned callers keep working
-from centimators_spark.scanstats import (  # noqa: F401
-    estimated_scan_partitions as _estimated_scan_partitions,
-    local_input_bytes as _local_input_bytes,
+from centimators_spark.scanstats import (
+    estimated_scan_partitions,
+    local_input_bytes,
 )
 
 
@@ -241,7 +237,15 @@ def era_ols_neutralize(
     DECIMAL(38,0) Gram sums are exact under any partition order; the
     k×k solve is the fixed-term-order Cramer expression (ml/cramer.py);
     residuals are rounded to ``round_dp`` decimals and standardized via
-    exact decimal sums."""
+    exact decimal sums.
+
+    ``materialize``: "localCheckpoint" always cuts the residual frame
+    with an eager localCheckpoint; "auto" (default) cuts it only when
+    the input is under-partitioned and at least _MATERIALIZE_BYTES."""
+    if materialize not in ("auto", "localCheckpoint"):
+        raise ValueError(
+            f"materialize must be auto|localCheckpoint, got {materialize!r}"
+        )
     feats = list(feature_names)
     k = len(feats)
     if k > 5:
@@ -266,32 +270,26 @@ def era_ols_neutralize(
     # df.rdd.getNumPartitions(), which forces a DataFrame→RDD conversion
     # (an extra plan materialization) on every call.
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    est = _estimated_scan_partitions(base)
+    est = estimated_scan_partitions(base)
     gated = est is not None and est < parallelism
+    # the residual lineage feeds multiple consumers (era std, global
+    # min-max, output projection). When the repartition gate fires the
+    # lineage contains an explicit shuffle, and re-executing it per
+    # consumer measured 54s at 10x data (6M rows) vs 15s with one
+    # localCheckpoint cut. Checkpoint blocks are per-instance and
+    # ContextCleaner-freed, so a later rebuild of the same query never
+    # reads this run's blocks. On a well-partitioned cluster scan (gate
+    # off) the lineage is a pruned scan + broadcast join, and
+    # re-scanning into map-side-partial aggs beats materializing the
+    # residual table. Even when the gate fires, a SMALL input
+    # (< _MATERIALIZE_BYTES) re-executes cheaper than it checkpoints —
+    # the deterministic key already collapses the consumers onto one
+    # reused exchange.
     if materialize == "auto":
-        # the residual lineage feeds multiple consumers (era std,
-        # global min-max, output projection). When the repartition gate
-        # fires the lineage contains an explicit shuffle, and
-        # re-executing it per consumer measured 54s at 10x data
-        # (6M rows) vs 15s with one localCheckpoint cut and 7s with
-        # persist. localCheckpoint is the auto choice, not persist:
-        # persisted plans are matched by CANONICALIZED plan in the
-        # CacheManager, so a later rebuild of the same query would
-        # silently read the first run's cache (stale-looking bench
-        # numbers, blocks never freed), while checkpoint blocks are
-        # per-instance and ContextCleaner-freed (same reasoning as
-        # q_quantile_bin's outer cut). On a well-partitioned cluster
-        # scan (gate off) the lineage is a pruned scan + broadcast
-        # join, and re-scanning into map-side-partial aggs beats
-        # materializing the residual table — the original "none"
-        # rationale, now scoped to where it measured true. Round-7
-        # refinement: even when the gate fires, a SMALL input
-        # (< _MATERIALIZE_BYTES) re-executes cheaper than it
-        # checkpoints — the deterministic key already collapses the
-        # consumers onto one reused exchange.
-        nbytes = _local_input_bytes(df)
-        big = nbytes is None or nbytes >= _MATERIALIZE_BYTES
-        materialize = "localCheckpoint" if (gated and big) else "none"
+        nbytes = local_input_bytes(df)
+        cut = gated and (nbytes is None or nbytes >= _MATERIALIZE_BYTES)
+    else:
+        cut = True
     if gated:
         # hash on a DETERMINISTIC synthetic key (xxhash64 of the whole
         # projected row): round-robin repartition(n) local-sorts every
@@ -320,30 +318,11 @@ def era_ols_neutralize(
         .withColumn("neut", F.expr(fr["neut"]))
         .select(*keep, era_col, "neut")
     )
-    # Multiple consumers read the residuals (era std, global min-max,
-    # the output projection). "none" recomputes the lineage per
-    # consumer — right when the lineage is a pruned scan + broadcast
-    # join; "persist" materializes once — right when the lineage holds
-    # a shuffle or an expensive upstream stage. The "auto" default
-    # picks per the repartition gate above. Every stage is
-    # deterministic (exact decimal sums, fixed-order Cramer, rounded
-    # residuals), so all consumers see identical values either way.
-    if materialize == "localCheckpoint":
-        # single-node lineage cut via driver-local blocks
+    # every stage is deterministic (exact decimal sums, fixed-order
+    # Cramer, rounded residuals), so all consumers see identical values
+    # whether or not the residuals are cut
+    if cut:
         r = r.localCheckpoint(eager=True)
-    elif materialize == "persist":
-        # cluster-scale choice: executor-memory/disk blocks, no driver
-        # disk. The cached blocks outlive this call (the returned plan
-        # still reads them) — callers managing a long session should
-        # unpersist via spark.catalog.clearCache() or persist an
-        # upstream frame they hold a handle to.
-        r = r.persist()
-        r.count()
-    elif materialize != "none":
-        raise ValueError(
-            "materialize must be auto|localCheckpoint|persist|none, "
-            f"got {materialize!r}"
-        )
     stats = r.groupBy(era_col).agg(
         F.count(F.lit(1)).alias("n"),
         F.expr(f"sum({fr['ni_spark']})").alias("s1"),

@@ -44,7 +44,7 @@ def interval_join(
     bucket_width: float,
     keys: Sequence[str] = (),
     how: str = "inner",
-    broadcast_intervals: bool | None = None,
+    broadcast_intervals: bool = False,
     validate_bounds: bool = True,
 ) -> DataFrame:
     """All (point, interval) matches with ``lo <= point < hi`` (and
@@ -55,10 +55,10 @@ def interval_join(
     null interval columns. Overlapping intervals are fully supported —
     bucketing only generates candidates, the exact predicate decides.
 
-    broadcast_intervals: force (True) or forbid (False) a broadcast of
-    the exploded interval side; default None lets AQE decide from
-    stats. Set True for dimension-sized interval tables so the point
-    side never shuffles.
+    broadcast_intervals=True hints a broadcast of the exploded interval
+    side — set it for dimension-sized interval tables so the point side
+    never shuffles. False (default) adds no hint: AQE still broadcasts
+    the side when its runtime size falls under the broadcast threshold.
 
     validate_bounds=True (default) runs ONE tiny eager job over the
     interval side at plan-construction time to reject NULL bounds (a

@@ -22,6 +22,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# rows per block of embedding_cosine_pairs' block-pair grid
+_PAIR_BLOCK_ROWS = 2048
+
+
 def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Σ a[i]·b[i]. With ``dim`` known, a flat left-associated add
     chain — plain arithmetic inside whole-stage codegen, and exactly
@@ -96,14 +100,6 @@ def brute_force_topk(
     )
 
 
-def _unit(col: Column) -> Column:
-    """Pre-normalize to unit length so the pair scan is a single dot
-    product (3x less per-pair work than cosine; same bits — each
-    element divides by the same IEEE-exact norm)."""
-    n = _norm(col)
-    return F.transform(col, lambda x: x / n)
-
-
 def _seq_norms(m: np.ndarray) -> np.ndarray:
     """Row norms accumulated dimension-by-dimension — vectorized across
     rows yet bit-identical to a scalar left-to-right sum (and therefore
@@ -128,48 +124,25 @@ def embedding_cosine_pairs(
     threshold: float = 0.5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "blocked",
-    block_rows: int = 2048,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """All pairs (i < j) with cosine ≥ threshold — EXACT.
 
-    method='blocked' (default): block-pair partitioned scan. Rows hash
-    deterministically into B ≈ n/block_rows blocks; every unordered
-    block pair (p ≤ q) becomes one applyInPandas group whose numpy
-    kernel scores the p-rows against the q-rows, accumulating
-    dimension-by-dimension (bit-identical to the scalar left-to-right
-    oracle). Fully distributed: no driver materialization, no broadcast
-    of the vector table; shuffle volume is B·n rows and per-task memory
-    is O(block_rows·d). Compute is inherently O(n²) — that is what
+    Block-pair partitioned scan: rows hash deterministically into
+    B ≈ n/_PAIR_BLOCK_ROWS blocks; every unordered block pair (p ≤ q)
+    becomes one applyInPandas group whose numpy kernel scores the
+    p-rows against the q-rows, accumulating dimension-by-dimension
+    (bit-identical to the scalar left-to-right oracle). Fully
+    distributed: no driver materialization, no broadcast of the vector
+    table; shuffle volume is B·n rows and per-task memory is
+    O(_PAIR_BLOCK_ROWS·d). Compute is inherently O(n²) — that is what
     "exact all pairs" costs; at corpus scale use rp_lsh_topk buckets or
-    MinHash-style candidate generation instead and exact-verify.
-
-    method='expr': pure Column-expression crossJoin scan (no Python),
-    kept as the semantic reference."""
-    if method == "expr":
-        a = vectors.select(
-            F.col(id_col).alias("i"), _unit(_as_double(F.col(vec_col))).alias("va")
-        )
-        b = vectors.select(
-            F.col(id_col).alias("j"), _unit(_as_double(F.col(vec_col))).alias("vb")
-        )
-        return (
-            a.crossJoin(b)
-            .where(F.col("i") < F.col("j"))
-            .select("i", "j", _dot(F.col("va"), F.col("vb")).alias("cos"))
-            .where(F.col("cos") >= threshold)
-        )
-
+    MinHash-style candidate generation instead and exact-verify."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     narrow = vectors.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-    if n_blocks is None:
-        # one cheap scalar job to size the grid (count only, no data moves)
-        n = narrow.count()
-        n_blocks = max(1, -(-n // block_rows))
-    B = int(n_blocks)
+    # one cheap scalar job to size the grid (count only, no data moves)
+    B = max(1, -(-narrow.count() // _PAIR_BLOCK_ROWS))
 
     withb = narrow.withColumn("b", F.pmod(F.xxhash64(F.col("i")), F.lit(B)))
     # replicate each row into every block-pair task it participates in:

@@ -77,17 +77,22 @@ def test_anomaly_flags_spike(spark):
 
 
 def test_funnel_unbroadcast_path_matches(spark):
-    from centimators_spark.analytics import funnel
-
+    """The broadcast stage joins give the hand-computed chain (user 2
+    clicks before viewing, so the click does not count) and leave no
+    persisted plan behind."""
     rows = [
         (1, "view", _ts(1)), (1, "click", _ts(2)), (1, "purchase", _ts(3)),
         (2, "view", _ts(2)), (2, "click", _ts(1)),
     ]
     df = spark.createDataFrame(rows, "user_id long, event_type string, ts timestamp")
-    a = sorted(tuple(r) for r in funnel(df, ["view", "click"]).collect())
-    b = sorted(tuple(r) for r in funnel(
-        df, ["view", "click"], broadcast_stages=False).collect())
-    assert a == b
+    spark.catalog.clearCache()
+    got = sorted(tuple(r) for r in funnel(df, ["view", "click"]).collect())
+    epoch = {
+        d: spark.range(1).select(F.unix_timestamp(F.lit(_ts(d)))).first()[0]
+        for d in (1, 2)
+    }
+    assert got == [(1, epoch[1], epoch[2], 2), (2, epoch[2], None, 1)]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_scd2_intervals_hand_computed(spark):

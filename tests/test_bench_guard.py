@@ -163,3 +163,45 @@ def test_main_fails_loudly_on_lost_chunk(tmp_path, monkeypatch, capsys):
     assert crashed and full["missing"] == crashed == last["missing"]
     assert full["n_queries"] == n_all - len(crashed)
     assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text()) == full
+
+
+def test_prepass_failure_is_reported(spark, tmp_path, monkeypatch, capsys):
+    """A query whose untimed pre-pass raises is still timed, and its
+    name reaches both JSON lines under "prepass_failed" instead of
+    being swallowed. The registry holds two trivial queries; the
+    chunk child runs in-process through the real run_queries."""
+    import subprocess
+
+    import __spark_entry__ as entrymod
+
+    calls = {"flaky": 0}
+
+    def flaky(spark_, sf_dir):
+        calls["flaky"] += 1
+        if calls["flaky"] == 1:  # the pre-pass is the first build
+            raise RuntimeError("pre-pass only")
+        return spark_.range(2)
+
+    registry = {"ok": lambda spark_, sf_dir: spark_.range(3), "flaky": flaky}
+    monkeypatch.setattr(entrymod, "queries", lambda: registry)
+    monkeypatch.setattr(
+        bench, "_repo_file", lambda name: str(tmp_path / name)
+    )
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+
+    def fake_run(cmd, **kwargs):
+        names = cmd[cmd.index("--chunk-names") + 1].split(",")
+        timings, failed = bench.run_queries(names)
+        out = (
+            bench._PREPASS_MARK + json.dumps(failed) + "\n"
+            + bench._CHILD_MARK + json.dumps(timings) + "\n"
+        )
+        return subprocess.CompletedProcess(cmd, 0, out, "")
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    bench.main()
+    lines = capsys.readouterr().out.strip().splitlines()
+    full, last = json.loads(lines[-2]), json.loads(lines[-1])
+    assert sorted(full["queries"]) == ["flaky", "ok"]
+    assert full["missing"] == [] == last["missing"]
+    assert full["prepass_failed"] == ["flaky"] == last["prepass_failed"]

@@ -221,6 +221,36 @@ def test_pair_count_explode_matches_join(spark, docs):
         assert a == b and len(a) > 0
 
 
+def test_df_cap_above_explode_limit_takes_join(spark, docs):
+    """A df_cap above EXPLODE_DF_CAP no longer bounds each gram's
+    C(m, 2) pair array enough to build it as one row: both pair
+    operators plan the postings self-join instead (no Generate over the
+    flattened pair array) and return the same pairs as at the limit."""
+    from centimators_spark.dedup.jaccard import (
+        EXPLODE_DF_CAP,
+        ngram_containment_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    def pair_explodes(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return [
+            ln for ln in plan.splitlines()
+            if "Generate" in ln and "flatten" in ln
+        ]
+
+    for op, kw in (
+        (ngram_jaccard_pairs, {"threshold": 0.5}),
+        (ngram_containment_pairs, {"threshold": 0.8}),
+    ):
+        at = op(docs, df_cap=EXPLODE_DF_CAP, **kw)
+        above = op(docs, df_cap=EXPLODE_DF_CAP + 1, **kw)
+        assert pair_explodes(at), op.__name__
+        assert not pair_explodes(above), op.__name__
+        want = sorted(map(tuple, at.collect()))
+        assert want and sorted(map(tuple, above.collect())) == want
+
+
 def test_containment_direction_explode_matches_union(spark, docs):
     """r13 optimization pin: the fused two-direction explode in
     ngram_containment_pairs equals the old fwd/rev union — built here
@@ -351,29 +381,23 @@ def test_event_percentiles_approx_close_to_exact(spark):
 
 
 def test_connected_components_persist_mode(spark):
-    """materialize='persist' must produce identical labels to the
-    default localCheckpoint path (and a bad value must raise)."""
+    """The distributed fixpoint (the branch that pins per-round labels)
+    labels every node with its component's minimum id and leaves no
+    persisted plan in Spark's CacheManager: every cut is an eager
+    localCheckpoint."""
     from centimators_spark.dedup.cluster import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "d1 long, d2 long"
     )
-    # driver_edge_cap=0 forces the distributed fixpoint (the branch that
-    # pins per-round labels)
-    a = {
+    spark.catalog.clearCache()
+    # driver_edge_cap=0 forces the distributed fixpoint
+    labels = {
         (r.node, r.cluster)
         for r in connected_components(pairs, driver_edge_cap=0).collect()
     }
-    b = {
-        (r.node, r.cluster)
-        for r in connected_components(
-            pairs, driver_edge_cap=0, materialize="persist"
-        ).collect()
-    }
-    assert a == b == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-
-    with pytest.raises(ValueError, match="materialize"):
-        connected_components(pairs, materialize="bogus")
+    assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_normalize_text(spark):

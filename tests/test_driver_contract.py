@@ -138,20 +138,28 @@ def test_compare_flags_int_float_dtype_mismatch():
 
 
 def test_panel_features_materialize_param(spark):
-    """The flagship's contract form honors the same materialize=
-    surface as its stages — identical rows under every mode (the
-    cluster profile is one argument away from the local default)."""
+    """The flagship's contract form cuts its OLS residuals with one
+    eager localCheckpoint: it matches the DuckDB oracle, leaves no
+    persisted plan in Spark's CacheManager, and takes no cut option."""
+    import pathlib
+    import sys
+
     import pytest
 
-    base = entrymod.q_panel_features(spark, SF).toPandas()
-    cols = sorted(base.columns)
-    base = base[cols].sort_values(cols).reset_index(drop=True)
-    for mode in ("none", "persist"):
-        alt = entrymod.q_panel_features(spark, SF, materialize=mode).toPandas()
-        alt = alt[cols].sort_values(cols).reset_index(drop=True)
-        assert alt.equals(base), mode
-    with pytest.raises(ValueError):
-        entrymod.q_panel_features(spark, SF, materialize="bogus")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import compare
+
+    spark.catalog.clearCache()
+    got = entrymod.q_panel_features(spark, SF).toPandas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{SF}/lineitem.parquet')"
+    )
+    want = con.execute(entrymod.oracle_sql()["panel_features"]).fetchdf()
+    assert compare("panel_features", got, want)
+    with pytest.raises(TypeError):
+        entrymod.q_panel_features(spark, SF, materialize="persist")
 
 
 def test_correctness_window_covers_unverified_queries():
