@@ -1,8 +1,17 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship 4-stage panel pipeline on sf0.001.
-``queries()`` — one entry per implemented operator (SURVEY.md §2).
-``oracle_sql()`` — DuckDB-equivalent SQL for each query key.
+``queries()`` — one literal dict of every declared query, written in
+the driver's order (its first 50 entries are the driver's correctness
+window). Builders live in this file and in
+``centimators_spark.plans.{relational,datapipe}_queries``.
+``oracle_sql()`` — one literal dict of DuckDB-equivalent SQL for every
+query key except the four rows-only kernels; it spreads the plans
+modules' own ``oracle_sql()`` dicts, which compose oracles from one
+another.
+``staged_queries()`` / ``staged_oracle_sql()`` — queries gate-checked
+locally (``tools/check_oracle.py --staged``) but not declared to the
+driver.
 
 Panel mapping for the reference's financial-panel semantics onto the
 driver's TPC-H-ish tables: ticker → l_suppkey, date → l_shipdate,
@@ -1433,67 +1442,45 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declared contract queries, ordered for the driver's correctness
-    pass (which checks a 50-entry window from the top): the 11 queries
-    never driver-verified — the 10 promoted round-13 staged queries
-    plus the new NULL-order-key gate contract (event_paths_nullts) —
-    sit first; the rest of the window is the oldest-verified rotation
-    (the 17-query r8-era remainder + the full 11-query r9-era pool +
-    all 11 r10-era promotions — 11 + 17 + 11 + 11 = 50), and the
-    overflow tail is entirely previously-driver-green (guard:
-    tests/test_driver_contract.py::test_correctness_window_covers_unverified_queries).
+    """Declared contract queries, in the driver's order.
 
-    ROTATION LEDGER (r10 verdict item 6 — oldest never-re-checked
-    greens, by last-verified round; schedule from the top). After the
-    round-13 window (17 r8-era + 11 r9-era + 11 r10-era re-verified —
-    every r6..r10-era green now re-checked r12 or r13), the oldest
-    pool is:
-      r11-era promotions (23, round-14 head; last checked
-        CORRECTNESS_r11): image_phash_dedup, theta_intersections,
-        audio_fingerprint_dedup, video_phash_dedup, l_diversity,
-        multimodal_corpus_clean, theta_a_not_b, order_priority_counts,
-        forecast_revenue, t_closeness, isotonic_calibration,
-        winnowing_overlap, duplicated_spans, changepoint,
-        benford_audit, hll_portable, hll_union, bootstrap_ci,
-        mann_whitney, sprt_audit, brown_forsythe, bootstrap_signed,
-        mwu_signed;
-      r12-era promotions (7, round 14/15; last checked
-        CORRECTNESS_r12): duplicated_spans_multi,
-        sq8_clustered_contract, dsir_select, bottomk_quantiles,
-        sign_permutation, training_split_audit, bootstrap_nullkey;
-      then the r12-window rotation re-checks (record_linkage,
-        session_window, table_diff, z_order_key + the r7-era pool,
-        last checked CORRECTNESS_r12) — freshest, rotate last.
-
-    Playbook: stage new queries in staged_queries(), gate them with
-    `check_oracle --staged` at sf0.001+0.01+0.1, then promote into
-    this head and fill the window from the ledger above."""
-    out = {
-        # --- promoted round-13 staged queries (10; gate-green at
-        # sf0.001 + sf0.01 + sf0.1 locally AND judge-re-verified 10/10
-        # in the r12 verdict; never driver-checked — verdict r12
-        # item 1) ---
-        **_r13_promoted(),
-        # --- new this round: NULL ORDER-KEY gate contract (verdict
-        # r12 item 2a — make the cross-engine NULL-ordering parity
-        # class the r12 self-review caught DRIVER-gate-visible: every
-        # 11th ts NULLed, so NULL order keys flow through the
-        # lead-window ordering each round) ---
+    The driver's correctness pass checks the first 50 entries, so the
+    order is part of the contract: a query no driver run has verified
+    yet belongs inside that window, and only queries a previous run
+    verified may sit past it
+    (tests/test_driver_contract.py::test_correctness_window_covers_unverified_queries).
+    The four kernels without an oracle (feature_neutralizer,
+    feature_penalizer, dim_reducer_pca, ann_rp_lsh) are checked for
+    rows only."""
+    return {
+        "dsir_budget_select": q_dsir_budget_select,
+        "join_skew_audit": q_join_skew_audit,
+        "theil_sen_trend": q_theil_sen_trend,
+        "mann_kendall": q_mann_kendall,
+        "cdc_apply": q_cdc_apply,
+        "event_paths": q_event_paths,
+        "fdr_audit": q_fdr_audit,
+        "purged_kfold": q_purged_kfold,
+        "join_size_estimate": q_join_size_estimate,
+        "timed_funnel": q_timed_funnel,
         "event_paths_nullts": q_event_paths_nullts,
-        # --- promoted round-12 staged queries (driver-green r12,
-        # CORRECTNESS_r12 50/50 all-hash-green) ---
-        **_r12_staged(),
-        # --- NULL-resampling-KEY gate contract (driver-green r12) ---
-        "bootstrap_nullkey": q_bootstrap_nullkey,
-        # --- promoted round-11 staged queries (driver-green r11,
-        # CORRECTNESS_r11 50/50 all-hash-green) ---
-        **_r11_staged(),
-        # --- signed/NULL gate contracts (driver-green r11) ---
-        "bootstrap_signed": q_bootstrap_signed,
-        "mwu_signed": q_mwu_signed,
-        # --- promoted round-10 staged queries (driver-green r10) ---
-        **_r10_staged(),
-        # --- promoted round-9 staged queries (driver-green r9) ---
+        "feature_corr_matrix": q_feature_corr_matrix,
+        "golden_record": q_golden_record,
+        "hybrid_rrf_search": q_hybrid_rrf_search,
+        "ic_decay": q_ic_decay,
+        "kcore_dupgraph": q_kcore_dupgraph,
+        "kmeans_embeddings": q_kmeans_embeddings,
+        "knn_classify": q_knn_classify,
+        "large_volume_customers": relational_queries.q_large_volume_customers,
+        "linear_interpolate": q_linear_interpolate,
+        "naive_bayes": q_naive_bayes,
+        "negative_sample": q_negative_sample,
+        "pareto_front": q_pareto_front,
+        "seasonal_decompose": q_seasonal_decompose,
+        "signal_backtest": q_signal_backtest,
+        "topk_turnover": q_topk_turnover,
+        "vector_pipeline": q_vector_pipeline,
+        "xicor_by_month": q_xicor_by_month,
         "top_supplier": relational_queries.q_top_supplier,
         "small_lot_revenue": relational_queries.q_small_lot_revenue,
         "volume_dominant_supplier": (
@@ -1507,33 +1494,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "label_propagation": q_label_propagation,
         "blocking_quality": datapipe_queries.q_blocking_quality,
         "weighted_quantiles": q_weighted_quantiles,
-        # --- promoted round-8 staged queries (driver-green r8) ---
-        "customer_distribution": relational_queries.q_customer_distribution,
-        "large_volume_customers": (
-            relational_queries.q_large_volume_customers
+        "cms_heavy_hitters": q_cms_heavy_hitters,
+        "bigram_lm": q_bigram_lm,
+        "k_anonymity": q_k_anonymity,
+        "bpe_encode": q_bpe_encode,
+        "bpe_train_rounds": q_bpe_train_rounds,
+        "boosted_stumps": q_boosted_stumps,
+        "mmr_rerank": q_mmr_rerank,
+        "dedup_clusters_star": q_dedup_clusters_star,
+        "nation_profit": relational_queries.q_nation_profit,
+        "shipmode_priority": relational_queries.q_shipmode_priority,
+        "filtered_supplier_counts": (
+            relational_queries.q_filtered_supplier_counts
         ),
+        # ---- end of the driver's 50-entry correctness window
+        "duplicated_spans_multi": q_duplicated_spans_multi,
+        "sq8_clustered_contract": datapipe_queries.q_sq8_clustered_contract,
+        "dsir_select": q_dsir_select,
+        "bottomk_quantiles": q_bottomk_quantiles,
+        "sign_permutation": q_sign_permutation,
+        "training_split_audit": q_training_split_audit,
+        "bootstrap_nullkey": q_bootstrap_nullkey,
+        "image_phash_dedup": q_image_phash_dedup,
+        "theta_intersections": q_theta_intersections,
+        "audio_fingerprint_dedup": q_audio_fingerprint_dedup,
+        "video_phash_dedup": q_video_phash_dedup,
+        "l_diversity": q_l_diversity,
+        "multimodal_corpus_clean": q_multimodal_corpus_clean,
+        "theta_a_not_b": q_theta_a_not_b,
+        "order_priority_counts": q_order_priority_counts,
+        "forecast_revenue": q_forecast_revenue,
+        "t_closeness": q_t_closeness,
+        "isotonic_calibration": q_isotonic_calibration,
+        "winnowing_overlap": q_winnowing_overlap,
+        "duplicated_spans": q_duplicated_spans,
+        "changepoint": q_changepoint,
+        "benford_audit": q_benford_audit,
+        "hll_portable": q_hll_portable,
+        "hll_union": q_hll_union,
+        "bootstrap_ci": q_bootstrap_ci,
+        "mann_whitney": q_mann_whitney,
+        "sprt_audit": q_sprt,
+        "brown_forsythe": q_brown_forsythe,
+        "bootstrap_signed": q_bootstrap_signed,
+        "mwu_signed": q_mwu_signed,
+        "customer_distribution": relational_queries.q_customer_distribution,
         "disjunctive_revenue": relational_queries.q_disjunctive_revenue,
-        "hybrid_rrf_search": q_hybrid_rrf_search,
         "budget_select": q_budget_select,
         "containment_pairs": q_containment_pairs,
         "best_split": q_best_split,
-        "topk_turnover": q_topk_turnover,
-        "ic_decay": q_ic_decay,
-        "negative_sample": q_negative_sample,
-        "linear_interpolate": q_linear_interpolate,
-        "pareto_front": q_pareto_front,
-        "feature_corr_matrix": q_feature_corr_matrix,
-        "seasonal_decompose": q_seasonal_decompose,
-        "xicor_by_month": q_xicor_by_month,
-        "naive_bayes": q_naive_bayes,
-        "kcore_dupgraph": q_kcore_dupgraph,
-        "signal_backtest": q_signal_backtest,
-        "kmeans_embeddings": q_kmeans_embeddings,
-        "knn_classify": q_knn_classify,
         "chi2_independence": q_chi2_independence,
-        "golden_record": q_golden_record,
-        "vector_pipeline": q_vector_pipeline,
-        # --- promoted round-7 staged queries (driver-green r7) ---
         "dspymator_contract": q_dspymator_contract,
         "max_drawdown": q_max_drawdown,
         "ks_statistic": q_ks_statistic,
@@ -1545,35 +1555,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "supplier_return_blame": q_supplier_return_blame,
         "span_dedup": q_span_dedup,
         "quality_classifier": q_quality_classifier,
-        # --- promoted round-6 staged queries (locally 6/6 gate-green at
-        # sf0.001 + sf0.01 via tests/test_staged_queries.py; driver-green
-        # r6) ---
         "isotonic_contract": q_isotonic_contract,
         "cheapest_supplier": q_cheapest_supplier,
         "approx_distinct_contract": q_approx_distinct_contract,
         "rake_keywords": q_rake_keywords,
         "active_time": q_active_time,
         "weighted_median": q_weighted_median,
-        # default (float) LinearRegressor path pinned by its OLS
-        # orthogonality invariant — the bench entry the round-5 verdict
-        # asked for (item 3): tracks the production fit's cost separately
-        # from the decimal `linear_regression` oracle query
         "linreg_fast_contract": relational_queries.q_linreg_fast_contract,
-        # IVF-PQ with REAL cell pruning (n_probe=1 of 8) on the derived
-        # clustered fixture — round-5 verdict item 7
-        "ivfpq_pruned_contract": datapipe_queries.QUERIES[
-            "ivfpq_pruned_contract"
-        ],
-        # --- regression re-verification (round-6): core round-1/2
-        # operators last driver-checked in r2 whose files kept evolving
-        # (_frame_median, RollingAgg additions) — rotated back through
-        # the window as a drift guard, below the never-verified head ---
+        "ivfpq_pruned_contract": datapipe_queries.q_ivfpq_pruned_contract,
         "rank_transformer": q_rank_transformer,
         "lag_transformer": q_lag_transformer,
         "moving_average": q_moving_average,
         "group_stats": q_group_stats,
         "gaussianize_probit": q_gaussianize_probit,
-        # --- promoted round-4 staged queries (driver-green r5) ---
         "promo_revenue": relational_queries.q_promo_revenue,
         "supplier_counts": relational_queries.q_supplier_counts,
         "psi_categorical": q_psi_categorical,
@@ -1584,14 +1578,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rolling_rank": q_rolling_rank,
         "group_kfold": q_group_kfold,
         "fuzzy_name_pairs": q_fuzzy_name_pairs,
-        # --- new this round: recall contracts for the compressed-index
-        # ANN paths (mirror ann_rp_lsh_recall's hash-verified recall@k) ---
-        "pq_recall_contract": datapipe_queries.QUERIES["pq_recall_contract"],
-        "ivfpq_recall_contract": datapipe_queries.QUERIES[
-            "ivfpq_recall_contract"
-        ],
-        # sketch-path PSI pinned to the exact oracle (the default
-        # boundary mode flipped to approx_percentile this round)
+        "pq_recall_contract": datapipe_queries.q_pq_recall_contract,
+        "ivfpq_recall_contract": datapipe_queries.q_ivfpq_recall_contract,
         "psi_sketch_contract": q_psi_sketch_contract,
         "bloom_semi_join": q_bloom_semi_join,
         "frequent_itemsets": q_frequent_itemsets,
@@ -1610,8 +1598,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "logloss_calibration": q_logloss_calibration,
         "table_diff": q_table_diff,
         "session_window": q_session_window,
-        # --- round-3 promotions, driver-green r4 (rotate toward tail
-        # naturally as the head grows) ---
         "melt_lineitem": q_melt_lineitem,
         "weighted_sample": q_weighted_sample,
         "conformal_quantiles": q_conformal_quantiles,
@@ -1623,7 +1609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rank_ensemble": q_rank_ensemble,
         "table_profile": q_table_profile,
         "validate_orders": q_validate_orders,
-        # --- new this round ---
         "penalizer_contract": q_penalizer_contract,
         "neutralizer_kernel_contract": q_neutralizer_kernel_contract,
         "pca_kernel_contract": q_pca_kernel_contract,
@@ -1637,15 +1622,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "calendar_features": q_calendar_features,
         "forward_returns": q_forward_returns,
         "era_weights": q_era_weights,
-        # --- round-3 greens (window re-verification is harmless) ---
         "session_ids": q_session_ids,
-        **relational_queries.QUERIES,
+        "era_report": relational_queries.q_era_report,
+        "autocorrelation": relational_queries.q_autocorrelation,
+        "one_hot_segments": relational_queries.q_one_hot_segments,
+        "grouping_sets_revenue": relational_queries.q_grouping_sets_revenue,
+        "window_navigation": relational_queries.q_window_navigation,
+        "interval_band_join": relational_queries.q_interval_band_join,
+        "events_interval_join": relational_queries.q_events_interval_join,
+        "event_funnel": relational_queries.q_event_funnel,
+        "retention_cohorts": relational_queries.q_retention_cohorts,
+        "above_avg_orders": relational_queries.q_above_avg_orders,
+        "range_frame_sums": relational_queries.q_range_frame_sums,
+        "cube_revenue": relational_queries.q_cube_revenue,
+        "string_agg_segment": relational_queries.q_string_agg_segment,
+        "pivot_revenue": relational_queries.q_pivot_revenue,
+        "distinct_counts": relational_queries.q_distinct_counts,
+        "volume_shipping": relational_queries.q_volume_shipping,
+        "large_orders": relational_queries.q_large_orders,
+        "salted_join": relational_queries.q_salted_join,
+        "events_sessionize": relational_queries.q_events_sessionize,
+        "events_json_extract": relational_queries.q_events_json_extract,
+        "top_orders_per_segment": relational_queries.q_top_orders_per_segment,
+        "shipping_priority": relational_queries.q_shipping_priority,
+        "regional_revenue": relational_queries.q_regional_revenue,
         "log_return": q_log_return,
-        "pricing_summary": q_pricing_summary,
-        "feature_neutralizer": q_feature_neutralizer,
-        "feature_penalizer": q_feature_penalizer,
-        "neutralize_ols_era": q_neutralize_ols_era,
-        "rolling_aggregates": q_rolling_aggregates,
         "rolling_corr_ewma": q_rolling_corr_ewma,
         "winsorize_by_era": q_winsorize_by_era,
         "robust_zscore": q_robust_zscore,
@@ -1657,118 +1658,62 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neutralizer_full_expr": q_neutralizer_full_expr,
         "feature_exposures": q_feature_exposures,
         "pca_project_expr": q_pca_project_expr,
+        "doc_chunks": datapipe_queries.q_doc_chunks,
+        "char_entropy": datapipe_queries.q_char_entropy,
+        "token_positions": datapipe_queries.q_token_positions,
+        "unigram_lm": datapipe_queries.q_unigram_lm,
+        "text_normalize": datapipe_queries.q_text_normalize,
+        "url_dedup": datapipe_queries.q_url_dedup,
+        "stratified_sample": datapipe_queries.q_stratified_sample,
+        "feature_hash": datapipe_queries.q_feature_hash,
+        "semantic_dedup": datapipe_queries.q_semantic_dedup,
+        "temperature_mixture": datapipe_queries.q_temperature_mixture,
+        "embedding_transformer": datapipe_queries.q_embedding_transformer,
+        "corpus_clean": datapipe_queries.q_corpus_clean,
+        "dedup_exact": datapipe_queries.q_dedup_exact,
+        "dedup_minhash_lsh": datapipe_queries.q_dedup_minhash_lsh,
+        "ann_rp_lsh_recall": datapipe_queries.q_ann_rp_lsh_recall,
+        "ann_cosine_topk": datapipe_queries.q_ann_cosine_topk,
+        "mixture_sample": datapipe_queries.q_mixture_sample,
+        "text_repetition": datapipe_queries.q_text_repetition,
+        "ngram_contamination": datapipe_queries.q_ngram_contamination,
+        "text_pii_mask": datapipe_queries.q_text_pii_mask,
+        "text_c4_filters": datapipe_queries.q_text_c4_filters,
+        "multimodal_metadata": datapipe_queries.q_multimodal_metadata,
+        "doc_string_funcs": relational_queries.q_doc_string_funcs,
+        "simhash_fingerprint": datapipe_queries.q_simhash_fingerprint,
+        "window_distribution": relational_queries.q_window_distribution,
+        "simhash_pairs": datapipe_queries.q_simhash_pairs,
+        "dedup_embedding_cosine": datapipe_queries.q_dedup_embedding_cosine,
+        "pricing_summary": q_pricing_summary,
         "diff_transformer": q_diff_transformer,
         "expanding_aggregates": q_expanding_aggregates,
-        **datapipe_queries.QUERIES,
+        "rolling_aggregates": q_rolling_aggregates,
+        "dedup_clusters": datapipe_queries.q_dedup_clusters,
+        "full_outer_activity": relational_queries.q_full_outer_activity,
+        "rollup_revenue": relational_queries.q_rollup_revenue,
+        "set_ops_customers": relational_queries.q_set_ops_customers,
+        "exists_customers": relational_queries.q_exists_customers,
+        "events_percentiles": relational_queries.q_events_percentiles,
+        "spearman_by_month": relational_queries.q_spearman_by_month,
+        "asof_join": relational_queries.q_asof_join,
+        "sql_returned_revenue": relational_queries.q_sql_returned_revenue,
+        "events_windowed_counts": relational_queries.q_events_windowed_counts,
+        "text_language_id": datapipe_queries.q_text_language_id,
+        "text_quality_score": datapipe_queries.q_text_quality_score,
+        "tfidf_topk": datapipe_queries.q_tfidf_topk,
+        "doc_fingerprint": datapipe_queries.q_doc_fingerprint,
+        "text_token_counts": datapipe_queries.q_text_token_counts,
+        "hash_split_sample": datapipe_queries.q_hash_split_sample,
+        "pack_sequences": datapipe_queries.q_pack_sequences,
+        "linear_regression": relational_queries.q_linear_regression,
+        "dedup_ngram_jaccard": datapipe_queries.q_dedup_ngram_jaccard,
+        "neutralize_ols_era": q_neutralize_ols_era,
+        "feature_neutralizer": q_feature_neutralizer,
+        "feature_penalizer": q_feature_penalizer,
+        "dim_reducer_pca": datapipe_queries.q_dim_reducer_pca,
+        "ann_rp_lsh": datapipe_queries.q_ann_rp_lsh,
     }
-    # rotate long-stable queries (hash-green r2, code unchanged since)
-    # to the tail so every NEW query sits inside the driver's 50-entry
-    # window; the tail overflow stays all previously-driver-verified
-    # queries
-    for stable in (
-        "doc_string_funcs",
-        "simhash_fingerprint",
-        "window_distribution",
-        "simhash_pairs",
-        "dedup_embedding_cosine",
-        # (log_return / embedding_transformer / feature_exposures /
-        # winsorize_by_era / dedup_exact / dedup_minhash_lsh /
-        # ann_cosine_topk / multimodal_metadata left OUT of this tail
-        # rotation in round 7 — they rotate through the window head
-        # below as the r2-era drift re-verification, verdict item 7)
-        "pricing_summary",
-        "diff_transformer",
-        "expanding_aggregates",
-        "rolling_aggregates",
-        "dedup_clusters",
-        "full_outer_activity",
-        "rollup_revenue",
-        "set_ops_customers",
-        "exists_customers",
-        "events_percentiles",
-        "spearman_by_month",
-        "asof_join",
-        "sql_returned_revenue",
-        "events_windowed_counts",
-        "text_language_id",
-        "text_quality_score",
-        "tfidf_topk",
-        "doc_fingerprint",
-        "text_token_counts",
-        "hash_split_sample",
-        "pack_sequences",
-        # rotated for the r3-continuation queries (era_report etc.):
-        # linear_regression and dedup_ngram_jaccard are r2-hash-green
-        # and unchanged; neutralize_ols_era's r3 changes are plan-level
-        # (repartition gate, materialize param), value-identical and
-        # locally hash-verified at sf0.01; the three no_oracle kernels
-        # get the same rows-only row wherever they sit
-        "linear_regression",
-        "dedup_ngram_jaccard",
-        "neutralize_ols_era",
-        "feature_neutralizer",
-        "feature_penalizer",
-        "dim_reducer_pca",
-        "ann_rp_lsh",
-    ):
-        if stable in out:  # a rename must not break the whole contract
-            out[stable] = out.pop(stable)
-    # round-13 drift re-verification (r12 verdict item 1): behind the
-    # 11 never-verified head entries (10 promoted staged queries + the
-    # new NULL-order-key gate contract), rotate the OLDEST-verified
-    # greens — the complete 17-query r8-era remainder (last checked
-    # CORRECTNESS_r08), the full 11-query r9-era pool (last checked
-    # CORRECTNESS_r09), and ALL 11 r10-era promotions (last checked
-    # CORRECTNESS_r10) — 11 + 17 + 11 + 11 = exactly the driver's
-    # 50-query window; after this round every r6..r10-era green has
-    # been re-checked r12 or r13. The post-round ledger lives in the
-    # docstring.
-    head = list(out)[:11] + [
-        # r8-era remainder, complete (last checked CORRECTNESS_r08)
-        "feature_corr_matrix",
-        "golden_record",
-        "hybrid_rrf_search",
-        "ic_decay",
-        "kcore_dupgraph",
-        "kmeans_embeddings",
-        "knn_classify",
-        "large_volume_customers",
-        "linear_interpolate",
-        "naive_bayes",
-        "negative_sample",
-        "pareto_front",
-        "seasonal_decompose",
-        "signal_backtest",
-        "topk_turnover",
-        "vector_pipeline",
-        "xicor_by_month",
-        # r9-era pool, complete (last checked CORRECTNESS_r09)
-        "top_supplier",
-        "small_lot_revenue",
-        "volume_dominant_supplier",
-        "association_rules",
-        "sq8_recall_contract",
-        "logistic_irls",
-        "bpe_pair_merges",
-        "rfm_segments",
-        "label_propagation",
-        "blocking_quality",
-        "weighted_quantiles",
-        # r10-era promotions, complete (last checked CORRECTNESS_r10)
-        "cms_heavy_hitters",
-        "bigram_lm",
-        "k_anonymity",
-        "bpe_encode",
-        "bpe_train_rounds",
-        "boosted_stumps",
-        "mmr_rerank",
-        "dedup_clusters_star",
-        "nation_profit",
-        "shipmode_priority",
-        "filtered_supplier_counts",
-    ]
-    pulled = {k: out.pop(k) for k in head if k in out}
-    return {**pulled, **out}
 
 
 # ---------------------------------------------------------------- oracles
@@ -2407,19 +2352,542 @@ def _penalizer_contract_oracle() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    from centimators_spark.analytics import (
+        debounce_events_oracle_sql,
+        transition_counts_oracle_sql,
+        interval_union_length_oracle_sql,
+        l_diversity_oracle_sql,
+        rfm_segments_oracle_sql,
+        t_closeness_oracle_sql,
+    )
+    from centimators_spark.dedup.fuzzy import fuzzy_self_join_oracle_sql
+    from centimators_spark.dedup.substring import (
+        duplicated_spans_multi_oracle_sql,
+        duplicated_spans_oracle_sql,
+    )
+    from centimators_spark.dedup.winnowing import winnowing_overlap_oracle_sql
+    from centimators_spark.graphs import triangle_count_oracle_sql
+    from centimators_spark.ml.abtest import sprt_bernoulli_oracle_sql
+    from centimators_spark.ml.bootstrap import (
+        bootstrap_mean_ci_oracle_sql,
+        permutation_sign_test_oracle_sql,
+    )
+    from centimators_spark.ml.calibration import (
+        isotonic_calibration_oracle_sql,
+    )
+    from centimators_spark.ml.classification_metrics import (
+        gains_table_oracle_sql,
+    )
+    from centimators_spark.ml.conformal import conformal_quantiles_oracle_sql
+    from centimators_spark.ml.ensemble import rank_ensemble_oracle_sql
+    from centimators_spark.ml.feature_selection import (
+        mutual_information_oracle_sql,
+    )
+    from centimators_spark.ml.metrics import ks_two_sample_oracle_sql
+    from centimators_spark.multimodal.audiofp import (
+        audio_fingerprint_oracle_sql,
+    )
+    from centimators_spark.multimodal.phash import image_phash_oracle_sql
+    from centimators_spark.multimodal.videofp import video_phash_oracle_sql
+    from centimators_spark.operators.drift import (
+        psi_drift_categorical_oracle_sql,
+        single_changepoint_oracle_sql,
+    )
+    from centimators_spark.operators.finance import max_drawdown_oracle_sql
+    from centimators_spark.operators.mwu import (
+        mann_whitney_u_oracle_sql,
+        brown_forsythe_oracle_sql,
+    )
+    from centimators_spark.operators.stats import (
+        quantile_normalize_oracle_sql,
+        weighted_median_oracle_sql,
+    )
+    from centimators_spark.profile import (
+        table_profile_oracle_sql,
+        heavy_hitters_oracle_sql,
+        benford_audit_oracle_sql,
+    )
+    from centimators_spark.sampling import sql_weighted_sample, sql_group_kfold
+    from centimators_spark.sketches import (
+        cms_heavy_hitter_oracle_sql,
+        theta_sketch_oracle_sql,
+        theta_a_not_b_oracle_sql,
+        hll_portable_oracle_sql,
+        hll_union_oracle_sql,
+        bottomk_quantile_oracle_sql,
+    )
+    from centimators_spark.text.analysis import bigram_lm_oracle_sql
+    from centimators_spark.text.chunking import doc_sentences_oracle_sql
+    from centimators_spark.text.classifier import linear_text_score_oracle_sql
+    from centimators_spark.text.cooccur import (
+        bpe_train_apply_oracle_sql,
+        bpe_train_rounds_oracle_sql,
+        bpe_pair_merges_oracle_sql,
+    )
+    from centimators_spark.text.divergence import corpus_divergence_oracle_sql
+    from centimators_spark.text.dsir import dsir_select_oracle_sql
+    from centimators_spark.text.features import bm25_topk_oracle_sql
+    from centimators_spark.text.keywords import rake_keywords_oracle_sql
+    from centimators_spark.text.line_filters import (
+        corpus_line_dedup_oracle_sql,
+    )
+    from centimators_spark.text.span_dedup import corpus_span_dedup_oracle_sql
+
+    datapipe = datapipe_queries.oracle_sql()
+    sql_group_kfold_text = (
+        sql_group_kfold("l_suppkey", 5, salt="gk1") + " AS fold"
+    )
+    ev_us = ("(SELECT user_id, epoch_us(ts) AS s,"
+             " epoch_us(ts) + 300000000 AS e FROM events)")
     return {
-        **datapipe_queries.oracle_sql(),
+        **datapipe,
         **relational_queries.oracle_sql(),
-        **_promoted_oracle_sql(),
-        **_promoted_r5_oracle_sql(),
-        **_promoted_r6_oracle_sql(),
-        **_promoted_r7_oracle_sql(),
-        **_promoted_r8_oracle_sql(),
-        **_promoted_r9_oracle_sql(),
-        **_r10_staged_oracles(),
-        **_r11_staged_oracles(),
-        **_r12_staged_oracles(),
-        **_r13_promoted_oracles(),
+        "melt_lineitem": """
+            SELECT l_orderkey, l_linenumber, feature, value
+            FROM (SELECT l_orderkey, l_linenumber, l_quantity,
+                         l_discount, l_tax FROM lineitem)
+            UNPIVOT INCLUDE NULLS
+              (value FOR feature IN (l_quantity, l_discount, l_tax))
+        """,
+        "weighted_sample": sql_weighted_sample(
+            "orders", 100, "o_totalprice", "o_orderkey", "ws1",
+            select_sql="o_orderkey, o_custkey, o_totalprice",
+        ),
+        "conformal_quantiles": conformal_quantiles_oracle_sql(
+            "(SELECT CAST(epoch(date_trunc('month', l_shipdate)) AS BIGINT)"
+            " AS era, l_quantity * 1000 AS pred,"
+            " l_extendedprice AS target FROM lineitem)",
+            "pred",
+            "target",
+            alpha=0.1,
+            era_sql="era",
+        ),
+        "asof_join_forward": """
+            WITH views AS (
+              SELECT event_id, user_id, ts, value FROM events
+              WHERE event_type = 'view'
+            ), purchases AS (
+              SELECT user_id, ts, max(value) AS pvalue FROM events
+              WHERE event_type = 'purchase' GROUP BY user_id, ts
+            ), nxt AS (
+              SELECT v.event_id, v.user_id, v.ts, v.value,
+                     min(p.ts) AS pts
+              FROM views v
+              LEFT JOIN purchases p
+                ON v.user_id = p.user_id AND p.ts >= v.ts
+              GROUP BY v.event_id, v.user_id, v.ts, v.value
+            )
+            SELECT n.event_id, n.user_id,
+                   CAST(epoch(date_trunc('second', n.ts)) AS BIGINT)
+                     AS ts_epoch,
+                   n.value,
+                   CAST(epoch(date_trunc('second', n.pts)) AS BIGINT)
+                     AS next_purchase_ts_epoch,
+                   p2.pvalue AS next_purchase_value
+            FROM nxt n
+            LEFT JOIN purchases p2
+              ON n.user_id = p2.user_id AND n.pts = p2.ts
+        """,
+        "line_dedup": corpus_line_dedup_oracle_sql(),
+        "mutual_information": mutual_information_oracle_sql(
+            "lineitem",
+            {
+                "qty_bin": "CAST(floor(l_quantity / 10) AS INTEGER)",
+                "disc_bin": "CAST(round(l_discount * 100) AS INTEGER)",
+                "tax_bin": "CAST(round(l_tax * 100) AS INTEGER)",
+            },
+            "l_returnflag",
+        ),
+        "heavy_hitters": heavy_hitters_oracle_sql(
+            "orders", "o_orderpriority", min_share=0.05
+        ),
+        "corpus_divergence": corpus_divergence_oracle_sql(),
+        "rank_ensemble": rank_ensemble_oracle_sql(
+            "(SELECT l_orderkey, l_linenumber,"
+            " CAST(epoch(date_trunc('month', l_shipdate)) AS BIGINT) AS era,"
+            " l_quantity AS m1, l_extendedprice AS m2 FROM lineitem)",
+            ["m1", "m2"],
+            era_sql="era",
+            select_sql="l_orderkey, l_linenumber, era",
+            weights=[2, 1],
+        ),
+        "table_profile": table_profile_oracle_sql(
+            "documents",
+            ["doc_id", "lang", "source", "n_chars"],
+            ["doc_id", "n_chars"],
+        ),
+        "validate_orders": """
+            WITH g AS (
+              SELECT count(*) AS n,
+                     count(o_orderkey) AS nn_k,
+                     count(DISTINCT o_orderkey) AS nd_k,
+                     count(CASE WHEN o_totalprice IS NOT NULL
+                           AND o_totalprice < 0 THEN 1 END) AS v_range,
+                     count(CASE WHEN o_orderstatus IS NOT NULL
+                           AND o_orderstatus NOT IN ('F','O','P') THEN 1 END)
+                       AS v_set,
+                     count(CASE WHEN o_orderpriority IS NOT NULL
+                           AND NOT regexp_matches(o_orderpriority, '^[1-5]-')
+                           THEN 1 END) AS v_re
+              FROM orders
+            ), fk AS (
+              SELECT count(*) AS v_fk FROM orders
+              WHERE o_custkey IS NOT NULL
+                AND o_custkey NOT IN (SELECT c_custkey FROM customer)
+            )
+            SELECT 'not_null' AS check, 'o_orderkey' AS column,
+                   (n - nn_k) = 0 AS passed, n - nn_k AS n_violations FROM g
+            UNION ALL
+            SELECT 'unique', 'o_orderkey', (nn_k - nd_k) = 0, nn_k - nd_k
+            FROM g
+            UNION ALL
+            SELECT 'in_range', 'o_totalprice', v_range = 0, v_range FROM g
+            UNION ALL
+            SELECT 'in_set', 'o_orderstatus', v_set = 0, v_set FROM g
+            UNION ALL
+            SELECT 'matches', 'o_orderpriority', v_re = 0, v_re FROM g
+            UNION ALL
+            SELECT 'foreign_key', 'o_custkey', v_fk = 0, v_fk FROM fk
+        """,
+        "linreg_fast_contract": relational_queries._LINREG_FAST_ORACLE,
+        "promo_revenue": relational_queries._PROMO_REVENUE_ORACLE,
+        "supplier_counts": relational_queries._SUPPLIER_COUNTS_ORACLE,
+        "psi_categorical": psi_drift_categorical_oracle_sql(
+            "orders",
+            {
+                "o_orderstatus": "o_orderstatus",
+                "o_orderpriority": "o_orderpriority",
+            },
+            f"o_orderdate < TIMESTAMP '{PSI_REF_DATE}'",
+        ),
+        "doc_sentences": doc_sentences_oracle_sql(),
+        "transition_counts": transition_counts_oracle_sql(),
+        "event_debounce": debounce_events_oracle_sql(
+            "events",
+            86400,
+            select_sql=(
+                "event_id, user_id, event_type,"
+                " CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_epoch"
+            ),
+        ),
+        "fuzzy_name_pairs": fuzzy_self_join_oracle_sql(
+            "(SELECT p_name, min(p_partkey) AS name_id FROM part"
+            " GROUP BY p_name)",
+            "p_name",
+            "name_id",
+            max_dist=2,
+        ),
+        "rolling_rank": f"""
+            WITH w10 AS (
+              SELECT l_orderkey, l_linenumber,
+                     CAST(l_quantity AS DOUBLE) AS q,
+                     array_agg(CAST(l_quantity AS DOUBLE)) OVER (
+                       PARTITION BY l_suppkey ORDER BY {_ORDER_SQL}
+                       ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS arr,
+                     count(l_quantity) OVER (
+                       PARTITION BY l_suppkey ORDER BY {_ORDER_SQL}
+                       ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS n
+              FROM lineitem
+            )
+            SELECT l_orderkey, l_linenumber,
+                   CAST(CASE WHEN n = 10 AND q IS NOT NULL THEN
+                     len(list_filter(arr, v -> v < q)) + 1 END AS INTEGER)
+                     AS l_quantity_rollrank10
+            FROM w10
+        """,
+        "group_kfold": f"""
+            SELECT l_orderkey, l_linenumber, l_suppkey,
+                   {sql_group_kfold_text}
+            FROM lineitem
+        """,
+        "quantile_normalize": quantile_normalize_oracle_sql(
+            "lineitem",
+            "l_extendedprice",
+            ref_cond_sql=f"l_shipdate < TIMESTAMP '{PSI_REF_DATE}'",
+            era_sql="date_trunc('month', l_shipdate)",
+            n_points=50,
+            order_sql=", ".join(
+                c for c in (_ORDER_SQL.split(", ")) if c != "l_extendedprice"
+            ),
+            select_sql="l_orderkey, l_linenumber",
+            out_name="qnorm",
+        ),
+        "rake_keywords": rake_keywords_oracle_sql(),
+        "active_time": interval_union_length_oracle_sql(
+            ev_us, "s", "e", "user_id", out_name="active_us"
+        ),
+        "weighted_median": weighted_median_oracle_sql(
+            "(SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,"
+            " CAST(round(l_extendedprice * 100) AS BIGINT) AS w"
+            " FROM lineitem)",
+            "qty", "w", "l_returnflag",
+        ),
+        "approx_distinct_contract": """
+            SELECT o_orderpriority,
+                   CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact,
+                   true AS sketch_within_band
+            FROM orders GROUP BY o_orderpriority
+        """,
+        "isotonic_contract": f"""
+            WITH s AS (
+              SELECT (l_quantity * 2 - 1) / 100 AS p,
+                     CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
+              FROM lineitem
+            )
+            SELECT CAST(count(*) AS BIGINT) AS n,
+                   CAST(0 AS BIGINT) AS n_violations,
+                   true AS min_ok, true AS max_ok,
+                   round(sum(y), 3) AS sum_fit
+            FROM s
+        """,
+        "cheapest_supplier": """
+            WITH cost AS (
+              SELECT l_partkey, l_suppkey,
+                     min(CAST(round(l_extendedprice * 100) AS BIGINT)
+                         // CAST(l_quantity AS BIGINT)) AS c
+              FROM lineitem GROUP BY l_partkey, l_suppkey
+            ), best AS (
+              SELECT l_partkey AS p_partkey,
+                     min({'c': c, 's': l_suppkey}) AS b
+              FROM cost GROUP BY l_partkey
+            )
+            SELECT p_partkey,
+                   CAST(b.s AS BIGINT) AS s_suppkey,
+                   CAST(b.c AS BIGINT) AS cost_cents_per_unit,
+                   s_name, n_name
+            FROM best
+            JOIN supplier ON b.s = s_suppkey
+            JOIN nation ON s_nationkey = n_nationkey
+        """,
+        "span_dedup": corpus_span_dedup_oracle_sql(w=8, min_docs=2),
+        "quality_classifier": linear_text_score_oracle_sql(
+            QUALITY_WEIGHTS, QUALITY_BIAS
+        ),
+        "max_drawdown": max_drawdown_oracle_sql(
+            "(SELECT *, CASE WHEN l_returnflag = 'R'"
+            " THEN -round(l_extendedprice * 100)"
+            " ELSE round(l_extendedprice * 100) END AS signed_cents"
+            " FROM lineitem)",
+            "signed_cents",
+            ORDER,
+            "l_suppkey",
+            out_by="l_suppkey",
+        ),
+        "ks_statistic": ks_two_sample_oracle_sql(
+            "lineitem",
+            "CAST(l_quantity AS BIGINT)",
+            "l_linestatus = 'O'",
+            "l_returnflag",
+            out_by="l_returnflag",
+        ),
+        "bm25_search": bm25_topk_oracle_sql(BM25_TERMS, k=10),
+        "gains_table": gains_table_oracle_sql(
+            "lineitem",
+            "CAST(round(l_discount * 100) AS BIGINT)",
+            "l_returnflag = 'R'",
+            n_buckets=10,
+        ),
+        "triangle_count": triangle_count_oracle_sql(
+            "(SELECT x.l_suppkey AS src, y.l_suppkey AS dst"
+            " FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
+            "       WHERE l_suppkey < 300) x"
+            " JOIN (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
+            "       WHERE l_suppkey < 300) y"
+            " USING (l_partkey)"
+            " WHERE x.l_suppkey < y.l_suppkey"
+            " GROUP BY 1, 2 HAVING count(*) >= 2)"
+        ),
+        "prospect_customers": """
+            SELECT c_nationkey,
+                   CAST(count(*) AS BIGINT) AS n_cust,
+                   CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS bal_cents
+            FROM customer c
+            WHERE c_nationkey IN (1, 3, 5, 7, 9)
+              AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
+                               WHERE c_acctbal > 0)
+              AND NOT EXISTS (SELECT 1 FROM orders o
+                              WHERE o.o_custkey = c.c_custkey
+                                AND o.o_orderdate >= TIMESTAMP '1999-01-01')
+            GROUP BY c_nationkey
+        """,
+        "part_share": """
+            WITH pr AS (
+              SELECT l_partkey,
+                     CAST(sum(round(l_extendedprice * 100)) AS BIGINT)
+                       AS rev_cents
+              FROM lineitem GROUP BY l_partkey
+            )
+            SELECT l_partkey, rev_cents FROM pr
+            WHERE rev_cents * 10000 > (SELECT sum(rev_cents) FROM pr) * 5
+        """,
+        "supplier_return_blame": """
+            WITH os AS (
+              SELECT l_orderkey, l_suppkey,
+                     max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+                       AS ret
+              FROM lineitem GROUP BY l_orderkey, l_suppkey
+            ), per_order AS (
+              SELECT l_orderkey, count(*) AS n_supp, sum(ret) AS n_ret
+              FROM os GROUP BY l_orderkey
+            )
+            SELECT l_suppkey, CAST(count(*) AS BIGINT) AS numwait
+            FROM os JOIN per_order USING (l_orderkey)
+            WHERE n_supp >= 2 AND ret = 1 AND n_ret = 1
+            GROUP BY l_suppkey
+        """,
+        "customer_distribution": (
+            relational_queries._CUSTOMER_DISTRIBUTION_ORACLE
+        ),
+        "large_volume_customers": (
+            relational_queries._LARGE_VOLUME_CUSTOMERS_ORACLE
+        ),
+        "hybrid_rrf_search": _hybrid_rrf_oracle(),
+        "budget_select": _budget_select_oracle(),
+        "containment_pairs": _containment_pairs_oracle(),
+        "best_split": _best_split_oracle(),
+        "topk_turnover": _topk_turnover_oracle(),
+        "ic_decay": _ic_decay_oracle(),
+        "negative_sample": _negative_sample_oracle(),
+        "linear_interpolate": _LINEAR_INTERP_ORACLE,
+        "pareto_front": _pareto_front_oracle(),
+        "feature_corr_matrix": _feature_corr_matrix_oracle(),
+        "seasonal_decompose": _seasonal_decompose_oracle(),
+        "xicor_by_month": _xicor_oracle(),
+        "naive_bayes": _naive_bayes_oracle(),
+        "disjunctive_revenue": (
+            relational_queries._DISJUNCTIVE_REVENUE_ORACLE
+        ),
+        "kcore_dupgraph": _kcore_oracle(),
+        "signal_backtest": _signal_backtest_oracle(),
+        "kmeans_embeddings": _kmeans_oracle(),
+        "knn_classify": _knn_oracle(),
+        "chi2_independence": _chi2_oracle(),
+        "golden_record": _golden_record_oracle(),
+        "vector_pipeline": _vector_pipeline_oracle(),
+        "top_supplier": relational_queries._TOP_SUPPLIER_ORACLE,
+        "small_lot_revenue": relational_queries._SMALL_LOT_REVENUE_ORACLE,
+        "volume_dominant_supplier": (
+            relational_queries._VOLUME_DOMINANT_ORACLE
+        ),
+        "association_rules": datapipe_queries._association_rules_oracle(),
+        "sq8_recall_contract": datapipe["pq_recall_contract"],
+        "logistic_irls": _logistic_irls_oracle(),
+        "bpe_pair_merges": bpe_pair_merges_oracle_sql("documents"),
+        "rfm_segments": rfm_segments_oracle_sql("orders"),
+        "label_propagation": _label_propagation_oracle(),
+        "blocking_quality": datapipe_queries._blocking_quality_oracle(),
+        "weighted_quantiles": _weighted_quantiles_oracle(),
+        "cms_heavy_hitters": cms_heavy_hitter_oracle_sql(
+            "documents", w=CMS_CONTRACT_W
+        ),
+        "bigram_lm": bigram_lm_oracle_sql("documents", vocab_cap=BIGRAM_VOCAB_CAP),
+        "k_anonymity": _k_anonymity_oracle(),
+        "bpe_encode": bpe_train_apply_oracle_sql("documents"),
+        "bpe_train_rounds": bpe_train_rounds_oracle_sql("documents"),
+        "boosted_stumps": _boosted_stumps_oracle(),
+        "mmr_rerank": _mmr_rerank_oracle(),
+        "dedup_clusters_star": datapipe["dedup_clusters"],
+        "nation_profit": relational_queries._NATION_PROFIT_ORACLE,
+        "shipmode_priority": relational_queries._SHIPMODE_PRIORITY_ORACLE,
+        "filtered_supplier_counts": (
+            relational_queries._FILTERED_SUPPLIER_COUNTS_ORACLE
+        ),
+        "image_phash_dedup": image_phash_oracle_sql("documents"),
+        "theta_intersections": theta_sketch_oracle_sql("documents"),
+        "audio_fingerprint_dedup": audio_fingerprint_oracle_sql(
+            "documents"
+        ),
+        "video_phash_dedup": video_phash_oracle_sql("documents"),
+        "l_diversity": l_diversity_oracle_sql(
+            "(SELECT c_nationkey, c_mktsegment,"
+            " CAST(floor(c_acctbal / 100) AS BIGINT) AS bal_h"
+            " FROM customer)",
+            ["c_nationkey", "bal_h"],
+            "c_mktsegment",
+            l=2,
+        ),
+        "multimodal_corpus_clean": _multimodal_corpus_clean_oracle(),
+        "theta_a_not_b": theta_a_not_b_oracle_sql("documents"),
+        "order_priority_counts": relational_queries._ORDER_PRIORITY_ORACLE,
+        "forecast_revenue": relational_queries._FORECAST_REVENUE_ORACLE,
+        "t_closeness": t_closeness_oracle_sql(
+            "(SELECT c_nationkey, c_mktsegment,"
+            " CAST(floor(c_acctbal / 100) AS BIGINT) AS bal_h"
+            " FROM customer)",
+            ["c_nationkey", "bal_h"],
+            "c_mktsegment",
+        ),
+        "isotonic_calibration": isotonic_calibration_oracle_sql(
+            "(SELECT o_orderpriority,"
+            " least(CAST(floor(o_totalprice / 10000) AS BIGINT), 49)"
+            " AS price_bucket,"
+            " CAST(o_orderstatus = 'F' AS INTEGER) AS is_f"
+            " FROM orders)",
+            "o_orderpriority",
+            "price_bucket",
+            "is_f",
+        ),
+        "winnowing_overlap": winnowing_overlap_oracle_sql("documents"),
+        "duplicated_spans": duplicated_spans_oracle_sql("documents"),
+        "changepoint": single_changepoint_oracle_sql(
+            "events", "event_type", ["ts", "event_id"], "value"
+        ),
+        "benford_audit": benford_audit_oracle_sql(
+            "orders", "o_orderpriority", "o_totalprice"
+        ),
+        "hll_portable": hll_portable_oracle_sql(
+            "orders", "o_orderpriority", "o_custkey"
+        ),
+        "hll_union": hll_union_oracle_sql("documents"),
+        "bootstrap_ci": bootstrap_mean_ci_oracle_sql(
+            "orders", "o_orderpriority", "o_orderkey", "o_totalprice"
+        ),
+        "mann_whitney": mann_whitney_u_oracle_sql(
+            "(SELECT event_type,"
+            " CAST(event_id % 2 = 0 AS INTEGER) AS side_a, value"
+            " FROM events)",
+            "event_type",
+            "side_a",
+            "value",
+        ),
+        "sprt_audit": sprt_bernoulli_oracle_sql(
+            "(SELECT o_orderpriority,"
+            " CAST(o_orderstatus = 'F' AS INTEGER) AS is_f"
+            " FROM orders)",
+            "o_orderpriority",
+            "is_f",
+        ),
+        "brown_forsythe": brown_forsythe_oracle_sql(
+            "(SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,"
+            " event_type, value FROM events)",
+            "day",
+            "event_type",
+            "value",
+        ),
+        "duplicated_spans_multi": duplicated_spans_multi_oracle_sql(
+            "documents"
+        ),
+        # exact top-k over the SAME derived clustered fixture the
+        # IVF-PQ pruning contract uses — hash-green iff recall is 100%
+        "sq8_clustered_contract": datapipe["ivfpq_pruned_contract"],
+        "dsir_select": dsir_select_oracle_sql("documents", DSIR_TARGET),
+        "bottomk_quantiles": bottomk_quantile_oracle_sql(
+            "orders", "o_orderpriority", "o_orderkey", "o_totalprice"
+        ),
+        "sign_permutation": permutation_sign_test_oracle_sql(
+            _SIGNED_EVENTS_SQL, "event_type", "event_id", "sv"
+        ),
+        "training_split_audit": _training_split_audit_oracle(),
+        "dsir_budget_select": _dsir_budget_select_oracle(),
+        "join_skew_audit": _join_skew_audit_oracle(),
+        "theil_sen_trend": _theil_sen_trend_oracle(),
+        "mann_kendall": _mann_kendall_oracle(),
+        "cdc_apply": _cdc_apply_oracle(),
+        "event_paths": _event_paths_oracle(),
+        "fdr_audit": _fdr_audit_oracle(),
+        "purged_kfold": _purged_kfold_oracle(),
+        "join_size_estimate": _join_size_estimate_oracle(),
+        "timed_funnel": _timed_funnel_oracle(),
         "event_paths_nullts": _event_paths_nullts_oracle(),
         "bootstrap_signed": _bootstrap_signed_oracle(),
         "mwu_signed": _mwu_signed_oracle(),
@@ -2675,13 +3143,6 @@ def oracle_sql() -> dict[str, str]:
         """,
     }
 
-
-# ------------------------------------------- promoted round-3 staging
-#
-# These 11 queries were fully implemented in round 3 but their driver
-# registration was deferred (the round-3 window was exactly full of
-# never-driver-verified queries). Promoted into queries()/oracle_sql()
-# this round at the head of the window.
 
 def q_rank_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-era weighted rank-ensemble of two 'model' columns."""
@@ -3999,19 +4460,24 @@ def _vector_pipeline_oracle() -> str:
 
 
 def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Queries implemented but deferred to the NEXT round's window —
-    the round-14 candidate set, gate-checked by
-    tests/test_staged_queries.py and `check_oracle --staged`. (The
-    round-13 set — dsir_budget_select, join_skew_audit,
-    theil_sen_trend, mann_kendall, cdc_apply, event_paths, fdr_audit,
-    purged_kfold, join_size_estimate, timed_funnel — was promoted
-    into queries() this round.)"""
-    return _r14_staged()
+    """Queries implemented and gate-checked (tests/test_staged_queries.py,
+    `check_oracle --staged`) but not declared to the driver."""
+    return {
+        "plan_join_contract": q_plan_join_contract,
+        "cdc_scd2_audit": q_cdc_scd2_audit,
+        "dd_sketch_contract": q_dd_sketch_contract,
+        "incr_agg_maintain": q_incr_agg_maintain,
+    }
 
 
 def staged_oracle_sql() -> dict[str, str]:
     """Oracle texts for staged_queries()."""
-    return _r14_staged_oracles()
+    return {
+        "plan_join_contract": _PLAN_JOIN_CONTRACT_ORACLE,
+        "cdc_scd2_audit": _cdc_scd2_audit_oracle(),
+        "dd_sketch_contract": _DD_SKETCH_CONTRACT_ORACLE,
+        "incr_agg_maintain": _incr_agg_maintain_oracle(),
+    }
 
 
 def q_bootstrap_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4912,98 +5378,6 @@ def _incr_agg_maintain_oracle() -> str:
     )
 
 
-def _r14_staged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "plan_join_contract": q_plan_join_contract,
-        "cdc_scd2_audit": q_cdc_scd2_audit,
-        "dd_sketch_contract": q_dd_sketch_contract,
-        "incr_agg_maintain": q_incr_agg_maintain,
-    }
-
-
-def _r14_staged_oracles() -> dict[str, str]:
-    return {
-        "plan_join_contract": _PLAN_JOIN_CONTRACT_ORACLE,
-        "cdc_scd2_audit": _cdc_scd2_audit_oracle(),
-        "dd_sketch_contract": _DD_SKETCH_CONTRACT_ORACLE,
-        "incr_agg_maintain": _incr_agg_maintain_oracle(),
-    }
-
-
-def _r13_promoted() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "dsir_budget_select": q_dsir_budget_select,
-        "join_skew_audit": q_join_skew_audit,
-        "theil_sen_trend": q_theil_sen_trend,
-        "mann_kendall": q_mann_kendall,
-        "cdc_apply": q_cdc_apply,
-        "event_paths": q_event_paths,
-        "fdr_audit": q_fdr_audit,
-        "purged_kfold": q_purged_kfold,
-        "join_size_estimate": q_join_size_estimate,
-        "timed_funnel": q_timed_funnel,
-    }
-
-
-def _r13_promoted_oracles() -> dict[str, str]:
-    return {
-        "dsir_budget_select": _dsir_budget_select_oracle(),
-        "join_skew_audit": _join_skew_audit_oracle(),
-        "theil_sen_trend": _theil_sen_trend_oracle(),
-        "mann_kendall": _mann_kendall_oracle(),
-        "cdc_apply": _cdc_apply_oracle(),
-        "event_paths": _event_paths_oracle(),
-        "fdr_audit": _fdr_audit_oracle(),
-        "purged_kfold": _purged_kfold_oracle(),
-        "join_size_estimate": _join_size_estimate_oracle(),
-        "timed_funnel": _timed_funnel_oracle(),
-    }
-
-
-def _r12_staged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "duplicated_spans_multi": q_duplicated_spans_multi,
-        "sq8_clustered_contract": (
-            datapipe_queries.q_sq8_clustered_contract
-        ),
-        "dsir_select": q_dsir_select,
-        "bottomk_quantiles": q_bottomk_quantiles,
-        "sign_permutation": q_sign_permutation,
-        "training_split_audit": q_training_split_audit,
-    }
-
-
-def _r12_staged_oracles() -> dict[str, str]:
-    from centimators_spark.dedup.substring import (
-        duplicated_spans_multi_oracle_sql,
-    )
-
-    return {
-        "duplicated_spans_multi": duplicated_spans_multi_oracle_sql(
-            "documents"
-        ),
-        # exact top-k over the SAME derived clustered fixture the
-        # IVF-PQ pruning contract uses — hash-green iff recall is 100%
-        "sq8_clustered_contract": datapipe_queries.oracle_sql()[
-            "ivfpq_pruned_contract"
-        ],
-        "dsir_select": __import__(
-            "centimators_spark.text.dsir", fromlist=["x"]
-        ).dsir_select_oracle_sql("documents", DSIR_TARGET),
-        "bottomk_quantiles": __import__(
-            "centimators_spark.sketches", fromlist=["x"]
-        ).bottomk_quantile_oracle_sql(
-            "orders", "o_orderpriority", "o_orderkey", "o_totalprice"
-        ),
-        "sign_permutation": __import__(
-            "centimators_spark.ml.bootstrap", fromlist=["x"]
-        ).permutation_sign_test_oracle_sql(
-            _SIGNED_EVENTS_SQL, "event_type", "event_id", "sv"
-        ),
-        "training_split_audit": _training_split_audit_oracle(),
-    }
-
-
 def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal near-dup (r9 verdict item 4): deterministic grayscale
     BMP corpus synthesized from doc ids (groups of 4 share a base
@@ -5093,148 +5467,6 @@ def q_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"),
         blobs=_shared_synth_blobs(spark, sf_dir, "video"),
     )
-
-
-def _r11_staged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "image_phash_dedup": q_image_phash_dedup,
-        "theta_intersections": q_theta_intersections,
-        "audio_fingerprint_dedup": q_audio_fingerprint_dedup,
-        "video_phash_dedup": q_video_phash_dedup,
-        "l_diversity": q_l_diversity,
-        "multimodal_corpus_clean": q_multimodal_corpus_clean,
-        "theta_a_not_b": q_theta_a_not_b,
-        "order_priority_counts": q_order_priority_counts,
-        "forecast_revenue": q_forecast_revenue,
-        "t_closeness": q_t_closeness,
-        "isotonic_calibration": q_isotonic_calibration,
-        "winnowing_overlap": q_winnowing_overlap,
-        "duplicated_spans": q_duplicated_spans,
-        "changepoint": q_changepoint,
-        "benford_audit": q_benford_audit,
-        "hll_portable": q_hll_portable,
-        "hll_union": q_hll_union,
-        "bootstrap_ci": q_bootstrap_ci,
-        "mann_whitney": q_mann_whitney,
-        "sprt_audit": q_sprt,
-        "brown_forsythe": q_brown_forsythe,
-    }
-
-
-def _r11_staged_oracles() -> dict[str, str]:
-    from centimators_spark.analytics import l_diversity_oracle_sql
-    from centimators_spark.multimodal.audiofp import (
-        audio_fingerprint_oracle_sql,
-    )
-    from centimators_spark.multimodal.phash import image_phash_oracle_sql
-    from centimators_spark.sketches import theta_sketch_oracle_sql
-
-    return {
-        "image_phash_dedup": image_phash_oracle_sql("documents"),
-        "theta_intersections": theta_sketch_oracle_sql("documents"),
-        "audio_fingerprint_dedup": audio_fingerprint_oracle_sql(
-            "documents"
-        ),
-        "video_phash_dedup": __import__(
-            "centimators_spark.multimodal.videofp", fromlist=["x"]
-        ).video_phash_oracle_sql("documents"),
-        "l_diversity": l_diversity_oracle_sql(
-            "(SELECT c_nationkey, c_mktsegment,"
-            " CAST(floor(c_acctbal / 100) AS BIGINT) AS bal_h"
-            " FROM customer)",
-            ["c_nationkey", "bal_h"],
-            "c_mktsegment",
-            l=2,
-        ),
-        "multimodal_corpus_clean": _multimodal_corpus_clean_oracle(),
-        "theta_a_not_b": __import__(
-            "centimators_spark.sketches", fromlist=["x"]
-        ).theta_a_not_b_oracle_sql("documents"),
-        "order_priority_counts": __import__(
-            "centimators_spark.plans.relational_queries", fromlist=["x"]
-        )._ORDER_PRIORITY_ORACLE,
-        "forecast_revenue": __import__(
-            "centimators_spark.plans.relational_queries", fromlist=["x"]
-        )._FORECAST_REVENUE_ORACLE,
-    "t_closeness": __import__(
-            "centimators_spark.analytics", fromlist=["x"]
-        ).t_closeness_oracle_sql(
-            "(SELECT c_nationkey, c_mktsegment,"
-            " CAST(floor(c_acctbal / 100) AS BIGINT) AS bal_h"
-            " FROM customer)",
-            ["c_nationkey", "bal_h"],
-            "c_mktsegment",
-        ),
-        "isotonic_calibration": __import__(
-            "centimators_spark.ml.calibration", fromlist=["x"]
-        ).isotonic_calibration_oracle_sql(
-            "(SELECT o_orderpriority,"
-            " least(CAST(floor(o_totalprice / 10000) AS BIGINT), 49)"
-            " AS price_bucket,"
-            " CAST(o_orderstatus = 'F' AS INTEGER) AS is_f"
-            " FROM orders)",
-            "o_orderpriority",
-            "price_bucket",
-            "is_f",
-        ),
-        "winnowing_overlap": __import__(
-            "centimators_spark.dedup.winnowing", fromlist=["x"]
-        ).winnowing_overlap_oracle_sql("documents"),
-        "duplicated_spans": __import__(
-            "centimators_spark.dedup.substring", fromlist=["x"]
-        ).duplicated_spans_oracle_sql("documents"),
-        "changepoint": __import__(
-            "centimators_spark.operators.drift", fromlist=["x"]
-        ).single_changepoint_oracle_sql(
-            "events", "event_type", ["ts", "event_id"], "value"
-        ),
-    "benford_audit": __import__(
-            "centimators_spark.profile", fromlist=["x"]
-        ).benford_audit_oracle_sql(
-            "orders", "o_orderpriority", "o_totalprice"
-        ),
-    "hll_portable": __import__(
-            "centimators_spark.sketches", fromlist=["x"]
-        ).hll_portable_oracle_sql(
-            "orders", "o_orderpriority", "o_custkey"
-        ),
-    "hll_union": __import__(
-            "centimators_spark.sketches", fromlist=["x"]
-        ).hll_union_oracle_sql("documents"),
-    "bootstrap_ci": __import__(
-            "centimators_spark.ml.bootstrap", fromlist=["x"]
-        ).bootstrap_mean_ci_oracle_sql(
-            "orders", "o_orderpriority", "o_orderkey", "o_totalprice"
-        ),
-    "mann_whitney": __import__(
-            "centimators_spark.operators.mwu", fromlist=["x"]
-        ).mann_whitney_u_oracle_sql(
-            "(SELECT event_type,"
-            " CAST(event_id % 2 = 0 AS INTEGER) AS side_a, value"
-            " FROM events)",
-            "event_type",
-            "side_a",
-            "value",
-        ),
-        "sprt_audit": __import__(
-            "centimators_spark.ml.abtest", fromlist=["x"]
-        ).sprt_bernoulli_oracle_sql(
-            "(SELECT o_orderpriority,"
-            " CAST(o_orderstatus = 'F' AS INTEGER) AS is_f"
-            " FROM orders)",
-            "o_orderpriority",
-            "is_f",
-        ),
-        "brown_forsythe": __import__(
-            "centimators_spark.operators.mwu", fromlist=["x"]
-        ).brown_forsythe_oracle_sql(
-            "(SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,"
-            " event_type, value FROM events)",
-            "day",
-            "event_type",
-            "value",
-        ),
-    }
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5436,54 +5668,6 @@ def _k_anonymity_oracle() -> str:
     )
 
 
-def _r10_staged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "bigram_lm": q_bigram_lm,
-        "k_anonymity": q_k_anonymity,
-        "bpe_encode": q_bpe_encode,
-        "bpe_train_rounds": q_bpe_train_rounds,
-        "boosted_stumps": q_boosted_stumps,
-        "mmr_rerank": q_mmr_rerank,
-        "dedup_clusters_star": q_dedup_clusters_star,
-        "nation_profit": relational_queries.q_nation_profit,
-        "shipmode_priority": relational_queries.q_shipmode_priority,
-        "filtered_supplier_counts": (
-            relational_queries.q_filtered_supplier_counts
-        ),
-    }
-
-
-def _r10_staged_oracles() -> dict[str, str]:
-    from centimators_spark.text.cooccur import bpe_train_apply_oracle_sql
-
-    from centimators_spark.text.cooccur import bpe_train_rounds_oracle_sql
-
-    from centimators_spark.sketches import cms_heavy_hitter_oracle_sql
-
-    return {
-        "cms_heavy_hitters": cms_heavy_hitter_oracle_sql(
-            "documents", w=CMS_CONTRACT_W
-        ),
-        "bigram_lm": __import__(
-            "centimators_spark.text.analysis", fromlist=["x"]
-        ).bigram_lm_oracle_sql("documents", vocab_cap=BIGRAM_VOCAB_CAP),
-        "k_anonymity": _k_anonymity_oracle(),
-        "bpe_encode": bpe_train_apply_oracle_sql("documents"),
-        "bpe_train_rounds": bpe_train_rounds_oracle_sql("documents"),
-        "boosted_stumps": _boosted_stumps_oracle(),
-        "mmr_rerank": _mmr_rerank_oracle(),
-        "dedup_clusters_star": datapipe_queries.oracle_sql()[
-            "dedup_clusters"
-        ],
-        "nation_profit": relational_queries._NATION_PROFIT_ORACLE,
-        "shipmode_priority": relational_queries._SHIPMODE_PRIORITY_ORACLE,
-        "filtered_supplier_counts": (
-            relational_queries._FILTERED_SUPPLIER_COUNTS_ORACLE
-        ),
-    }
-
-
 def q_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact type-1 weighted quantiles (q25/q50/q75) of order value per
     priority, weighted by the order's lineitem count — integer
@@ -5597,445 +5781,6 @@ def _label_propagation_oracle() -> str:
         rounds=3,
     )
 
-
-def _promoted_r9_oracle_sql() -> dict[str, str]:
-    """Oracle texts for the round-9 promoted set (the former round-8
-    staged set, promoted per the r8 verdict item 1)."""
-    from centimators_spark.plans import datapipe_queries as dq
-
-    return {
-        "top_supplier": relational_queries._TOP_SUPPLIER_ORACLE,
-        "small_lot_revenue": relational_queries._SMALL_LOT_REVENUE_ORACLE,
-        "volume_dominant_supplier": (
-            relational_queries._VOLUME_DOMINANT_ORACLE
-        ),
-        "association_rules": dq._association_rules_oracle(),
-        "sq8_recall_contract": dq.oracle_sql()["pq_recall_contract"],
-        "logistic_irls": _logistic_irls_oracle(),
-        "bpe_pair_merges": __import__(
-            "centimators_spark.text.cooccur", fromlist=["x"]
-        ).bpe_pair_merges_oracle_sql("documents"),
-        "rfm_segments": __import__(
-            "centimators_spark.analytics", fromlist=["x"]
-        ).rfm_segments_oracle_sql("orders"),
-        "label_propagation": _label_propagation_oracle(),
-        "blocking_quality": dq._blocking_quality_oracle(),
-        "weighted_quantiles": _weighted_quantiles_oracle(),
-    }
-
-
-
-
-
-def _promoted_r8_oracle_sql() -> dict[str, str]:
-    """Oracle texts for the round-8 promoted set (the former round-7
-    staged set, promoted per the r7 verdict item 1)."""
-    return {
-        "customer_distribution": (
-            relational_queries._CUSTOMER_DISTRIBUTION_ORACLE
-        ),
-        "large_volume_customers": (
-            relational_queries._LARGE_VOLUME_CUSTOMERS_ORACLE
-        ),
-        "hybrid_rrf_search": _hybrid_rrf_oracle(),
-        "budget_select": _budget_select_oracle(),
-        "containment_pairs": _containment_pairs_oracle(),
-        "best_split": _best_split_oracle(),
-        "topk_turnover": _topk_turnover_oracle(),
-        "ic_decay": _ic_decay_oracle(),
-        "negative_sample": _negative_sample_oracle(),
-        "linear_interpolate": _LINEAR_INTERP_ORACLE,
-        "pareto_front": _pareto_front_oracle(),
-        "feature_corr_matrix": _feature_corr_matrix_oracle(),
-        "seasonal_decompose": _seasonal_decompose_oracle(),
-        "xicor_by_month": _xicor_oracle(),
-        "naive_bayes": _naive_bayes_oracle(),
-        "disjunctive_revenue": (
-            relational_queries._DISJUNCTIVE_REVENUE_ORACLE
-        ),
-        "kcore_dupgraph": _kcore_oracle(),
-        "signal_backtest": _signal_backtest_oracle(),
-        "kmeans_embeddings": _kmeans_oracle(),
-        "knn_classify": _knn_oracle(),
-        "chi2_independence": _chi2_oracle(),
-        "golden_record": _golden_record_oracle(),
-        "vector_pipeline": _vector_pipeline_oracle(),
-    }
-
-
-def _promoted_r7_oracle_sql() -> dict[str, str]:
-    """Oracle texts for the round-7 promoted set."""
-    from centimators_spark.ml.classification_metrics import (
-        gains_table_oracle_sql,
-    )
-    from centimators_spark.ml.metrics import ks_two_sample_oracle_sql
-    from centimators_spark.operators.finance import max_drawdown_oracle_sql
-    from centimators_spark.graphs import triangle_count_oracle_sql
-    from centimators_spark.text.classifier import (
-        linear_text_score_oracle_sql,
-    )
-    from centimators_spark.text.features import bm25_topk_oracle_sql
-    from centimators_spark.text.span_dedup import (
-        corpus_span_dedup_oracle_sql,
-    )
-
-    return {
-        "span_dedup": corpus_span_dedup_oracle_sql(w=8, min_docs=2),
-        "quality_classifier": linear_text_score_oracle_sql(
-            QUALITY_WEIGHTS, QUALITY_BIAS
-        ),
-        "max_drawdown": max_drawdown_oracle_sql(
-            "(SELECT *, CASE WHEN l_returnflag = 'R'"
-            " THEN -round(l_extendedprice * 100)"
-            " ELSE round(l_extendedprice * 100) END AS signed_cents"
-            " FROM lineitem)",
-            "signed_cents",
-            ORDER,
-            "l_suppkey",
-            out_by="l_suppkey",
-        ),
-        "ks_statistic": ks_two_sample_oracle_sql(
-            "lineitem",
-            "CAST(l_quantity AS BIGINT)",
-            "l_linestatus = 'O'",
-            "l_returnflag",
-            out_by="l_returnflag",
-        ),
-        "bm25_search": bm25_topk_oracle_sql(BM25_TERMS, k=10),
-        "gains_table": gains_table_oracle_sql(
-            "lineitem",
-            "CAST(round(l_discount * 100) AS BIGINT)",
-            "l_returnflag = 'R'",
-            n_buckets=10,
-        ),
-        "triangle_count": triangle_count_oracle_sql(
-            "(SELECT x.l_suppkey AS src, y.l_suppkey AS dst"
-            " FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
-            "       WHERE l_suppkey < 300) x"
-            " JOIN (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
-            "       WHERE l_suppkey < 300) y"
-            " USING (l_partkey)"
-            " WHERE x.l_suppkey < y.l_suppkey"
-            " GROUP BY 1, 2 HAVING count(*) >= 2)"
-        ),
-        "prospect_customers": """
-            SELECT c_nationkey,
-                   CAST(count(*) AS BIGINT) AS n_cust,
-                   CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS bal_cents
-            FROM customer c
-            WHERE c_nationkey IN (1, 3, 5, 7, 9)
-              AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-                               WHERE c_acctbal > 0)
-              AND NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_custkey = c.c_custkey
-                                AND o.o_orderdate >= TIMESTAMP '1999-01-01')
-            GROUP BY c_nationkey
-        """,
-        "part_share": """
-            WITH pr AS (
-              SELECT l_partkey,
-                     CAST(sum(round(l_extendedprice * 100)) AS BIGINT)
-                       AS rev_cents
-              FROM lineitem GROUP BY l_partkey
-            )
-            SELECT l_partkey, rev_cents FROM pr
-            WHERE rev_cents * 10000 > (SELECT sum(rev_cents) FROM pr) * 5
-        """,
-        "supplier_return_blame": """
-            WITH os AS (
-              SELECT l_orderkey, l_suppkey,
-                     max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                       AS ret
-              FROM lineitem GROUP BY l_orderkey, l_suppkey
-            ), per_order AS (
-              SELECT l_orderkey, count(*) AS n_supp, sum(ret) AS n_ret
-              FROM os GROUP BY l_orderkey
-            )
-            SELECT l_suppkey, CAST(count(*) AS BIGINT) AS numwait
-            FROM os JOIN per_order USING (l_orderkey)
-            WHERE n_supp >= 2 AND ret = 1 AND n_ret = 1
-            GROUP BY l_suppkey
-        """,
-    }
-
-
-def _promoted_r6_oracle_sql() -> dict[str, str]:
-    """Oracles for the round-5 staged queries promoted in round 6."""
-    from centimators_spark.analytics import interval_union_length_oracle_sql
-    from centimators_spark.operators.stats import weighted_median_oracle_sql
-    from centimators_spark.text.keywords import rake_keywords_oracle_sql
-
-    ev_us = ("(SELECT user_id, epoch_us(ts) AS s,"
-             " epoch_us(ts) + 300000000 AS e FROM events)")
-    return {
-        "rake_keywords": rake_keywords_oracle_sql(),
-        "active_time": interval_union_length_oracle_sql(
-            ev_us, "s", "e", "user_id", out_name="active_us"
-        ),
-        "weighted_median": weighted_median_oracle_sql(
-            "(SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,"
-            " CAST(round(l_extendedprice * 100) AS BIGINT) AS w"
-            " FROM lineitem)",
-            "qty", "w", "l_returnflag",
-        ),
-        "approx_distinct_contract": """
-            SELECT o_orderpriority,
-                   CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact,
-                   true AS sketch_within_band
-            FROM orders GROUP BY o_orderpriority
-        """,
-        "isotonic_contract": f"""
-            WITH s AS (
-              SELECT (l_quantity * 2 - 1) / 100 AS p,
-                     CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
-              FROM lineitem
-            )
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(0 AS BIGINT) AS n_violations,
-                   true AS min_ok, true AS max_ok,
-                   round(sum(y), 3) AS sum_fit
-            FROM s
-        """,
-        "cheapest_supplier": """
-            WITH cost AS (
-              SELECT l_partkey, l_suppkey,
-                     min(CAST(round(l_extendedprice * 100) AS BIGINT)
-                         // CAST(l_quantity AS BIGINT)) AS c
-              FROM lineitem GROUP BY l_partkey, l_suppkey
-            ), best AS (
-              SELECT l_partkey AS p_partkey,
-                     min({'c': c, 's': l_suppkey}) AS b
-              FROM cost GROUP BY l_partkey
-            )
-            SELECT p_partkey,
-                   CAST(b.s AS BIGINT) AS s_suppkey,
-                   CAST(b.c AS BIGINT) AS cost_cents_per_unit,
-                   s_name, n_name
-            FROM best
-            JOIN supplier ON b.s = s_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-        """,
-    }
-
-
-def _promoted_r5_oracle_sql() -> dict[str, str]:
-    """Oracles for the round-4 staged queries promoted this round."""
-    from centimators_spark.analytics import (
-        debounce_events_oracle_sql,
-        transition_counts_oracle_sql,
-    )
-    from centimators_spark.operators.drift import (
-        psi_drift_categorical_oracle_sql,
-    )
-    from centimators_spark.operators.stats import (
-        quantile_normalize_oracle_sql,
-    )
-    from centimators_spark.dedup.fuzzy import fuzzy_self_join_oracle_sql
-    from centimators_spark.sampling import sql_group_kfold
-    from centimators_spark.text.chunking import doc_sentences_oracle_sql
-
-    sql_group_kfold_text = (
-        sql_group_kfold("l_suppkey", 5, salt="gk1") + " AS fold"
-    )
-
-    return {
-        "linreg_fast_contract": relational_queries._LINREG_FAST_ORACLE,
-        "promo_revenue": relational_queries._PROMO_REVENUE_ORACLE,
-        "supplier_counts": relational_queries._SUPPLIER_COUNTS_ORACLE,
-        "psi_categorical": psi_drift_categorical_oracle_sql(
-            "orders",
-            {
-                "o_orderstatus": "o_orderstatus",
-                "o_orderpriority": "o_orderpriority",
-            },
-            f"o_orderdate < TIMESTAMP '{PSI_REF_DATE}'",
-        ),
-        "doc_sentences": doc_sentences_oracle_sql(),
-        "transition_counts": transition_counts_oracle_sql(),
-        "event_debounce": debounce_events_oracle_sql(
-            "events",
-            86400,
-            select_sql=(
-                "event_id, user_id, event_type,"
-                " CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_epoch"
-            ),
-        ),
-        "fuzzy_name_pairs": fuzzy_self_join_oracle_sql(
-            "(SELECT p_name, min(p_partkey) AS name_id FROM part"
-            " GROUP BY p_name)",
-            "p_name",
-            "name_id",
-            max_dist=2,
-        ),
-        "rolling_rank": f"""
-            WITH w10 AS (
-              SELECT l_orderkey, l_linenumber,
-                     CAST(l_quantity AS DOUBLE) AS q,
-                     array_agg(CAST(l_quantity AS DOUBLE)) OVER (
-                       PARTITION BY l_suppkey ORDER BY {_ORDER_SQL}
-                       ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS arr,
-                     count(l_quantity) OVER (
-                       PARTITION BY l_suppkey ORDER BY {_ORDER_SQL}
-                       ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS n
-              FROM lineitem
-            )
-            SELECT l_orderkey, l_linenumber,
-                   CAST(CASE WHEN n = 10 AND q IS NOT NULL THEN
-                     len(list_filter(arr, v -> v < q)) + 1 END AS INTEGER)
-                     AS l_quantity_rollrank10
-            FROM w10
-        """,
-        "group_kfold": f"""
-            SELECT l_orderkey, l_linenumber, l_suppkey,
-                   {sql_group_kfold_text}
-            FROM lineitem
-        """,
-        "quantile_normalize": quantile_normalize_oracle_sql(
-            "lineitem",
-            "l_extendedprice",
-            ref_cond_sql=f"l_shipdate < TIMESTAMP '{PSI_REF_DATE}'",
-            era_sql="date_trunc('month', l_shipdate)",
-            n_points=50,
-            order_sql=", ".join(
-                c for c in (_ORDER_SQL.split(", ")) if c != "l_extendedprice"
-            ),
-            select_sql="l_orderkey, l_linenumber",
-            out_name="qnorm",
-        ),
-    }
-
-
-def _promoted_oracle_sql() -> dict[str, str]:
-    from centimators_spark.ml.ensemble import rank_ensemble_oracle_sql
-    from centimators_spark.profile import table_profile_oracle_sql
-    from centimators_spark.text.divergence import corpus_divergence_oracle_sql
-
-    from centimators_spark.profile import heavy_hitters_oracle_sql
-    from centimators_spark.ml.feature_selection import (
-        mutual_information_oracle_sql,
-    )
-
-    from centimators_spark.text.line_filters import (
-        corpus_line_dedup_oracle_sql,
-    )
-
-    from centimators_spark.ml.conformal import conformal_quantiles_oracle_sql
-    from centimators_spark.sampling import sql_weighted_sample
-
-    return {
-        "melt_lineitem": """
-            SELECT l_orderkey, l_linenumber, feature, value
-            FROM (SELECT l_orderkey, l_linenumber, l_quantity,
-                         l_discount, l_tax FROM lineitem)
-            UNPIVOT INCLUDE NULLS
-              (value FOR feature IN (l_quantity, l_discount, l_tax))
-        """,
-        "weighted_sample": sql_weighted_sample(
-            "orders", 100, "o_totalprice", "o_orderkey", "ws1",
-            select_sql="o_orderkey, o_custkey, o_totalprice",
-        ),
-        "conformal_quantiles": conformal_quantiles_oracle_sql(
-            "(SELECT CAST(epoch(date_trunc('month', l_shipdate)) AS BIGINT)"
-            " AS era, l_quantity * 1000 AS pred,"
-            " l_extendedprice AS target FROM lineitem)",
-            "pred",
-            "target",
-            alpha=0.1,
-            era_sql="era",
-        ),
-        "asof_join_forward": """
-            WITH views AS (
-              SELECT event_id, user_id, ts, value FROM events
-              WHERE event_type = 'view'
-            ), purchases AS (
-              SELECT user_id, ts, max(value) AS pvalue FROM events
-              WHERE event_type = 'purchase' GROUP BY user_id, ts
-            ), nxt AS (
-              SELECT v.event_id, v.user_id, v.ts, v.value,
-                     min(p.ts) AS pts
-              FROM views v
-              LEFT JOIN purchases p
-                ON v.user_id = p.user_id AND p.ts >= v.ts
-              GROUP BY v.event_id, v.user_id, v.ts, v.value
-            )
-            SELECT n.event_id, n.user_id,
-                   CAST(epoch(date_trunc('second', n.ts)) AS BIGINT)
-                     AS ts_epoch,
-                   n.value,
-                   CAST(epoch(date_trunc('second', n.pts)) AS BIGINT)
-                     AS next_purchase_ts_epoch,
-                   p2.pvalue AS next_purchase_value
-            FROM nxt n
-            LEFT JOIN purchases p2
-              ON n.user_id = p2.user_id AND n.pts = p2.ts
-        """,
-        "line_dedup": corpus_line_dedup_oracle_sql(),
-        "mutual_information": mutual_information_oracle_sql(
-            "lineitem",
-            {
-                "qty_bin": "CAST(floor(l_quantity / 10) AS INTEGER)",
-                "disc_bin": "CAST(round(l_discount * 100) AS INTEGER)",
-                "tax_bin": "CAST(round(l_tax * 100) AS INTEGER)",
-            },
-            "l_returnflag",
-        ),
-        "heavy_hitters": heavy_hitters_oracle_sql(
-            "orders", "o_orderpriority", min_share=0.05
-        ),
-        "corpus_divergence": corpus_divergence_oracle_sql(),
-        "rank_ensemble": rank_ensemble_oracle_sql(
-            "(SELECT l_orderkey, l_linenumber,"
-            " CAST(epoch(date_trunc('month', l_shipdate)) AS BIGINT) AS era,"
-            " l_quantity AS m1, l_extendedprice AS m2 FROM lineitem)",
-            ["m1", "m2"],
-            era_sql="era",
-            select_sql="l_orderkey, l_linenumber, era",
-            weights=[2, 1],
-        ),
-        "table_profile": table_profile_oracle_sql(
-            "documents",
-            ["doc_id", "lang", "source", "n_chars"],
-            ["doc_id", "n_chars"],
-        ),
-        "validate_orders": """
-            WITH g AS (
-              SELECT count(*) AS n,
-                     count(o_orderkey) AS nn_k,
-                     count(DISTINCT o_orderkey) AS nd_k,
-                     count(CASE WHEN o_totalprice IS NOT NULL
-                           AND o_totalprice < 0 THEN 1 END) AS v_range,
-                     count(CASE WHEN o_orderstatus IS NOT NULL
-                           AND o_orderstatus NOT IN ('F','O','P') THEN 1 END)
-                       AS v_set,
-                     count(CASE WHEN o_orderpriority IS NOT NULL
-                           AND NOT regexp_matches(o_orderpriority, '^[1-5]-')
-                           THEN 1 END) AS v_re
-              FROM orders
-            ), fk AS (
-              SELECT count(*) AS v_fk FROM orders
-              WHERE o_custkey IS NOT NULL
-                AND o_custkey NOT IN (SELECT c_custkey FROM customer)
-            )
-            SELECT 'not_null' AS check, 'o_orderkey' AS column,
-                   (n - nn_k) = 0 AS passed, n - nn_k AS n_violations FROM g
-            UNION ALL
-            SELECT 'unique', 'o_orderkey', (nn_k - nd_k) = 0, nn_k - nd_k
-            FROM g
-            UNION ALL
-            SELECT 'in_range', 'o_totalprice', v_range = 0, v_range FROM g
-            UNION ALL
-            SELECT 'in_set', 'o_orderstatus', v_set = 0, v_set FROM g
-            UNION ALL
-            SELECT 'matches', 'o_orderpriority', v_re = 0, v_re FROM g
-            UNION ALL
-            SELECT 'foreign_key', 'o_custkey', v_fk = 0, v_fk FROM fk
-        """,
-    }
-
-
-# ---------------------------------------------------------------- r11+
-# staged additions (post-promotion work of round 10): theta A-NOT-B,
-# explicit TPC-H Q4/Q6, and the cross-modal composed flagship.
 
 MMCLEAN_MIN_TOKENS = 20
 MMCLEAN_PREFIX_TOKENS = 4

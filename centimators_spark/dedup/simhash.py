@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from centimators_spark.text.portable import SIMHASH_BITS, md5_long, simhash, tokens
+from centimators_spark.text.portable import SIMHASH_BITS
 
 
 def simhash_fingerprints(
@@ -76,22 +76,6 @@ def simhash_fingerprints(
             )
 
     return narrow.mapInPandas(compute, schema)
-
-
-def simhash_fingerprints_expr(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Pure-expression reference implementation (semantic spec)."""
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(tokens(F.col(content_col))).alias("tok"),
-    ).where(F.size("tok") > 0)
-    hashed = tok.withColumn("hashes", F.transform("tok", md5_long))
-    return hashed.select(
-        "doc_id",
-        F.size("tok").cast("long").alias("n_tokens"),
-        simhash(F.col("hashes")).alias("simhash"),
-    )
 
 
 def simhash_pairs(

@@ -210,7 +210,14 @@ def reduce_exposure_factored(
 
 
 class FeaturePenalizer(EraKernelTransformer):
-    """Spark port of the reference FeaturePenalizer (see module doc)."""
+    """Spark port of the reference FeaturePenalizer (see module doc).
+
+    Filter the input, not the output. A ``.where`` on the output is
+    pushed under the row side of ``global_min_max_scale`` only, so each
+    era bucket's Adamax kernel runs twice. A filtered input is scored on
+    the kept rows alone (per-era fits and min-max bounds cover only
+    those rows); to keep full-frame scaling and select rows, cut the
+    output first (write it, or ``localCheckpoint``) and filter that."""
 
     def __init__(
         self,

@@ -925,53 +925,6 @@ def q_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ordered for the driver's 50-entry correctness window (see
-# __spark_entry__.queries()): rows-only / composite queries first, the
-# simplest longest-stable single-table queries last so they are the ones
-# that fall past the window if the total exceeds 50
-QUERIES = {
-    "doc_chunks": q_doc_chunks,
-    "char_entropy": q_char_entropy,
-    "token_positions": q_token_positions,
-    "unigram_lm": q_unigram_lm,
-    "text_normalize": q_text_normalize,
-    "url_dedup": q_url_dedup,
-    "stratified_sample": q_stratified_sample,
-    "feature_hash": q_feature_hash,
-    "semantic_dedup": q_semantic_dedup,
-    "temperature_mixture": q_temperature_mixture,
-    "embedding_transformer": q_embedding_transformer,
-    "dim_reducer_pca": q_dim_reducer_pca,
-    "corpus_clean": q_corpus_clean,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_clusters": q_dedup_clusters,
-    "simhash_fingerprint": q_simhash_fingerprint,
-    "simhash_pairs": q_simhash_pairs,
-    "ann_rp_lsh": q_ann_rp_lsh,
-    "ann_rp_lsh_recall": q_ann_rp_lsh_recall,
-    "pq_recall_contract": q_pq_recall_contract,
-    "ivfpq_recall_contract": q_ivfpq_recall_contract,
-    "ivfpq_pruned_contract": q_ivfpq_pruned_contract,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "mixture_sample": q_mixture_sample,
-    "text_repetition": q_text_repetition,
-    "ngram_contamination": q_ngram_contamination,
-    "text_pii_mask": q_text_pii_mask,
-    "text_c4_filters": q_text_c4_filters,
-    "text_language_id": q_text_language_id,
-    "text_quality_score": q_text_quality_score,
-    "tfidf_topk": q_tfidf_topk,
-    "doc_fingerprint": q_doc_fingerprint,
-    "text_token_counts": q_text_token_counts,
-    "multimodal_metadata": q_multimodal_metadata,
-    "hash_split_sample": q_hash_split_sample,
-    "pack_sequences": q_pack_sequences,
-}
-
-
 # ---------------------------------------------------------------- oracles
 
 def _mixture_sample_oracle() -> str:

@@ -1088,45 +1088,6 @@ _DISJUNCTIVE_REVENUE_ORACLE = """
 """
 
 
-QUERIES = {
-    "era_report": q_era_report,
-    "autocorrelation": q_autocorrelation,
-    "one_hot_segments": q_one_hot_segments,
-    "grouping_sets_revenue": q_grouping_sets_revenue,
-    "window_navigation": q_window_navigation,
-    "interval_band_join": q_interval_band_join,
-    "events_interval_join": q_events_interval_join,
-    "event_funnel": q_event_funnel,
-    "retention_cohorts": q_retention_cohorts,
-    "above_avg_orders": q_above_avg_orders,
-    "range_frame_sums": q_range_frame_sums,
-    "cube_revenue": q_cube_revenue,
-    "string_agg_segment": q_string_agg_segment,
-    "pivot_revenue": q_pivot_revenue,
-    "distinct_counts": q_distinct_counts,
-    "volume_shipping": q_volume_shipping,
-    "large_orders": q_large_orders,
-    "salted_join": q_salted_join,
-    "spearman_by_month": q_spearman_by_month,
-    "asof_join": q_asof_join,
-    "sql_returned_revenue": q_sql_returned_revenue,
-    "full_outer_activity": q_full_outer_activity,
-    "rollup_revenue": q_rollup_revenue,
-    "set_ops_customers": q_set_ops_customers,
-    "exists_customers": q_exists_customers,
-    "doc_string_funcs": q_doc_string_funcs,
-    "window_distribution": q_window_distribution,
-    "events_percentiles": q_events_percentiles,
-    "linear_regression": q_linear_regression,
-    "events_windowed_counts": q_events_windowed_counts,
-    "events_sessionize": q_events_sessionize,
-    "events_json_extract": q_events_json_extract,
-    "top_orders_per_segment": q_top_orders_per_segment,
-    "shipping_priority": q_shipping_priority,
-    "regional_revenue": q_regional_revenue,
-}
-
-
 def _ols_oracle_sql() -> str:
     """Mirror of q_linear_regression: exact decimal Gram sums + the SAME
     Cramer expression the Spark side evaluates (ml/cramer.py)."""

@@ -1,8 +1,10 @@
 """Portable (cross-engine deterministic) text/hash primitives.
 
-Every definition here exists twice: a Spark Column builder and a DuckDB
-SQL snippet builder, constructed from the SAME constants so that the
-engine and the correctness oracle compute bit-identical values:
+Spark Column builders and DuckDB SQL snippet builders, constructed
+from the SAME constants so that the engine and the correctness oracle
+compute bit-identical values. MinHash and SimHash have only their SQL
+side here; their Spark side is the numpy kernels in text/hashing_udf.py
+and dedup/simhash.py, which read the same constants:
 
 - tokenization: lowercase, split on runs of spaces, drop empties
 - token n-grams: space-joined consecutive tokens, de-duplicated
@@ -84,39 +86,6 @@ def token_ngrams(tok: Column, n: int = 3) -> Column:
 def md5_long(col: Column) -> Column:
     """Stable 60-bit hash: first 15 hex chars of md5 as BIGINT."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def gram_hashes(grams: Column) -> Column:
-    """md5_long of each gram, reduced mod 2^31−1 (minhash base domain)."""
-    return F.transform(grams, lambda g: md5_long(g) % MERSENNE31)
-
-
-def minhash_signature(hashes: Column) -> list[Column]:
-    """NUM_PERM minhash values; empty gram set → MERSENNE31 sentinel."""
-    sig = []
-    for a, b in zip(PERM_A, PERM_B):
-        perm = F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31)
-        sig.append(
-            F.coalesce(F.array_min(perm), F.lit(MERSENNE31)).cast("long")
-        )
-    return sig
-
-
-def simhash(hashes: Column) -> Column:
-    """60-bit SimHash over a hash array: bit j set iff Σ(2·bit_j(h)−1) > 0."""
-    total = F.lit(0).cast("long")
-    n = F.size(hashes)
-    for j in range(SIMHASH_BITS):
-        ones = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1)),
-        )
-        # majority of bits set: 2*ones > n
-        total = total + F.when(ones * 2 > n, F.lit(2**j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return total
 
 
 # ------------------------------------------------------------ DuckDB side

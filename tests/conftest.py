@@ -1,6 +1,14 @@
+import sys
+from pathlib import Path
+
 import pytest
 
-from centimators_spark.session import get_spark
+# the checkout this file belongs to: its root (bench, __spark_entry__)
+# and tools/ (check_oracle) import ahead of any other copy
+ROOT = Path(__file__).resolve().parents[1]
+sys.path[:0] = [str(ROOT), str(ROOT / "tools")]
+
+from centimators_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

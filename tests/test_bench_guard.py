@@ -10,9 +10,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import bench  # noqa: E402
+import bench
 
 
 def test_pick_outliers_selects_loaded_host_reading():

@@ -60,21 +60,30 @@ def test_contract_shape():
     assert set(o) <= set(q)
     # every query key is a plain identifier (driver uses them as names)
     assert all(k.replace("_", "").isalnum() for k in q)
+    # only the rows-only kernels go without an oracle
+    assert set(q) - set(o) == {
+        "feature_neutralizer",
+        "feature_penalizer",
+        "dim_reducer_pca",
+        "ann_rp_lsh",
+    }
+    staged = entrymod.staged_queries()
+    assert set(staged) == set(entrymod.staged_oracle_sql())
+    assert not set(staged) & set(q)
 
 
 def test_unverified_queries_inside_driver_window():
     """The driver's correctness pass checks the first 50 queries()
-    entries. Everything never driver-verified (this round: the 23
-    promoted round-8 staged queries) must sit inside that window, plus
-    the round-8 regression-guard rotation of r3/r4-era greens never
-    re-checked since; only long-stable green queries may overflow.
+    entries. The 11 queries no driver run has verified sit at the head,
+    and the oldest-verified greens fill the rest of the window; only
+    previously verified queries may overflow.
     test_correctness_window_covers_unverified_queries enforces the
     same invariant dynamically from the CORRECTNESS_r*.json history;
-    this static set documents the current round's intent."""
+    this static set pins the intent of the current order."""
     names = list(entrymod.queries())
     window = set(names[:50])
     must_check = {
-        # never driver-verified (promoted this round — r12 verdict item 1)
+        # never driver-verified
         "dsir_budget_select",
         "join_skew_audit",
         "theil_sen_trend",
@@ -85,12 +94,11 @@ def test_unverified_queries_inside_driver_window():
         "purged_kfold",
         "join_size_estimate",
         "timed_funnel",
-        # new this round: the NULL-order-key gate contract
-        # (r12 verdict item 2a)
+        # the NULL-order-key gate contract, never driver-verified
         "event_paths_nullts",
-        # drift re-verification: the r12 rotation debt — the r8-era
-        # remainder, the r9-era pool, and the r10-era promotions
-        # (ledger in queries()'s docstring); spot members of each era
+        # drift re-verification of the oldest-verified greens, written
+        # into queries() after the head; spot members of the r8-, r9-
+        # and r10-era pools
         "feature_corr_matrix",
         "xicor_by_month",
         "top_supplier",
@@ -115,10 +123,7 @@ def test_compare_flags_int_float_dtype_mismatch():
     when values coerce equal — the exact bug class that shipped
     session_ids red in r2 (DuckDB HUGEINT → pandas float64 vs Spark
     int64 hashing differently at the driver)."""
-    import sys
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     spark_pdf = pd.DataFrame({"k": [1, 2], "v": pd.Series([2, 3], dtype="int64")})
@@ -141,12 +146,8 @@ def test_panel_features_materialize_param(spark):
     """The flagship's contract form cuts its OLS residuals with one
     eager localCheckpoint: it matches the DuckDB oracle, leaves no
     persisted plan in Spark's CacheManager, and takes no cut option."""
-    import pathlib
-    import sys
-
     import pytest
 
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
     from check_oracle import compare
 
     spark.catalog.clearCache()
@@ -174,7 +175,8 @@ def test_correctness_window_covers_unverified_queries():
 
     q = list(m.queries())
     verified = {}
-    for p in sorted(pathlib.Path("/root/repo").glob("CORRECTNESS_r*.json")):
+    root = pathlib.Path(__file__).resolve().parents[1]
+    for p in sorted(root.glob("CORRECTNESS_r*.json")):
         for k, row in json.loads(p.read_text()).items():
             if row.get("hash_match") or row.get("err") == "no_oracle":
                 verified[k] = True

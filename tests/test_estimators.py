@@ -22,6 +22,8 @@ from centimators_spark.ml.estimators import (
 from centimators_spark.ml.keras_cortex import KerasCortex
 from centimators_spark.ml.losses import soft_spearman_loss_np, spearman_corr
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+
 
 def test_linear_regressor_matches_lstsq(spark):
     rng = np.random.default_rng(42)
@@ -322,10 +324,8 @@ def test_mlp_forward_pass_pins_target_scaling(spark):
         # file spelling of the stub so their import resolves too
         import tests.stub_pyfiles  # noqa: F401  (asserts the dir exists)
 
-        spark.sparkContext.addPyFile(
-            "/root/repo/tests/stub_pyfiles/keras.py"
-        )
-        spark.sparkContext.addPyFile("/root/repo/tests/keras_stub.py")
+        spark.sparkContext.addPyFile(os.path.join(HERE, "stub_pyfiles", "keras.py"))
+        spark.sparkContext.addPyFile(os.path.join(HERE, "keras_stub.py"))
         from centimators_spark.ml.estimators import MLPRegressor
 
         rows = [
@@ -383,8 +383,8 @@ def _stub_keras(spark):
     try:
         import tests.stub_pyfiles  # noqa: F401
 
-        spark.sparkContext.addPyFile("/root/repo/tests/stub_pyfiles/keras.py")
-        spark.sparkContext.addPyFile("/root/repo/tests/keras_stub.py")
+        spark.sparkContext.addPyFile(os.path.join(HERE, "stub_pyfiles", "keras.py"))
+        spark.sparkContext.addPyFile(os.path.join(HERE, "keras_stub.py"))
         yield ks
     finally:
         for name in [

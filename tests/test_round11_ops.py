@@ -81,9 +81,6 @@ def test_image_phash_dedup_matches_oracle_small(spark):
     oracle on a 40-doc corpus — the staged-gate compare in miniature."""
     import duckdb
     import pandas as pd
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.multimodal.phash import (
@@ -182,9 +179,6 @@ def test_theta_sketch_two_phase_topk_equals_one_phase(spark):
     contains the global top-k)."""
     import duckdb
     import pandas as pd
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.sketches import (
@@ -280,9 +274,6 @@ def test_video_phash_dedup_matches_oracle_small(spark):
     DuckDB oracle on a 40-doc corpus."""
     import duckdb
     import pandas as pd
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.multimodal.videofp import (
@@ -358,12 +349,9 @@ def test_theta_a_not_b_exact_when_k_exceeds_cardinality(spark):
 def test_theta_a_not_b_subsampled_matches_oracle(spark):
     """Real subsampling (k=16): the anti-join sketch path must equal
     the DuckDB NOT EXISTS mirror bit for bit."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.sketches import (
@@ -572,12 +560,9 @@ def test_winnowing_guarantee_and_oracle(spark):
     """Winnowing MUST find any shared token run of >= w+k-1 tokens
     (the MOSS guarantee), must NOT fingerprint docs shorter than a
     full window, and must match the DuckDB mirror bit for bit."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.dedup.winnowing import (
@@ -633,12 +618,9 @@ def test_duplicated_spans_islands_and_oracle(spark):
     tokens (3 overlapping 8-grams merged into ONE island); two
     repeats inside one doc give two islands; clean and too-short docs
     report zero — and the whole profile matches the DuckDB twin."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.dedup.substring import (
@@ -680,12 +662,9 @@ def test_single_changepoint_hand_trace_and_oracle(spark):
     """cp at the true mean shift; a constant series degenerates to
     d_max == d_base with the tie-break at index 1; singleton groups
     emit nothing; Spark == DuckDB."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.operators.drift import (
@@ -768,12 +747,9 @@ def test_hll_portable_regimes_and_oracle(spark):
     within the 1.04/sqrt(64) error bound), linear counting (small
     groups — exact here because every item lands in its own
     register), and the Spark==DuckDB bit-for-bit match."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.sketches import (
@@ -827,13 +803,10 @@ def test_hll_union_merge_and_oracle(spark):
     bound of the exact union, inclusion-exclusion witness correct,
     B-only registers NOT dropped (the one-sided-join hazard), and
     Spark == DuckDB."""
-    import sys
 
     import duckdb
     import numpy as np
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.sketches import (
@@ -868,12 +841,9 @@ def test_bootstrap_ci_deterministic_and_oracle(spark):
     band is identical across runs, contains the point mean, zero-
     weight replicates are dropped for tiny groups — and the whole
     contract matches the DuckDB twin."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.ml.bootstrap import (
@@ -931,12 +901,9 @@ def test_mann_whitney_hand_trace_and_oracle(spark):
     a cross-side tie); one-sided groups are omitted; variance
     carriers reduce to the classic n_a*n_b*(n+1)/12 when untied;
     Spark == DuckDB."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.operators.mwu import (
@@ -979,12 +946,9 @@ def test_sprt_decisions_hand_trace(spark):
     boundary group keeps sampling; LLR is the exact integer
     k*l1 + (n-k)*l0; Spark == DuckDB."""
     import math
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.ml.abtest import (
@@ -1019,12 +983,9 @@ def test_brown_forsythe_hand_cases_and_oracle(spark):
     """Wide-vs-tight spread yields a large F; identical spreads yield
     F = 0 even with different means; a single class yields a null F;
     Spark == DuckDB."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.operators.mwu import (
@@ -1063,12 +1024,9 @@ def test_review_fixes_negative_and_null_parity(spark):
     excludes NULL values identically on both engines; (3) the exact
     Brown-Forsythe near-homogeneous case whose floored ssb went
     negative now agrees across engines (clamped at 0)."""
-    import sys
 
     import duckdb
     import pandas as pd
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     from centimators_spark.ml.bootstrap import (
@@ -1128,13 +1086,10 @@ def test_advice_fixes_r11(spark):
     discipline); (3) bootstrap excludes NULL-valued rows on both
     engines (no silent weight dilution of the means); (4) the
     hll_union oracle derives its register universe from HLL_M."""
-    import sys
 
     import duckdb
     import pandas as pd
     import pytest
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     import centimators_spark.operators.mwu as mwu_mod
@@ -1203,11 +1158,8 @@ def test_signed_gate_contracts(spark):
     deliberate floor-for-truncate swap produces DIFFERENT values —
     i.e. the driver gate would turn red on exactly the parity class
     the round-10 self-review caught."""
-    import sys
 
     import duckdb
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
 
     import __spark_entry__ as entrymod

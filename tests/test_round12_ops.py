@@ -1,12 +1,8 @@
 """Round-12 operator tests: multi-resolution duplicated-span profile."""
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo/tools")
 
 
 def test_duplicated_spans_multi_hand_trace_and_oracle(spark):

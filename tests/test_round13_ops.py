@@ -2,14 +2,10 @@
 parity on adversarial micro-fixtures (NULLs, ties, negatives — the
 regimes the positive-valued gate fixtures cannot see)."""
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo/tools")
 
 
 def _compare(name, sdf, odf):

@@ -3,14 +3,10 @@ parity on adversarial micro-fixtures (deletes, re-inserts, no-op
 updates, inserts of unseen keys — the regimes the gate fixture's
 order stream only partially covers)."""
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo/tools")
 
 
 def _compare(name, sdf, odf):

@@ -18,9 +18,6 @@ def test_staged_queries_match_oracles(spark):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
         )
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare  # the REAL gate: dtype-kind strict
 
     queries = entrymod.staged_queries()

@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [--staged] [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -17,7 +18,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from centimators_spark.io import TABLES  # noqa: E402
 from centimators_spark.session import get_spark  # noqa: E402

@@ -16,12 +16,13 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
 BASE = "/root/testdata/sf0.001"
-TGT = "/root/repo/.degenerate_sf"
+TGT = os.path.join(REPO, ".degenerate_sf")
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

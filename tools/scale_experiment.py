@@ -404,12 +404,13 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-TGT = "/root/repo/.scale10_sf"
+TGT = os.path.join(REPO, ".scale10_sf")
 QS = [
     "rank_transformer", "lag_transformer", "neutralize_ols_era",
     "winsorize_by_era", "dedup_minhash_lsh", "corpus_clean",
