@@ -16,21 +16,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# edge sets up to this many rows run the exact union-find on the driver
+# (~80 MB at the cap, the size of a modest broadcast build side)
+_DRIVER_EDGE_CAP = 5_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
     a: str = "d1",
     b: str = "d2",
-    driver_edge_cap: int = 5_000_000,
 ) -> DataFrame:
     """(node, cluster) for every node in `pairs`; cluster = min node id
     of its component.
 
     Adaptive strategy, same spirit as Spark's broadcast threshold: the
     near-dup EDGE set after LSH banding is orders of magnitude smaller
-    than the corpus, so when it fits `driver_edge_cap` rows the exact
-    union-find runs on the driver in one pass (no iterative jobs — at
-    5M edges that is ~80 MB, the size of a modest broadcast build side).
+    than the corpus, so when it fits `_DRIVER_EDGE_CAP` rows the exact
+    union-find runs on the driver in one pass (no iterative jobs).
     Larger edge sets take the distributed min-label-propagation fixpoint
     (O(component diameter) rounds of hash-partitioned joins).
 
@@ -38,16 +41,28 @@ def connected_components(
     eager localCheckpoint: the loop re-reads the edge list every round,
     and each round references the previous labels twice, so an unpinned
     loop doubles the logical plan per round."""
-    # pin the edge list once — the fixpoint loop re-reads it every
-    # round and `pairs` is usually an expensive lazy plan (LSH + verify)
-    edges = (
+    edges = _edge_list(pairs, a, b)
+    if edges.count() <= _DRIVER_EDGE_CAP:
+        return _driver_union_find(edges)
+    return _min_label_fixpoint(edges, max_iter)
+
+
+def _edge_list(pairs: DataFrame, a: str = "d1", b: str = "d2") -> DataFrame:
+    """Symmetric, distinct (src, dst) edges, pinned once: the fixpoint
+    loop re-reads them every round and `pairs` is usually an expensive
+    lazy plan (LSH + verify)."""
+    return (
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_edge_cap and edges.count() <= driver_edge_cap:
-        return _driver_union_find(edges)
+
+
+def _min_label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed min-label propagation over a symmetric (src, dst)
+    edge list: every round each node takes the minimum label among
+    itself and its neighbors, until no label changes."""
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "cluster", F.col("node")
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from centimators_spark.scanstats import spread_if_underpartitioned
 from centimators_spark.text.portable import md5_long, sql_md5_long
 
 # floor(2^20 * P(Poisson(1) <= k)) for k = 0..7; weight = #thresholds
@@ -317,22 +318,6 @@ def _perm_partial_fn(B: int):
     return gen
 
 
-def _maybe_repartition(df: DataFrame) -> DataFrame:
-    """The one-pass replicate aggregations (2B+2 buffers) are the whole
-    cost of this module's operators; a single-row-group local file
-    scans as ONE task and serializes them (measured 3.6 s -> 2.2 s warm
-    at sf0.1 with 32 cores). Gate exactly like era-OLS: a
-    well-partitioned 100 TB scan must never eat an extra shuffle before
-    a map-side-partial agg."""
-    from centimators_spark.scanstats import estimated_scan_partitions
-
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    est = estimated_scan_partitions(df)
-    if est is not None and est < parallelism:
-        df = df.repartition(parallelism)
-    return df
-
-
 def _trunc_mean(num, den):
     """TRUNCATING division toward zero in micro-units — the spec shared
     with the oracle's HUGEINT // (which truncates); a pmod-based floor
@@ -389,10 +374,12 @@ def bootstrap_mean_ci(
       where the Python boundary is unavailable."""
     if kernel not in ("arrow", "expr"):
         raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
-    df = df.where(
-        F.col(value_col).isNotNull() & F.col(id_col).isNotNull()
+    df = spread_if_underpartitioned(
+        df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull()),
+        group_col,
+        id_col,
+        value_col,
     )
-    df = _maybe_repartition(df)
     cents = F.round(F.col(value_col) * 100).cast("long")
     grp_type = df.select(
         F.col(group_col).alias("grp")
@@ -523,10 +510,12 @@ def permutation_sign_test(
         raise ValueError("permutation_sign_test supports B <= 60")
     if kernel not in ("arrow", "expr"):
         raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
-    df = df.where(
-        F.col(value_col).isNotNull() & F.col(id_col).isNotNull()
+    df = spread_if_underpartitioned(
+        df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull()),
+        group_col,
+        id_col,
+        value_col,
     )
-    df = _maybe_repartition(df)
     cents = F.round(F.col(value_col) * 100).cast("long")
     grp_type = df.select(
         F.col(group_col).alias("grp")

@@ -44,8 +44,8 @@ from centimators_spark.functions.normal import gaussianize, ordinal_uniform
 
 
 from centimators_spark.scanstats import (
-    estimated_scan_partitions,
     local_input_bytes,
+    spread_if_underpartitioned,
 )
 
 
@@ -241,7 +241,8 @@ def era_ols_neutralize(
 
     ``materialize``: "localCheckpoint" always cuts the residual frame
     with an eager localCheckpoint; "auto" (default) cuts it only when
-    the input is under-partitioned and at least _MATERIALIZE_BYTES."""
+    spread_if_underpartitioned spreads the input and the input is at
+    least _MATERIALIZE_BYTES."""
     if materialize not in ("auto", "localCheckpoint"):
         raise ValueError(
             f"materialize must be auto|localCheckpoint, got {materialize!r}"
@@ -262,48 +263,20 @@ def era_ols_neutralize(
         *[F.col(f).cast("double").alias(f"f{i}") for i, f in enumerate(feats)],
         F.col(pred_name).cast("double").alias("y"),
     )
-    # spread the decimal Gram work across cores — single-row-group local
-    # files scan as one task, and decimal sums are order-independent.
-    # Only when the input is UNDER-partitioned: a well-partitioned 100 TB
-    # scan must not eat a full extra shuffle before a map-side-partial agg.
-    # The estimate reads file sizes + spark.sql.files settings — never
-    # df.rdd.getNumPartitions(), which forces a DataFrame→RDD conversion
-    # (an extra plan materialization) on every call.
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    est = estimated_scan_partitions(base)
-    gated = est is not None and est < parallelism
-    # the residual lineage feeds multiple consumers (era std, global
-    # min-max, output projection). When the repartition gate fires the
-    # lineage contains an explicit shuffle, and re-executing it per
-    # consumer measured 54s at 10x data (6M rows) vs 15s with one
-    # localCheckpoint cut. Checkpoint blocks are per-instance and
-    # ContextCleaner-freed, so a later rebuild of the same query never
-    # reads this run's blocks. On a well-partitioned cluster scan (gate
-    # off) the lineage is a pruned scan + broadcast join, and
-    # re-scanning into map-side-partial aggs beats materializing the
-    # residual table. Even when the gate fires, a SMALL input
-    # (< _MATERIALIZE_BYTES) re-executes cheaper than it checkpoints —
-    # the deterministic key already collapses the consumers onto one
-    # reused exchange.
-    if materialize == "auto":
-        nbytes = local_input_bytes(df)
-        cut = gated and (nbytes is None or nbytes >= _MATERIALIZE_BYTES)
-    else:
-        cut = True
-    if gated:
-        # hash on a DETERMINISTIC synthetic key (xxhash64 of the whole
-        # projected row): round-robin repartition(n) local-sorts every
-        # row first (sortBeforeRepartition) — measured 1.8× slower —
-        # and monotonically_increasing_id is NONDETERMINISTIC, which
-        # blocks ReusedExchange: this operator's lineage feeds FOUR
-        # consumers (era Gram, era std, global min-max, output
-        # projection), and with a nondeterministic key each consumer
-        # re-executed the full scan+shuffle (measured 12.7x at 10x
-        # data instead of ~2x). A deterministic key makes the four
-        # exchanges identical, so Spark plans ONE shuffle and reuses
-        # it. Decimal Gram sums are order-independent, so any spread
-        # is equally correct.
-        base = base.repartition(parallelism, F.xxhash64(*base.columns))
+    # spread the decimal Gram work across cores (decimal sums are
+    # order-independent). The residual lineage feeds three consumers
+    # (era std, global min-max, output projection); the spread's
+    # deterministic key collapses them onto one reused exchange, and an
+    # eager localCheckpoint cut pays only at or above _MATERIALIZE_BYTES
+    # (measured 54 s uncut vs 15 s cut at 10x data, 6M rows). An input
+    # the gate leaves alone is a pruned scan + broadcast join, which
+    # re-scans into map-side-partial aggs cheaper than it checkpoints.
+    spread = spread_if_underpartitioned(base)
+    cut = materialize == "localCheckpoint" or (
+        spread is not base
+        and (local_input_bytes(df) or 0) >= _MATERIALIZE_BYTES
+    )
+    base = spread
     gram = base.groupBy(era_col).agg(
         *[
             F.expr(expr).alias(name)

@@ -6,8 +6,8 @@ Reference (/root/reference/src/centimators/feature_transformers/stats.py:
 has fewer columns than the stat's minimum (mean/range 1, std/cv 2,
 skew 3, kurtosis 4).
 
-Spark plan: a single `select` of pure column arithmetic (see
-functions/horizontal.py) — row-local, zero shuffles, whole-stage codegen.
+Spark plan: staged `select`s of pure column arithmetic (see
+`_staged_group_stats`) — row-local, zero shuffles, whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -18,16 +18,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 
 from centimators_spark.base import PanelTransformer
-from centimators_spark.functions import horizontal as H
 
-_STAT_FNS = {
-    "mean": H.mean_horizontal,
-    "std": H.std_horizontal,
-    "skew": H.skew_horizontal,
-    "kurt": H.kurtosis_horizontal,
-    "range": H.range_horizontal,
-    "cv": H.coefficient_of_variation_horizontal,
-}
+_STATS = ("mean", "std", "skew", "kurt", "range", "cv")
 
 # long-form spellings accepted for convenience; canonical names (and the
 # emitted column suffixes) are the reference's short forms (stats.py:67)
@@ -158,11 +150,11 @@ class GroupStatsTransformer(PanelTransformer):
     ):
         super().__init__(None, output_mode=output_mode, keep_cols=keep_cols)
         self.feature_group_mapping = {k: list(v) for k, v in feature_group_mapping.items()}
-        raw = list(stats) if stats else list(_STAT_FNS)
+        raw = list(stats) if stats else list(_STATS)
         self.stats = [_STAT_ALIASES.get(s, s) for s in raw]
-        bad = [s for s in self.stats if s not in _STAT_FNS]
+        bad = [s for s in self.stats if s not in _STATS]
         if bad:
-            raise ValueError(f"invalid stats {bad}; valid: {sorted(_STAT_FNS)}")
+            raise ValueError(f"invalid stats {bad}; valid: {sorted(_STATS)}")
         for group, cols in self.feature_group_mapping.items():
             for s in self.stats:
                 if len(cols) < _MIN_COLS[s]:
@@ -176,14 +168,6 @@ class GroupStatsTransformer(PanelTransformer):
         return _staged_group_stats(
             df, self.feature_group_mapping, self.stats, passthrough
         )
-
-    def _derived_columns(self, df: DataFrame) -> list[Column]:  # pragma: no cover
-        # kept for API completeness; _transform uses the staged plan
-        return [
-            _STAT_FNS[s](cols).alias(f"{group}_groupstats_{s}")
-            for group, cols in self.feature_group_mapping.items()
-            for s in self.stats
-        ]
 
     def get_feature_names_out(self) -> list[str]:
         return [

@@ -20,6 +20,7 @@ from centimators_spark.dedup import (
     simhash_fingerprints,
 )
 from centimators_spark.io import load_table
+from centimators_spark.scanstats import spread_if_underpartitioned
 from centimators_spark.similarity.ann import brute_force_topk, embedding_cosine_pairs
 from centimators_spark.text import portable as P
 from centimators_spark.dedup.contamination import contamination_oracle_sql
@@ -91,15 +92,18 @@ def q_dim_reducer_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     from centimators_spark.operators.dimreduction import DimReducer
 
     li = load_table(spark, sf_dir, "lineitem")
+    feats = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     t = DimReducer(
         "pca",
         n_components=2,
-        feature_names=["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
+        feature_names=feats,
         keep_cols=["l_orderkey", "l_linenumber"],
     )
-    # the local single-row-group file scans as ONE task; spread the
-    # covariance aggregation (sums are commutative — result unchanged)
-    t.fit(li.repartition(spark.sparkContext.defaultParallelism))
+    # spread the covariance aggregation if the scan is under-partitioned
+    # (narrowed first, so the shuffle moves only the features); its
+    # double sums may round differently per spread, so the query is
+    # rows-only
+    t.fit(spread_if_underpartitioned(li.select(*feats)))
     return t.transform(li)
 
 

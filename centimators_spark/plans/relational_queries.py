@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from centimators_spark.io import load_table
+from centimators_spark.scanstats import spread_if_underpartitioned
 from centimators_spark.streaming.events import sessionize, windowed_event_counts
 
 # deterministic panel ordering — THE shared definition (__spark_entry__
@@ -296,28 +297,13 @@ def q_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_tax") * 100).alias("t100"),
         F.round(F.col("l_extendedprice") * 100).alias("e100"),
     )
-    # decimal accumulation is ~4x a double sum per row and the local
-    # single-row-group file scans as ONE task — spread the Gram work;
-    # decimal sums are order-independent, so this cannot change results.
-    # Narrow to the fit columns FIRST so the shuffle moves no key bytes.
-    # Gate on under-partitioned input: a well-partitioned cluster-scale
-    # scan must not eat an extra full shuffle before a partial agg.
-    fit_input = scaled.select("q", "d100", "t100", "e100")
-    from centimators_spark.scanstats import estimated_scan_partitions
-
-    parallelism = spark.sparkContext.defaultParallelism
-    est = estimated_scan_partitions(fit_input)
-    if est is not None and est < parallelism:
-        # hash-partition on a DETERMINISTIC synthetic key, NOT
-        # round-robin repartition(n) (whose retry-determinism local
-        # sort — spark.sql.execution.sortBeforeRepartition — measured
-        # 1.8× slower) and not monotonically_increasing_id (whose
-        # nondeterminism blocks ReusedExchange when a lineage has
-        # multiple consumers; see era_ols_neutralize). The decimal
-        # sums are order-independent so any spread is equally correct.
-        fit_input = fit_input.repartition(
-            parallelism, F.xxhash64(*fit_input.columns)
-        )
+    # decimal accumulation is ~4x a double sum per row: spread the Gram
+    # work if the scan is under-partitioned (decimal sums are
+    # order-independent). Narrow to the fit columns FIRST so the
+    # shuffle moves no key bytes.
+    fit_input = spread_if_underpartitioned(
+        scaled.select("q", "d100", "t100", "e100")
+    )
     m = LinearRegressor(["q", "d100", "t100"], target="e100", exact=True).fit(
         fit_input
     )

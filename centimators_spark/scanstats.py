@@ -1,109 +1,84 @@
-"""Local-file scan-shape estimators shared by the under-partitioned-
-scan repartition gates (era-OLS neutralization, the one-pass bootstrap
-family, the exact LinearRegressor fit) — promoted out of
-operators/neutralization so the cross-module callers depend on a
-public internal home instead of an underscore-private helper
-(round-11 advice).
+"""The one under-partitioned-scan gate, in front of every heavy
+per-row or aggregation stage that would otherwise run as one task on a
+single-row-group local parquet file (era-OLS neutralization, the
+one-pass bootstrap family, the exact LinearRegressor fit, the PCA
+covariance fit, the multimodal decode/fingerprint chains).
 
-Both helpers return None for non-file or remote inputs: a production
-object-store scan is governed by the same maxPartitionBytes settings
-and is never the single-row-group local-file pathology these gates
-exist for, so None means "assume well-partitioned, do nothing".
+The rule reads what bounds the non-empty scan tasks: a parquet row
+group is read whole by a single task, so a scan of R row groups has at
+most R tasks that see rows, however ``spark.sql.files.maxPartitionBytes``
+splits the bytes. The gate counts
+row groups from the footers of ``df.inputFiles()`` (pyarrow, no Spark
+job) and spreads ``df`` when it finds fewer than ``defaultParallelism``.
+Non-``file:`` inputs, inputs with no files and files whose footer does
+not read as parquet are returned unchanged: an object-store scan of
+production tables is many row groups and never the single-row-group
+local pathology the gate exists for.
+
+Blind spot: many tiny files, each with its own row group, count as
+many row groups although Spark bin-packs them into a few tasks; the
+gate then leaves such an input alone. No gate caller reads that shape.
 """
 
 from __future__ import annotations
 
-import math
 import os
-import re
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
-def _conf_bytes(conf, key: str, default: int) -> int:
-    # JVM byte-size strings: "134217728b", "128m", "1g", plain int
-    raw = str(conf.get(key, str(default))).strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", raw)
-    if not m:
-        return default
-    mult = {"": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40,
-            "p": 2**50}[m.group(2)]
-    return int(m.group(1)) * mult
-
-
-def _local_file_sizes(df: DataFrame) -> list[int] | None:
+def _local_paths(df: DataFrame) -> list[str] | None:
     files = df.inputFiles()
-    if not files:
+    if not files or not all(f.startswith("file:") for f in files):
         return None
-    sizes = []
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        try:
-            sizes.append(os.path.getsize(unquote(urlparse(f).path)))
-        except OSError:
-            return None
-    return sizes
-
-
-def estimated_scan_partitions(df: DataFrame) -> int | None:
-    """Estimate how many scan partitions Spark will plan for ``df``'s
-    file sources WITHOUT converting to an RDD: Spark splits each file
-    into chunks of ≤ spark.sql.files.maxPartitionBytes and bin-packs
-    (chunk + openCostInBytes) into maxPartitionBytes bins — the
-    estimate mirrors that arithmetic from locally stat-able file
-    sizes (FilePartition.maxSplitBytes in the Spark source)."""
-    sizes = _local_file_sizes(df)
-    if sizes is None:
-        return None
-    conf = df.sparkSession.conf
-    mpb = _conf_bytes(
-        conf, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-    )
-    open_cost = _conf_bytes(
-        conf, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024
-    )
-    # mirror FilePartition.maxSplitBytes: cap the split size so the
-    # scan uses all cores when the data is small
-    total = sum(s + open_cost for s in sizes)
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    split = min(mpb, max(open_cost, total // max(1, cores)))
-    total_cost = 0
-    for size in sizes:
-        n_chunks = max(1, math.ceil(size / split))
-        total_cost += size + n_chunks * open_cost
-    return max(1, math.ceil(total_cost / split))
+    return [unquote(urlparse(f).path) for f in files]
 
 
 def local_input_bytes(df: DataFrame) -> int | None:
-    """Total bytes of ``df``'s locally stat-able file sources; None
-    for non-file / remote inputs (same scope rule as
-    :func:`estimated_scan_partitions`)."""
-    sizes = _local_file_sizes(df)
-    return None if sizes is None else sum(sizes)
+    """Total bytes of ``df``'s local file sources; None for non-file
+    or remote inputs."""
+    paths = _local_paths(df)
+    try:
+        return None if paths is None else sum(map(os.path.getsize, paths))
+    except OSError:
+        return None
+
+
+def _row_group_count(paths: list[str], cap: int) -> int | None:
+    """Row groups in the parquet files, reading footers only until
+    ``cap`` are seen; None if a footer does not read as parquet."""
+    import pyarrow.parquet as pq
+
+    seen = 0
+    for p in paths:
+        if seen >= cap:
+            break
+        try:
+            seen += pq.read_metadata(p).num_row_groups
+        except (OSError, ValueError):  # ArrowInvalid is a ValueError
+            return None
+    return seen
 
 
 def spread_if_underpartitioned(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Repartition ``df`` onto defaultParallelism when it would scan as
-    fewer partitions than there are cores — the shared gate in front of
-    the per-row Arrow kernels (gram shingling, multimodal synth/decode/
-    fingerprint chains), whose whole Python-side computation otherwise
-    runs in ONE task on single-row-group local parquet.
+    """Hash-repartition ``df`` onto defaultParallelism when its local
+    parquet sources hold fewer row groups than there are cores;
+    otherwise return ``df`` itself (callers test ``spread is not df``).
 
-    Same discipline as the era-OLS gate: the estimate reads file sizes
-    (never df.rdd); a well-partitioned production scan is untouched
-    (est is None or >= cores); the repartition hashes a DETERMINISTIC
-    key (xxhash64 of ``key_cols``, default all columns) so
-    multi-consumer lineages keep ReusedExchange eligibility. Only
-    per-row-deterministic consumers may use this — any spread must be
-    value-identical.
+    The key is DETERMINISTIC (xxhash64 of ``key_cols``, default all
+    columns): round-robin ``repartition(n)`` local-sorts every row
+    first (spark.sql.execution.sortBeforeRepartition, measured 1.8×
+    slower), and a nondeterministic key such as
+    monotonically_increasing_id blocks ReusedExchange, so a lineage
+    with several consumers would re-run its scan and shuffle per
+    consumer. Only consumers whose result does not depend on row
+    placement (exact decimal/integer sums, per-row work) may use this.
     """
-    from pyspark.sql import functions as F
-
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    est = estimated_scan_partitions(df)
-    if est is not None and est < parallelism:
-        cols = list(key_cols) or df.columns
-        return df.repartition(parallelism, F.xxhash64(*cols))
-    return df
+    paths = _local_paths(df)
+    groups = None if paths is None else _row_group_count(paths, parallelism)
+    if groups is None or groups >= parallelism:
+        return df
+    return df.repartition(parallelism, F.xxhash64(*(key_cols or df.columns)))

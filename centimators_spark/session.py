@@ -52,9 +52,9 @@ def get_spark(
         # SINGLE row group, so shrinking maxPartitionBytes cannot add
         # parallelism (byte-range splits that miss the row-group start
         # read nothing — one straggler does all the work plus empty
-        # tasks). Operators that do heavy per-row compute after a skinny
-        # scan repartition explicitly instead; leave the 128m default
-        # here, which is also the right setting for TB-scale files.
+        # tasks). Operators that do heavy work after such a scan spread
+        # it through scanstats.spread_if_underpartitioned instead; leave
+        # the 128m default here, which is also right for TB-scale files.
         # runtime bloom-filter join pruning: the big side of a selective
         # join gets a bloom filter built from the small side's join keys
         # pushed into its scan — at 100 TB this skips reading most of the

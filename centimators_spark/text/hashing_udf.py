@@ -100,8 +100,8 @@ def gram_frame(df: DataFrame, content_col: str, id_col: str, n: int) -> DataFram
         ]
     )
     narrow = df.select(F.col(id_col).alias("doc_id"), F.col(content_col).alias("__text"))
-    # NO spread gate here, by measurement (r13): unlike the multimodal
-    # decode/DCT chains (scanstats.spread_if_underpartitioned), this
+    # NO spread gate here (scanstats.spread_if_underpartitioned, which
+    # the multimodal decode/DCT chains use), by measurement (r13): this
     # pass is too light for the extra exchange to pay at bench scale —
     # the md5 work is memoized over batch-distinct grams, and the full
     # suite showed every pure gram consumer +0.3-1.8 s with a gated

@@ -109,7 +109,12 @@ def test_brute_force_topk_no_self(spark, emb):
 
 
 def test_connected_components_and_deduplicate(spark, docs):
-    from centimators_spark.dedup.cluster import connected_components, deduplicate
+    from centimators_spark.dedup.cluster import (
+        _edge_list,
+        _min_label_fixpoint,
+        connected_components,
+        deduplicate,
+    )
     from centimators_spark.dedup import minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(docs, threshold=0.6)
@@ -125,10 +130,9 @@ def test_connected_components_and_deduplicate(spark, docs):
     n_docs, n_nodes, n_clusters = docs.count(), len(cc), cc.cluster.nunique()
     assert kept.count() == n_docs - (n_nodes - n_clusters)
 
-    # the distributed fixpoint (driver_edge_cap=0 forces it) and the
-    # driver union-find agree exactly
+    # the distributed fixpoint and the driver union-find agree exactly
     cc_dist = (
-        connected_components(pairs, driver_edge_cap=0)
+        _min_label_fixpoint(_edge_list(pairs), 20)
         .toPandas()
         .sort_values("node")
         .reset_index(drop=True)
@@ -385,16 +389,15 @@ def test_connected_components_persist_mode(spark):
     labels every node with its component's minimum id and leaves no
     persisted plan in Spark's CacheManager: every cut is an eager
     localCheckpoint."""
-    from centimators_spark.dedup.cluster import connected_components
+    from centimators_spark.dedup.cluster import _edge_list, _min_label_fixpoint
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "d1 long, d2 long"
     )
     spark.catalog.clearCache()
-    # driver_edge_cap=0 forces the distributed fixpoint
     labels = {
         (r.node, r.cluster)
-        for r in connected_components(pairs, driver_edge_cap=0).collect()
+        for r in _min_label_fixpoint(_edge_list(pairs), 20).collect()
     }
     assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -598,7 +601,7 @@ def test_streaming_contamination_matches_batch(spark):
     bench = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     exp = ngram_contamination(corpus, bench, n=3).toPandas().sort_values("doc_id").reset_index(drop=True)
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         corpus.write.mode("overwrite").parquet(d + "/c")
         stream = spark.readStream.schema(corpus.schema).parquet(d + "/c")
         out = ngram_contamination(stream, bench, n=3)

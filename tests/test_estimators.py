@@ -722,7 +722,7 @@ def test_multimodal_pipeline(spark):
         with_media_metadata,
     )
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         for i in range(3):
             with open(os.path.join(d, f"img_{i}.png"), "wb") as f:
                 f.write(_tiny_png(4 + i, 3))
@@ -764,7 +764,7 @@ def test_sample_video_frames_rawv(spark):
         "a.rawv": rng.randint(0, 256, (7, 2, 3, 3), dtype=np.uint8),
         "b.rawv": rng.randint(0, 256, (1, 4, 2, 3), dtype=np.uint8),
     }
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         for name, fr in vids.items():
             with open(os.path.join(d, name), "wb") as f:
                 f.write(encode_rawv(fr))

@@ -209,7 +209,7 @@ def test_parquet_schema_evolution_mergeschema(spark):
     import os
     import tempfile
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "t")
         spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(
             p + "/batch=1"
@@ -231,7 +231,7 @@ def test_overwrite_partitions_dynamic(spark):
 
     from centimators_spark.io import overwrite_partitions, write_partitioned
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "t")
         full = spark.createDataFrame(
             [("2024-01-01", 1, 10.0), ("2024-01-01", 2, 20.0),

@@ -11,7 +11,7 @@ import pathlib
 import pytest
 
 import __spark_entry__ as entrymod
-from centimators_spark.dedup.cluster import connected_components
+from centimators_spark.dedup.cluster import _edge_list, _min_label_fixpoint
 from centimators_spark.io import DEFAULT_SF_DIR
 
 # the smallest scale factor, next to the default one
@@ -34,9 +34,8 @@ BUILDS = {
     "neutralize_ols_era": lambda spark: entrymod.q_neutralize_ols_era(
         spark, SF
     ),
-    # driver_edge_cap=0 forces the distributed fixpoint
-    "connected_components": lambda spark: connected_components(
-        _hand_pairs(spark), driver_edge_cap=0
+    "connected_components": lambda spark: _min_label_fixpoint(
+        _edge_list(_hand_pairs(spark)), 20
     ),
 }
 

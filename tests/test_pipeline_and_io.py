@@ -65,7 +65,7 @@ def test_write_partitioned_prunes(spark):
         [(i, "a" if i % 2 else "b", float(i)) for i in range(100)],
         "id long, part string, v double",
     )
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "t")
         write_partitioned(df, path, ["part"])
         assert {"part=a", "part=b"} <= set(os.listdir(path))
@@ -78,7 +78,7 @@ def test_write_partitioned_prunes(spark):
 
 def test_read_any_csv_json(spark):
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, s string")
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         for fmt in ("csv", "json", "orc"):
             p = os.path.join(d, fmt)
             df.write.format(fmt).option("header", "true").save(p)
@@ -198,7 +198,7 @@ def test_asof_join_semantics(spark):
 def test_read_text_corpus_lines_and_numbers(spark):
     from centimators_spark.sources import read_text_corpus
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         with open(os.path.join(d, "a.txt"), "w") as f:
             f.write("alpha\nbeta\n\ngamma")
         with open(os.path.join(d, "b.txt"), "w") as f:
@@ -224,7 +224,7 @@ def test_read_text_corpus_trailing_newline_and_crlf(spark):
     not leak \\r — both modes agree on row counts and text."""
     from centimators_spark.sources import read_text_corpus
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         with open(os.path.join(d, "posix.txt"), "w") as f:
             f.write("alpha\nbeta\n")          # 2 lines, trailing \n
         with open(os.path.join(d, "crlf.txt"), "wb") as f:
@@ -250,7 +250,7 @@ def test_read_text_corpus_empty_file_and_lone_cr(spark):
     numbered mode used to split only \\r?\\n)."""
     from centimators_spark.sources import read_text_corpus
 
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         open(os.path.join(d, "empty.txt"), "w").close()  # 0 bytes
         with open(os.path.join(d, "maccr.txt"), "wb") as f:
             f.write(b"one\rtwo\r")            # classic-Mac lone \r

@@ -121,7 +121,7 @@ def test_stream_stateless_text_operators_match_batch(spark):
     from centimators_spark.text.repetition import repetition_signals
 
     docs = load_table(spark, SF, "documents")
-    with tempfile.TemporaryDirectory(dir="/root/repo") as d:
+    with tempfile.TemporaryDirectory() as d:
         docs.write.mode("overwrite").parquet(d + "/docs")
         stream = spark.readStream.schema(docs.schema).parquet(d + "/docs")
         assert stream.isStreaming
