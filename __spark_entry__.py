@@ -5589,11 +5589,11 @@ def _mmr_rerank_oracle() -> str:
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters via ALTERNATING big-star/small-star edge
     contraction (Kiveris et al. 2014) — the O(log n)-round CC
-    algorithm for diameter-unbounded graphs at 100 TB, vs
-    dedup_clusters' O(diameter) min-label fixpoint. Same contract and
-    the SAME recursive-CTE oracle (identical output by construction);
-    differential-tested against exact union-find on path/clique/star/
-    random graphs."""
+    algorithm for diameter-unbounded graphs at 100 TB, which
+    dedup_clusters takes only above its driver union-find cap. Same
+    contract and the SAME recursive-CTE oracle (identical output by
+    construction); differential-tested against exact union-find on
+    path/clique/star/random graphs."""
     from centimators_spark.dedup.cluster import connected_components_star
     from centimators_spark.plans.datapipe_queries import q_dedup_minhash_lsh
 

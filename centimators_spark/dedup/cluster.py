@@ -1,11 +1,14 @@
 """Connected components over near-duplicate pairs + keep-one dedup.
 
-Min-label propagation as an iterative DataFrame fixpoint (the standard
-large-graph approach — alternating small joins, each a hash shuffle on
-node id, AQE-coalesced; converges in O(component diameter) rounds,
-which for dedup clusters is tiny). Deterministic output: every node
-labeled with the MINIMUM doc_id reachable in its component — exactly
-what a recursive-CTE oracle computes.
+One contract, two algorithms: every node of the pair list is labeled
+with the MINIMUM id reachable in its component (exactly what a
+recursive-CTE oracle computes), and a pair with a null endpoint links
+nothing and labels nothing. :func:`connected_components` collects an
+edge set of up to `_DRIVER_EDGE_CAP` pairs in one action and runs an
+exact union-find on the driver; larger edge sets go to
+:func:`connected_components_star`, the distributed alternating
+big-star/small-star contraction (Kiveris et al. 2014, O(log n)
+rounds whatever the component diameter).
 """
 
 from __future__ import annotations
@@ -23,97 +26,46 @@ _DRIVER_EDGE_CAP = 5_000_000
 
 def connected_components(
     pairs: DataFrame,
-    max_iter: int = 20,
+    max_iter: int = 30,
     a: str = "d1",
     b: str = "d2",
 ) -> DataFrame:
     """(node, cluster) for every node in `pairs`; cluster = min node id
-    of its component.
+    of its component. Pairs with a null endpoint are dropped.
 
     Adaptive strategy, same spirit as Spark's broadcast threshold: the
     near-dup EDGE set after LSH banding is orders of magnitude smaller
-    than the corpus, so when it fits `_DRIVER_EDGE_CAP` rows the exact
-    union-find runs on the driver in one pass (no iterative jobs).
-    Larger edge sets take the distributed min-label-propagation fixpoint
-    (O(component diameter) rounds of hash-partitioned joins).
-
-    The edge list and the fixpoint's per-round labels are cut with an
-    eager localCheckpoint: the loop re-reads the edge list every round,
-    and each round references the previous labels twice, so an unpinned
-    loop doubles the logical plan per round."""
-    edges = _edge_list(pairs, a, b)
-    if edges.count() <= _DRIVER_EDGE_CAP:
-        return _driver_union_find(edges)
-    return _min_label_fixpoint(edges, max_iter)
-
-
-def _edge_list(pairs: DataFrame, a: str = "d1", b: str = "d2") -> DataFrame:
-    """Symmetric, distinct (src, dst) edges, pinned once: the fixpoint
-    loop re-reads them every round and `pairs` is usually an expensive
-    lazy plan (LSH + verify)."""
-    return (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
+    than the corpus, so the distinct undirected edges are collected in
+    one action, capped at `_DRIVER_EDGE_CAP` + 1 rows; when they fit
+    the cap, the exact union-find runs on the driver (no iterative
+    jobs, nothing pinned). A larger edge set is handed to
+    :func:`connected_components_star` with `max_iter` as its round
+    budget; it rebuilds its edges from `pairs`, so that path pays the
+    capped collect on top."""
+    edges = (
+        pairs.where(F.col(a).isNotNull() & F.col(b).isNotNull())
+        .select(F.least(a, b).alias("src"), F.greatest(a, b).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+    )
+    pdf = edges.limit(_DRIVER_EDGE_CAP + 1).toPandas()
+    if len(pdf) > _DRIVER_EDGE_CAP:
+        return connected_components_star(pairs, max_iter, a, b)
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    roots = _driver_union_find(pdf["src"], pdf["dst"])
+    id_type = edges.schema["src"].dataType
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"node": list(roots), "cluster": list(roots.values())}),
+        StructType([StructField("node", id_type), StructField("cluster", id_type)]),
     )
 
 
-def _min_label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Distributed min-label propagation over a symmetric (src, dst)
-    edge list: every round each node takes the minimum label among
-    itself and its neighbors, until no label changes."""
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "cluster", F.col("node")
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("cluster").alias("nbr_cluster"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("nbr_cluster"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-        )
-        prev_labels = labels
-        # `updated` references `labels` twice, so an unpinned fixpoint
-        # doubles the logical plan every round (exponential Catalyst
-        # blow-up). Pin BEFORE the change count (r13 optimization): the
-        # count and the next round are two consumers, and counting the
-        # unpinned frame re-ran the whole round subtree a second time.
-        labels = updated.localCheckpoint(eager=True)
-        changed = (
-            labels.alias("u")
-            .join(prev_labels.alias("l"), "node")
-            .where(F.col("u.cluster") != F.col("l.cluster"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds — a component's diameter exceeds the iteration budget and "
-            "the returned cluster labels are NOT a fixpoint; raise max_iter",
-            RuntimeWarning,
-        )
-    return labels
-
-
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact path-compressed union-find over a driver-collected edge
-    list; emits the same (node, cluster=min member id) frame as the
-    distributed fixpoint."""
-    pdf = edges.toPandas()
+def _driver_union_find(src, dst) -> dict:
+    """{node: min member id of its component} by an exact path-
+    compressed union-find over the edges ``zip(src, dst)``, which
+    must hold no nulls (a NaN never equals its own parent, so its
+    ``find`` would not return)."""
     parent: dict = {}
 
     def find(x):
@@ -124,7 +76,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for s, d in zip(pdf["src"], pdf["dst"]):
+    for s, d in zip(src, dst):
         rs, rd = find(s), find(d)
         if rs != rd:
             parent[rs] = rd
@@ -133,17 +85,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     for n, r in roots.items():
         if r not in cluster_min or n < cluster_min[r]:
             cluster_min[r] = n
-    import pandas as pd
-
-    out = pd.DataFrame(
-        {"node": list(roots), "cluster": [cluster_min[r] for r in roots.values()]}
-    )
-    id_type = edges.schema["src"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    return edges.sparkSession.createDataFrame(
-        out, StructType([StructField("node", id_type), StructField("cluster", id_type)])
-    )
+    return {n: cluster_min[r] for n, r in roots.items()}
 
 
 def deduplicate(
@@ -169,10 +111,12 @@ def connected_components_star(
     """Connected components by ALTERNATING big-star/small-star edge
     contraction (Kiveris et al. 2014, "Connected Components in
     MapReduce and Beyond") — O(log n) rounds regardless of component
-    DIAMETER, where :func:`connected_components`' min-label fixpoint
-    pays O(diameter) rounds (a 10⁶-node path costs it 10⁶ rounds; this
-    algorithm ~20). Same contract: (node, cluster = min member id),
-    deterministic (min-based, no randomness).
+    DIAMETER, where min-label propagation pays O(diameter) rounds (a
+    10⁶-node path costs it 10⁶ rounds; this algorithm ~20). Same
+    contract as :func:`connected_components`: (node, cluster = min
+    member id), deterministic (min-based, no randomness), and a pair
+    with a null endpoint is dropped (both ``u != v`` and ``u == v``
+    are null for it).
 
     Per round: one symmetrize + one per-node min aggregation + one
     re-attach projection for each star step, all hash-partitioned on

@@ -83,16 +83,6 @@ def derive_n_planes(n_rows: int, target_bucket_rows: int = 10_000) -> int:
     return max(1, math.ceil(math.log2(n_rows / target_bucket_rows)))
 
 
-def _flat_dot(a: Column, b: Column, dim: int) -> Column:
-    """Σ a[i]·b[i] as a flat left-associated add chain (whole-stage
-    codegen-able, unlike the HOF fold) — the same evaluation order as
-    the DuckDB oracle's list_reduce, so identical bits."""
-    out = a.getItem(0) * b.getItem(0)
-    for i in range(1, dim):
-        out = out + a.getItem(i) * b.getItem(i)
-    return out
-
-
 def semantic_dedup(
     df: DataFrame,
     *,
@@ -104,7 +94,6 @@ def semantic_dedup(
     seed: int = 7,
     target_bucket_rows: int = 10_000,
     max_bucket_rows: int | None = None,
-    verify: str = "kernel",
 ) -> DataFrame:
     """Kept rows after semantic pruning: ``(id, bucket)`` for every
     vector with NO same-bucket neighbor of smaller id and cosine ≥
@@ -130,14 +119,14 @@ def semantic_dedup(
       IDENTICAL to the unchunked plan (property-tested); cost is an
       m× replication of fat-bucket rows through the shuffle, the
       standard block-pair trade (similarity/ann.py block kernel).
-    - ``verify`` selects the within-bucket domination check:
-      ``"kernel"`` (default) runs an Arrow-batched numpy kernel per
-      (bucket, chunk) group — dimension-ordered accumulation
-      (`_seq_dots`/`_seq_norms`), bit-identical to the oracle's fold
-      and ~100× cheaper per pair than expression evaluation inside a
-      join residual (the 10x sweep measured 71s for 3.8M interpreted
-      pair-cosines vs seconds in numpy); ``"expr"`` keeps the pure
-      Column-expression join as the semantic reference.
+
+    The within-bucket domination check is an Arrow-batched numpy
+    kernel per (bucket, chunk) group (:func:`_dominated_kernel`):
+    dimension-ordered accumulation (`_seq_dots`/`_seq_norms`),
+    bit-identical to the oracle's fold and ~100× cheaper per pair than
+    expression evaluation inside a join residual (the 10x sweep
+    measured 71 s for 3.8M interpreted pair-cosines vs seconds in
+    numpy).
     """
     base = df.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
@@ -175,34 +164,7 @@ def semantic_dedup(
         )
         pool = probe
 
-    if verify == "kernel":
-        dominated = _dominated_kernel(probe, pool, float(threshold))
-    elif verify == "expr":
-        # norms are per-row columns; the flat left-to-right add chain
-        # matches the oracle's list_reduce fold bit-for-bit (the HOF
-        # cosine is CodegenFallback — interpreted per PAIR, ruinous)
-        nrm = F.sqrt(_flat_dot(F.col("v"), F.col("v"), dim))
-        a = probe.withColumn("nrm", nrm).alias("a")
-        b = pool.withColumn("nrm", nrm).alias("b")
-        pair_cond = (
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__chunk") == F.col("b.__chunk"))
-            & (F.col("b.id") < F.col("a.id"))
-        )
-        dominated = (
-            a.join(b, pair_cond)
-            .where(
-                F.try_divide(
-                    _flat_dot(F.col("a.v"), F.col("b.v"), dim),
-                    F.col("a.nrm") * F.col("b.nrm"),
-                )
-                >= threshold
-            )
-            .select(F.col("a.id").alias("id"))
-            .distinct()
-        )
-    else:
-        raise ValueError(f"verify must be 'kernel' or 'expr', got {verify!r}")
+    dominated = _dominated_kernel(probe, pool, float(threshold))
     return (
         bucketed.join(dominated, "id", "left_anti")
         .select(F.col("id").alias(id_col), "bucket")
@@ -217,7 +179,7 @@ def _dominated_kernel(
     dimension (`similarity/ann.py:_seq_dots` — bit-identical to the
     scalar left-to-right oracle fold); each pair's cosine is ONE
     division of those exact values; zero-norm pairs become NaN
-    (never ≥ threshold), mirroring try_divide's NULL."""
+    (never ≥ threshold), mirroring the oracle's norm-product guard."""
     import pandas as pd
 
     from centimators_spark.similarity.ann import _seq_dots, _seq_norms
@@ -262,9 +224,9 @@ def semantic_dedup_oracle_sql(
 ) -> str:
     """DuckDB mirror: identical plane literals, identical dimension-
     ordered dot-product folds, identical keep rule. The norm-product
-    guard mirrors Spark's try_divide: a zero-norm vector's cosine is
-    NULL (never >= threshold), not NaN (which DuckDB sorts above every
-    threshold)."""
+    guard mirrors the kernel's NaN: a zero-norm vector's pairs are
+    skipped (never >= threshold) rather than divided to NaN, which
+    DuckDB sorts above every threshold."""
     planes = hyperplanes(n_planes, dim, seed)
 
     def dot(vec: str, ws: list[float]) -> str:

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from centimators_spark.scanstats import spread_if_underpartitioned
-from centimators_spark.text.portable import md5_long, sql_md5_long
+from centimators_spark.text.portable import sql_md5_long
 
 # floor(2^20 * P(Poisson(1) <= k)) for k = 0..7; weight = #thresholds
 # <= u, capped at 8. Draws live in [0, 2^20): ONE 60-bit md5 yields
@@ -44,65 +44,20 @@ BOOT_B = 32
 _D38 = "decimal(38,0)"
 
 
-def _weight(id_col: str, r: int):
-    i, slot = divmod(r, 3)
-    h = md5_long(
-        F.concat(F.col(id_col).cast("string"), F.lit(f":{i}"))
-    )
-    u = F.shiftrightunsigned(h, 20 * slot).bitwiseAND(
-        F.lit((1 << 20) - 1)
-    )
-    w = F.lit(len(POISSON1_CUM_P20))
-    for k in range(len(POISSON1_CUM_P20) - 1, -1, -1):
-        w = F.when(u < F.lit(POISSON1_CUM_P20[k]), F.lit(k)).otherwise(w)
-    return w.cast("long")
+def _poisson_weights(H, B: int):
+    """(n, B) int64 Poisson(1) weights from the (n, ceil(B/3)) int64
+    md5 draws ``H``: replicate r reads the 20-bit slice ``20·(r % 3)``
+    of hash ``r // 3`` and weighs it #{k : POISSON1_CUM_P20[k] <= u},
+    so weights run 0..8."""
+    import numpy as np
 
-
-def _staged_weights(df: DataFrame, id_col: str, B: int) -> DataFrame:
-    """Append the B Poisson(1) weights as PLAIN COLUMNS ``__bw0..``
-    via three staged projections: hash → 20-bit draw → weight.
-
-    Why not inline :func:`_weight` into the aggregate expressions (the
-    pre-r13 shape): Catalyst evaluates each aggregate's update
-    expression independently, so a weight referenced by two sums — and
-    the nested when-chain inside it, which references the md5-bearing
-    draw ``u`` up to 8 times — is re-evaluated per reference, turning
-    ceil(B/3) md5s per row into O(8·B). Staging each value as a column
-    makes every md5/shift/compare happen exactly once per row
-    (CollapseProject keeps the stages apart because the aliases are
-    multiply-referenced). Measured on the r13 profile host: the 66-agg
-    stage alone 5.2-5.7 s → ~3.0 s at sf0.1/local[32].
-
-    The weight itself is branch-free: w = #{k : cum_k <= u}, the exact
-    value of the old descending when-chain (thresholds ascending), as
-    a sum of 8 comparisons."""
-    nh = (B + 2) // 3
-    p1 = df.select(
-        "*",
-        *[
-            md5_long(
-                F.concat(F.col(id_col).cast("string"), F.lit(f":{i}"))
-            ).alias(f"__bh{i}")
-            for i in range(nh)
-        ],
-    )
-    us = []
+    cum = np.asarray(POISSON1_CUM_P20, dtype=np.int64)
+    W = np.empty((len(H), B), dtype=np.int64)
     for r in range(B):
         i, slot = divmod(r, 3)
-        us.append(
-            F.shiftrightunsigned(F.col(f"__bh{i}"), 20 * slot)
-            .bitwiseAND(F.lit((1 << 20) - 1))
-            .alias(f"__bu{r}")
-        )
-    p2 = p1.select("*", *us)
-    ws = [
-        sum(
-            (F.col(f"__bu{r}") >= F.lit(c)).cast("long")
-            for c in POISSON1_CUM_P20
-        ).alias(f"__bw{r}")
-        for r in range(B)
-    ]
-    return p2.select("*", *ws)
+        u = (H[:, i] >> (20 * slot)) & 0xFFFFF
+        W[:, r] = np.searchsorted(cum, u, side="right")
+    return W
 
 
 def _exact_int_sum(a) -> int:
@@ -135,9 +90,9 @@ def _poisson_partial_fn(B: int):
     Input batches carry exactly (grp, __bid string, __bc long); output
     is one partial row per (batch, group): n_rows/w-sums as long
     (bounded by 8·rows), vsum/v-sums as decimal(38,0) built from
-    exact Python-int totals — the same integers the JVM expression
-    kernel produces, so the downstream decimal aggregation is
-    bit-identical at any scale."""
+    exact Python-int totals, so the downstream decimal aggregation is
+    exact at any scale — the same integers the oracle's HUGEINT sums
+    give."""
 
     def gen(batches):
         import hashlib
@@ -148,7 +103,6 @@ def _poisson_partial_fn(B: int):
 
         from centimators_spark.text.md5np import finish_blocks, pack_base
 
-        cum_arr = np.asarray(POISSON1_CUM_P20, dtype=np.int64)
         nh = (B + 2) // 3
         suf = [f":{i}".encode() for i in range(nh)]
         md5 = hashlib.md5
@@ -177,11 +131,7 @@ def _poisson_partial_fn(B: int):
                         H[j, i] = int(
                             md5(b0 + suf[i]).hexdigest()[:15], 16
                         )
-            W = np.empty((n, B), dtype=np.int64)
-            for r in range(B):
-                i, slot = divmod(r, 3)
-                u = (H[:, i] >> (20 * slot)) & 0xFFFFF
-                W[:, r] = np.searchsorted(cum_arr, u, side="right")
+            W = _poisson_weights(H, B)
             grp = pdf["grp"].to_numpy()
             maxabs = int(np.abs(cents).max()) if n else 0
             if maxabs * 8 * n < (1 << 62):
@@ -336,7 +286,6 @@ def bootstrap_mean_ci(
     value_col: str,
     *,
     B: int = BOOT_B,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Per group: point mean plus a percentile-bootstrap band from B
     deterministic Poisson-weighted replicates.
@@ -351,29 +300,16 @@ def bootstrap_mean_ci(
     NULL ``value_col`` OR a NULL ``id_col`` are excluded up front on
     BOTH engines (the MWU / Brown-Forsythe discipline): NULL values
     would dilute every replicate mean while contributing no value
-    mass, and a NULL resampling key has no deterministic draw — the
-    Spark when-chain would fall through to weight 8 while the
-    oracle's list_filter yields 0 (the round-11 review's
-    cross-engine divergence).
+    mass, and a NULL resampling key has no deterministic draw.
 
-    ``kernel`` selects how the 2B+2 per-group sums are computed —
-    both produce the SAME integers (r13 optimization round, measured
-    at sf0.1/local[32]):
-
-    - "arrow" (default): a 3-column projection feeds a mapInPandas
-      partial aggregation (hashlib md5 + numpy searchsorted weights +
-      exact-int partial sums emitted as decimal(38,0)), then one tiny
-      final groupBy. The JVM expression form evaluates ~1000
-      expression-tree nodes per row for B=32 (11 md5 + 32 staged
-      draws + 256 threshold compares + 66 sum updates) and measured
-      3.0-5.5 s for the aggregation alone; the Arrow kernel measured
-      1.6-2.0 s end-to-end. Only the three needed columns cross the
-      Python boundary (guide §4.1).
-    - "expr": pure-JVM staged-column expressions (_staged_weights) —
-      no Python workers required; the fallback profile for clusters
-      where the Python boundary is unavailable."""
-    if kernel not in ("arrow", "expr"):
-        raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
+    The 2B+2 per-group sums come from an Arrow kernel: a 3-column
+    projection feeds a mapInPandas partial aggregation (md5 draws +
+    numpy searchsorted weights + exact-int partial sums emitted as
+    decimal(38,0)), then one tiny final groupBy. Only the three needed
+    columns cross the Python boundary (guide §4.1). A JVM expression
+    form of the same sums evaluates ~1000 expression-tree nodes per
+    row for B=32 and measured 3.0-5.5 s for the aggregation alone at
+    sf0.1/local[32], against 1.6-2.0 s end-to-end for the kernel."""
     df = spread_if_underpartitioned(
         df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull()),
         group_col,
@@ -389,37 +325,18 @@ def bootstrap_mean_ci(
         F.col(id_col).cast("string").alias("__bid"),
         cents.alias("__bc"),
     )
-    if kernel == "arrow":
-        schema = f"grp {grp_type}, n_rows long, vsum {_D38}, " + ", ".join(
-            f"w{r} long, v{r} {_D38}" for r in range(B)
-        )
-        partials = src.mapInPandas(_poisson_partial_fn(B), schema)
-        aggs = [
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("vsum").cast(_D38).alias("vsum"),
-        ]
-        for r in range(B):
-            aggs.append(F.sum(f"w{r}").cast("long").alias(f"w{r}"))
-            aggs.append(F.sum(f"v{r}").cast(_D38).alias(f"v{r}"))
-        per_group = partials.groupBy("grp").agg(*aggs)
-    else:
-        # stage cents + every weight as plain columns BELOW the
-        # aggregate (see _staged_weights: inline aggregate expressions
-        # re-evaluate multiply-referenced subtrees — md5 included —
-        # per reference)
-        staged = _staged_weights(src, "__bid", B)
-        c = F.col("__bc")
-        aggs = [
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(c.cast(_D38)).cast(_D38).alias("vsum"),
-        ]
-        for r in range(B):
-            w = F.col(f"__bw{r}")
-            aggs.append(F.sum(w).cast("long").alias(f"w{r}"))
-            aggs.append(
-                F.sum((w * c).cast(_D38)).cast(_D38).alias(f"v{r}")
-            )
-        per_group = staged.groupBy("grp").agg(*aggs)
+    schema = f"grp {grp_type}, n_rows long, vsum {_D38}, " + ", ".join(
+        f"w{r} long, v{r} {_D38}" for r in range(B)
+    )
+    partials = src.mapInPandas(_poisson_partial_fn(B), schema)
+    aggs = [
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        F.sum("vsum").cast(_D38).alias("vsum"),
+    ]
+    for r in range(B):
+        aggs.append(F.sum(f"w{r}").cast("long").alias(f"w{r}"))
+        aggs.append(F.sum(f"v{r}").cast(_D38).alias(f"v{r}"))
+    per_group = partials.groupBy("grp").agg(*aggs)
     # B rows per group: (r, wsum, vsum_r)
     reps = per_group.select(
         "grp",
@@ -484,7 +401,6 @@ def permutation_sign_test(
     value_col: str,
     *,
     B: int = PERM_B,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """One-pass paired sign-flip permutation test (Fisher 1935 via the
     Rademacher trick): per group, is mean(value) distinguishable from
@@ -503,13 +419,12 @@ def permutation_sign_test(
     NULL ids are excluded on both engines (a NULL id has no sign
     draw — keeping its mass in s_obs but no replicate would bias the
     p-value toward significance identically on both engines, which
-    the hash gate could never see), and the under-partitioned-scan
-    gate applies. Output: (grp, n_rows, n_replicates,
-    obs_mean_micro, n_exceed, p_milli)."""
+    the hash gate could never see), the sums come from the same kind
+    of Arrow kernel, and the under-partitioned-scan gate applies.
+    Output: (grp, n_rows, n_replicates, obs_mean_micro, n_exceed,
+    p_milli)."""
     if B > 60:
         raise ValueError("permutation_sign_test supports B <= 60")
-    if kernel not in ("arrow", "expr"):
-        raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
     df = spread_if_underpartitioned(
         df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull()),
         group_col,
@@ -520,52 +435,25 @@ def permutation_sign_test(
     grp_type = df.select(
         F.col(group_col).alias("grp")
     ).schema["grp"].dataType.simpleString()
-    if kernel == "arrow":
-        # Arrow partial aggregation (see bootstrap_mean_ci's kernel
-        # note): only (grp, id-string, cents) cross the boundary
-        src = df.select(
-            F.col(group_col).alias("grp"),
-            F.col(id_col).cast("string").alias("__bid"),
-            cents.alias("__bc"),
-        )
-        schema = (
-            f"grp {grp_type}, n_rows long, s_obs {_D38}, "
-            + ", ".join(f"s{r} {_D38}" for r in range(B))
-        )
-        partials = src.mapInPandas(_perm_partial_fn(B), schema)
-        aggs = [
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("s_obs").cast(_D38).alias("s_obs"),
-        ]
-        for r in range(B):
-            aggs.append(F.sum(f"s{r}").cast(_D38).alias(f"s{r}"))
-        per_group = partials.groupBy("grp").agg(*aggs)
-    else:
-        # stage the per-row hash + cents as plain columns below the
-        # aggregate: inlined into B aggregate expressions, the md5
-        # would be re-evaluated once PER REPLICATE per row (the same
-        # multi-reference re-evaluation _staged_weights documents)
-        staged = df.select(
-            F.col(group_col).alias("grp"),
-            cents.alias("__pc"),
-            md5_long(
-                F.concat(F.lit("perm:"), F.col(id_col).cast("string"))
-            ).alias("__ph"),
-        )
-        c = F.col("__pc")
-        h = F.col("__ph")
-        aggs = [
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(c.cast(_D38)).cast(_D38).alias("s_obs"),
-        ]
-        for r in range(B):
-            sign = (
-                2 * F.shiftrightunsigned(h, r).bitwiseAND(F.lit(1)) - 1
-            ).cast("long")
-            aggs.append(
-                F.sum((sign * c).cast(_D38)).cast(_D38).alias(f"s{r}")
-            )
-        per_group = staged.groupBy("grp").agg(*aggs)
+    # Arrow partial aggregation (see bootstrap_mean_ci's kernel
+    # note): only (grp, id-string, cents) cross the boundary
+    src = df.select(
+        F.col(group_col).alias("grp"),
+        F.col(id_col).cast("string").alias("__bid"),
+        cents.alias("__bc"),
+    )
+    schema = (
+        f"grp {grp_type}, n_rows long, s_obs {_D38}, "
+        + ", ".join(f"s{r} {_D38}" for r in range(B))
+    )
+    partials = src.mapInPandas(_perm_partial_fn(B), schema)
+    aggs = [
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        F.sum("s_obs").cast(_D38).alias("s_obs"),
+    ]
+    for r in range(B):
+        aggs.append(F.sum(f"s{r}").cast(_D38).alias(f"s{r}"))
+    per_group = partials.groupBy("grp").agg(*aggs)
     exceed = sum(
         F.when(
             F.abs(F.col(f"s{r}")) >= F.abs(F.col("s_obs")), 1

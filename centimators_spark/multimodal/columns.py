@@ -10,10 +10,11 @@ Design for 100 TB of media:
   ``mapInPandas`` stages — map-side only, no shuffle, Arrow moves the
   binary batches; executors hold the codec libraries.
 
-The actual codecs (PIL/ffmpeg/librosa) are NOT in this container, so the
-decode kernels are import-gated with a deterministic header-parse
-fallback (`fake=True`) that keeps every Spark-side contract — schema,
-batching, null handling — real and testable.
+Codec libraries (PIL/ffmpeg/librosa) are optional: uncompressed BMP,
+WAV and the RAWV video container decode in pure numpy, and rows in a
+format no available codec reads come back with null fields (or no
+frames) instead of failing the batch, so schema, batching and null
+handling stay real and testable without them.
 """
 
 from __future__ import annotations
@@ -114,7 +115,6 @@ def decode_images(
     content_col: str = "content",
     path_col: str = "path",
     resize: tuple[int, int] | None = None,
-    fake: bool = False,
 ) -> DataFrame:
     """Decode image bytes → (path, width, height, pixels float array in
     [0,1], RGB row-major), optional nearest-neighbor ``resize=(w, h)``.
@@ -124,9 +124,7 @@ def decode_images(
     Compressed formats (png/jpeg/gif) decode via PIL when executors have
     it; without PIL those rows emit null dimensions rather than failing
     the batch, so a mixed corpus still processes its BMP fraction —
-    the same degradation contract as ``decode_audio``. ``fake=True``
-    keeps the legacy deterministic-ramp stub (header-parsed dims, no
-    pixel decode) for plumbing tests."""
+    the same degradation contract as ``decode_audio``."""
     narrow = df.select(F.col(path_col).alias("path"), F.col(content_col).alias("c"))
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -139,13 +137,6 @@ def decode_images(
             for path, content in zip(pdf["path"], pdf["c"]):
                 rows["path"].append(path)
                 b = bytes(content) if content is not None else b""
-                if fake:
-                    w, h = _parse_dims(b)
-                    n = min(w * h, 64)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["pixels"].append((np.arange(n, dtype=np.float32) % 256) / 255.0)
-                    continue
                 arr = _parse_bmp(b)
                 if arr is None and Image is not None:  # pragma: no cover - no PIL here
                     import io
@@ -213,20 +204,6 @@ def _resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
     xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
     return arr[yi][:, xi]
-
-
-def _parse_dims(b: bytes) -> tuple[int, int]:
-    """Header-only width/height for PNG / BMP / GIF; fallback 0x0."""
-    if b[:4] == b"\x89PNG" and len(b) >= 24:
-        w, h = struct.unpack(">II", b[16:24])
-        return int(w), int(h)
-    if b[:2] == b"BM" and len(b) >= 26:
-        w, h = struct.unpack("<ii", b[18:26])
-        return int(w), abs(int(h))
-    if b[:4] == b"GIF8" and len(b) >= 10:
-        w, h = struct.unpack("<HH", b[6:10])
-        return int(w), int(h)
-    return 0, 0
 
 
 def extract_image_features(

@@ -404,6 +404,31 @@ class EraKernelTransformer:
         return narrow, era_col, feats, passthrough, schema
 
 
+def neutralize_era(
+    X: np.ndarray, gauss: Sequence[np.ndarray], proportions: Sequence[float]
+) -> list[np.ndarray]:
+    """One era's neutralized columns, each gaussianized prediction's
+    proportions in turn: fit ``lstsq(X, g)``, subtract ``proportion``
+    times the exposure ``X @ coeffs``, divide by the population std.
+
+    The steps run on fresh C-ordered float64 copies of ``X`` and of
+    each prediction: LAPACK/BLAS rounding can depend on an operand's
+    memory order and 16-byte alignment, and a pandas frame hands over
+    F-ordered blocks at any offset, so without the copies the same era
+    can differ in its last bits from one call to the next (the same
+    reason ``penalization.reduce_exposure_factored`` copies each era's
+    rows)."""
+    X = np.array(X, dtype=np.float64, order="C")
+    out = []
+    for g in gauss:
+        g = np.array(g, dtype=np.float64)
+        exposure = X @ np.linalg.lstsq(X, g, rcond=None)[0]
+        for pr in proportions:
+            neut = g - pr * exposure
+            out.append(neut / np.std(neut))
+    return out
+
+
 class FeatureNeutralizer(EraKernelTransformer):
     """Spark port of the reference FeatureNeutralizer (see module doc).
 
@@ -448,16 +473,10 @@ class FeatureNeutralizer(EraKernelTransformer):
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             if order_col:
                 pdf = pdf.sort_values(order_col, kind="stable")
-            X = pdf[feats].to_numpy(dtype=np.float64)
+            gauss = [gaussianize(pdf[pn].to_numpy(dtype=np.float64)) for pn in preds]
+            cols = neutralize_era(pdf[feats].to_numpy(dtype=np.float64), gauss, props)
             out = {c: pdf[c] for c in passthrough}
-            names = iter(out_names)
-            for pn in preds:
-                gauss = gaussianize(pdf[pn].to_numpy(dtype=np.float64))
-                coeffs, _, _, _ = np.linalg.lstsq(X, gauss, rcond=None)
-                exposure = X @ coeffs
-                for pr in props:
-                    neut = gauss - pr * exposure
-                    out[next(names)] = neut / np.std(neut)
+            out.update(zip(out_names, cols))
             return pd.DataFrame(out)
 
         raw = narrow.groupBy(era_col).applyInPandas(kernel, schema)

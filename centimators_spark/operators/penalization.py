@@ -133,7 +133,9 @@ def reduce_exposure_factored(
     0.01) is asserted in tests. Cost drops from O(n·k·iters) per era to
     O(n·k) per era + O(k²·iters) per batch, and the loop's Python
     overhead is paid once per batch instead of once per era."""
-    feats = np.asarray(features, dtype=np.float64) - 0.5
+    # C order: the closing per-row sums run along the last axis, and
+    # numpy sums a strided axis in another order than a contiguous one
+    feats = np.ascontiguousarray(features, dtype=np.float64) - 0.5
     pred = np.asarray(prediction, dtype=np.float64)[:, None]
     edges = list(starts) + [len(pred)]
     stats = []

@@ -128,7 +128,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: MinHash-LSH pairs → connected components
-    (iterative min-label propagation); cluster = min doc_id."""
+    (driver union-find over the collected edges; the star contraction
+    above the driver cap); cluster = min doc_id."""
     from centimators_spark.dedup.cluster import connected_components
 
     pairs = q_dedup_minhash_lsh(spark, sf_dir)

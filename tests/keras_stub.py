@@ -1032,6 +1032,22 @@ def _ops_fn(*_a, **_k):
     return Sym()
 
 
+class Loss:
+    """keras.losses.Loss: calling an instance runs its ``call``."""
+
+    def __init__(self, name=None, **_kw):
+        self.name = name
+
+    def __call__(self, y_true, y_pred):
+        return self.call(y_true, y_pred)
+
+
+class MeanSquaredError(Loss):
+    def call(self, y_true, y_pred):
+        d = np.asarray(y_true, dtype=np.float64) - np.asarray(y_pred, dtype=np.float64)
+        return float(np.mean(d * d))
+
+
 def _make_module():
     keras = types.ModuleType("keras")
     keras.__doc__ = "keras_stub stand-in (tests/keras_stub.py)"
@@ -1083,6 +1099,10 @@ def _make_module():
     optimizers = types.ModuleType("keras.optimizers")
     optimizers.Adam = Optimizer
 
+    losses = types.ModuleType("keras.losses")
+    losses.Loss = Loss
+    losses.MeanSquaredError = MeanSquaredError
+
     distribution = types.ModuleType("keras.distribution")
 
     class DataParallel:
@@ -1107,6 +1127,7 @@ def _make_module():
         layers=layers, models=models, ops=ops, initializers=initializers,
         regularizers=regularizers, callbacks=callbacks,
         optimizers=optimizers, saving=saving, distribution=distribution,
+        losses=losses,
     ).items():
         setattr(keras, n, mod)
         sys.modules[f"keras.{n}"] = mod

@@ -110,9 +110,8 @@ def test_brute_force_topk_no_self(spark, emb):
 
 def test_connected_components_and_deduplicate(spark, docs):
     from centimators_spark.dedup.cluster import (
-        _edge_list,
-        _min_label_fixpoint,
         connected_components,
+        connected_components_star,
         deduplicate,
     )
     from centimators_spark.dedup import minhash_lsh_pairs
@@ -130,9 +129,10 @@ def test_connected_components_and_deduplicate(spark, docs):
     n_docs, n_nodes, n_clusters = docs.count(), len(cc), cc.cluster.nunique()
     assert kept.count() == n_docs - (n_nodes - n_clusters)
 
-    # the distributed fixpoint and the driver union-find agree exactly
+    # the distributed star contraction and the driver union-find agree
+    # exactly
     cc_dist = (
-        _min_label_fixpoint(_edge_list(pairs), 20)
+        connected_components_star(pairs)
         .toPandas()
         .sort_values("node")
         .reset_index(drop=True)
@@ -385,11 +385,11 @@ def test_event_percentiles_approx_close_to_exact(spark):
 
 
 def test_connected_components_persist_mode(spark):
-    """The distributed fixpoint (the branch that pins per-round labels)
-    labels every node with its component's minimum id and leaves no
-    persisted plan in Spark's CacheManager: every cut is an eager
-    localCheckpoint."""
-    from centimators_spark.dedup.cluster import _edge_list, _min_label_fixpoint
+    """The distributed star contraction (the path that pins its edge
+    set every round) labels every node with its component's minimum id
+    and leaves no persisted plan in Spark's CacheManager: every cut is
+    an eager localCheckpoint."""
+    from centimators_spark.dedup.cluster import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "d1 long, d2 long"
@@ -397,10 +397,96 @@ def test_connected_components_persist_mode(spark):
     spark.catalog.clearCache()
     labels = {
         (r.node, r.cluster)
-        for r in _min_label_fixpoint(_edge_list(pairs), 20).collect()
+        for r in connected_components_star(pairs).collect()
     }
     assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _labels(df) -> set:
+    return {(r.node, r.cluster) for r in df.collect()}
+
+
+def _star_spy(monkeypatch):
+    """Record each call connected_components makes to the star path."""
+    import centimators_spark.dedup.cluster as cluster
+
+    calls = []
+    star = cluster.connected_components_star
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(cluster, "connected_components_star", spy)
+    return calls
+
+
+def test_connected_components_drops_null_pairs(spark, monkeypatch):
+    """A pair with a null endpoint links nothing and labels nothing, on
+    the driver union-find and on the star path (cap 0). Collected, the
+    null would reach the union-find as NaN, whose find() never returns
+    (NaN != NaN)."""
+    import centimators_spark.dedup.cluster as cluster
+
+    pairs = spark.createDataFrame(
+        [(1, None), (2, 3), (None, 4), (5, 5), (6, 2), (None, None)],
+        "d1 long, d2 long",
+    )
+    want = {(2, 2), (3, 2), (6, 2), (5, 5)}
+    calls = _star_spy(monkeypatch)
+    assert _labels(cluster.connected_components(pairs)) == want
+    assert not calls
+    monkeypatch.setattr(cluster, "_DRIVER_EDGE_CAP", 0)
+    assert _labels(cluster.connected_components(pairs)) == want
+    assert len(calls) == 1
+    assert _labels(cluster.connected_components_star(pairs)) == want
+
+
+def test_connected_components_cap_picks_the_path(spark, monkeypatch):
+    """Up to _DRIVER_EDGE_CAP distinct undirected edges take the driver
+    union-find; one more takes the star contraction, with the same
+    labels. The pairs below hold 4 distinct undirected edges."""
+    import centimators_spark.dedup.cluster as cluster
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 2), (10, 11), (7, 7), (1, 2)],
+        "d1 long, d2 long",
+    )
+    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (7, 7)}
+    calls = _star_spy(monkeypatch)
+    monkeypatch.setattr(cluster, "_DRIVER_EDGE_CAP", 4)
+    assert _labels(cluster.connected_components(pairs)) == want
+    assert not calls
+    monkeypatch.setattr(cluster, "_DRIVER_EDGE_CAP", 3)
+    assert _labels(cluster.connected_components(pairs)) == want
+    assert len(calls) == 1
+
+
+# jobs the driver path fired on the hand pairs below, at local[4] and
+# local[8], when it pinned the edge list (localCheckpoint), counted it
+# and then collected it; the one capped collect fires 2 (the distinct's
+# shuffle-map stage and the collect)
+_PINNED_DRIVER_PATH_JOBS = 5
+
+
+def test_connected_components_driver_path_one_collect(spark):
+    """The driver path collects the edges in one capped action: it pins
+    nothing (the CacheManager stays empty) and starts fewer jobs than
+    the pinned edge list did on the same input."""
+    from centimators_spark.dedup.cluster import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "d1 long, d2 long"
+    )
+    spark.catalog.clearCache()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    labels = connected_components(pairs)
+    jobs = len(set(tracker.getJobIdsForGroup()) - before)
+    assert _labels(labels) == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert 0 < jobs < _PINNED_DRIVER_PATH_JOBS, jobs
 
 
 def test_normalize_text(spark):
@@ -705,7 +791,13 @@ def test_semantic_dedup_chunked_matches_unchunked(spark):
     bucket for any plane count), 20 are random."""
     import numpy as np
 
-    from centimators_spark.dedup.semantic import semantic_dedup
+    import duckdb
+    import pandas as pd
+
+    from centimators_spark.dedup.semantic import (
+        semantic_dedup,
+        semantic_dedup_oracle_sql,
+    )
 
     rng = np.random.default_rng(42)
     rows = []
@@ -723,17 +815,17 @@ def test_semantic_dedup_chunked_matches_unchunked(spark):
             for r in semantic_dedup(df, max_bucket_rows=cap, **kw).collect()
         }
         assert chunked == plain, cap
-    # the numpy kernel (default) and the pure-expression join are two
-    # implementations of one contract — identical kept sets, chunked
-    # or not
-    for cap in (None, 7):
-        expr = {
-            (r.vec_id, r.bucket)
-            for r in semantic_dedup(
-                df, max_bucket_rows=cap, verify="expr", **kw
-            ).collect()
-        }
-        assert expr == plain, cap
+    # the kernel's kept set, chunked or not, is the DuckDB oracle's
+    con = duckdb.connect()
+    con.register("vecs", pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    oracle = {
+        tuple(r)
+        for r in con.execute(
+            semantic_dedup_oracle_sql("vecs", **kw)
+        ).fetchall()
+    }
+    assert plain == oracle
+    assert len(oracle) < len(rows)  # the skewed bucket does prune
 
 
 def test_semantic_dedup_auto_planes():

@@ -726,6 +726,8 @@ def test_multimodal_pipeline(spark):
         for i in range(3):
             with open(os.path.join(d, f"img_{i}.png"), "wb") as f:
                 f.write(_tiny_png(4 + i, 3))
+            with open(os.path.join(d, f"img_{i}.bmp"), "wb") as f:
+                f.write(_tiny_bmp(4 + i, 3))
         df = read_binary_dir(spark, d, glob="*.png")
         assert df.count() == 3
 
@@ -733,16 +735,18 @@ def test_multimodal_pipeline(spark):
         m = meta.select("media.modality", "media.format", "media.n_bytes").collect()
         assert all(r.modality == "image" and r.format == "png" for r in m)
 
-        decoded = decode_images(df, fake=True)
+        decoded = decode_images(read_binary_dir(spark, d, glob="*.bmp"))
         rows = {r.path.split("/")[-1]: r for r in decoded.collect()}
-        assert rows["img_0.png"].width == 4 and rows["img_2.png"].width == 6
+        assert rows["img_0.bmp"].width == 4 and rows["img_2.bmp"].width == 6
+        assert all(r.height == 3 for r in rows.values())
+        assert len(rows["img_1.bmp"].pixels) == 5 * 3 * 3
 
         feats = extract_image_features(decoded).collect()
-        assert all(len(r.features) == 8 for r in feats)
+        assert len(feats) == 3 and all(len(r.features) == 8 for r in feats)
 
         # compressed formats without PIL degrade to null rows (mixed
         # corpus keeps processing) rather than failing the batch
-        real = decode_images(df, fake=False).collect()
+        real = decode_images(df).collect()
         assert len(real) == 3 and all(r.width is None for r in real)
         # undecodable video bytes degrade to NO rows (pngs aren't video)
         assert sample_video_frames(df).count() == 0

@@ -11,7 +11,7 @@ import pathlib
 import pytest
 
 import __spark_entry__ as entrymod
-from centimators_spark.dedup.cluster import _edge_list, _min_label_fixpoint
+from centimators_spark.dedup.cluster import connected_components_star
 from centimators_spark.io import DEFAULT_SF_DIR
 
 # the smallest scale factor, next to the default one
@@ -34,8 +34,8 @@ BUILDS = {
     "neutralize_ols_era": lambda spark: entrymod.q_neutralize_ols_era(
         spark, SF
     ),
-    "connected_components": lambda spark: _min_label_fixpoint(
-        _edge_list(_hand_pairs(spark)), 20
+    "connected_components": lambda spark: connected_components_star(
+        _hand_pairs(spark)
     ),
 }
 

@@ -494,3 +494,53 @@ def test_era_kernel_plan_reuses_exchange(spark, era_df, which):
     assert "ReusedExchange" in plan
     assert plan.count("FlatMapGroupsInPandas") == 1
     assert "InMemoryRelation" not in plan and "Scan ExistingRDD" not in plan
+
+
+def _layouts(a: np.ndarray) -> list[np.ndarray]:
+    """The same values 8 bytes off a 16-byte boundary, and F-ordered."""
+    buf = np.empty(a.size + 1)
+    start = 1 if buf.ctypes.data % 16 == 0 else 0
+    off = buf[start : start + a.size].reshape(a.shape)
+    off[...] = a
+    assert off.ctypes.data % 16 == 8
+    return [off, np.asfortranarray(a)]
+
+
+def _random_eras(n_eras: int, k: int = 10, seed: int = 5):
+    rng = np.random.default_rng(seed)
+    sizes = rng.integers(40, 120, n_eras)
+    X = rng.random((sizes.sum(), k))
+    P = rng.random(sizes.sum())
+    starts = np.cumsum(np.r_[0, sizes[:-1]])
+    return X, P, starts
+
+
+def test_neutralize_era_bit_identical_across_layouts():
+    """The per-era neutralizer steps (lstsq → X @ c → / std on the
+    gaussianized prediction) give the same bits whatever the memory
+    layout of the inputs: without fresh C-ordered copies, every one of
+    these eras changed its last bits at an 8-byte offset and in F
+    order."""
+    from centimators_spark.operators.neutralization import neutralize_era
+
+    X, P, starts = _random_eras(64)
+    P = np.concatenate([gaussianize(p) for p in np.split(P, starts[1:])])
+    for x, p in zip(np.split(X, starts[1:]), np.split(P, starts[1:])):
+        want = neutralize_era(x.copy(), [p.copy()], [0.5, 1.0])
+        for xl, pl in zip(_layouts(x), _layouts(p)):
+            got = neutralize_era(xl, [pl], [0.5, 1.0])
+            for g, w in zip(got, want):
+                np.testing.assert_array_equal(g, w)
+
+
+def test_reduce_exposure_factored_bit_identical_across_layouts():
+    """The batched penalizer gives the same bits at an 8-byte offset and
+    in F order (64 eras, uniform features, cap 0.1)."""
+    from centimators_spark.operators.penalization import reduce_exposure_factored
+
+    X, P, starts = _random_eras(64)
+    P = np.concatenate([gaussianize(p) for p in np.split(P, starts[1:])])
+    want = reduce_exposure_factored(P.copy(), X.copy(), 0.1, starts=starts)
+    for xl, pl in zip(_layouts(X), _layouts(P)):
+        got = reduce_exposure_factored(pl, xl, 0.1, starts=starts)
+        np.testing.assert_array_equal(got, want)

@@ -609,8 +609,9 @@ def test_bpe_apply_matches_python_merge_pass(spark, docs, rules):
     )
 )
 def test_cc_star_matches_fixpoint_on_random_graphs(spark, edges):
-    """Star-contraction CC == the min-label/union-find CC on arbitrary
-    random edge lists (self-loops and duplicates included)."""
+    """Star-contraction CC == the driver union-find CC on arbitrary
+    random edge lists (self-loops and duplicates included): the same
+    (node, cluster) set, self-loop-only singletons included."""
     from centimators_spark.dedup.cluster import (
         connected_components,
         connected_components_star,
@@ -622,14 +623,4 @@ def test_cc_star_matches_fixpoint_on_random_graphs(spark, edges):
         (r.node, r.cluster)
         for r in connected_components_star(df).collect()
     }
-    # the fixpoint path keeps self-loop-only nodes (u,u) as singleton
-    # clusters; the star path drops u==v edges up front — compare on
-    # the shared node set and require the star set to be the exact set
-    # minus (possibly) pure-self-loop singletons
-    only_exact = exact - star
-    assert star <= exact
-    assert all(n == c for n, c in only_exact)  # singletons only
-    star_nodes = {n for n, _ in star}
-    assert all(
-        n in star_nodes or n == c for n, c in exact
-    )
+    assert star == exact

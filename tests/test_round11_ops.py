@@ -881,19 +881,29 @@ def test_bootstrap_ci_deterministic_and_oracle(spark):
     assert compare("bootstrap_ci", s1, odf)
 
 
-def test_poisson_weight_distribution(spark):
-    """Across many (id, replicate) draws the weight distribution must
-    match Poisson(1): ~37% zeros, ~37% ones, mean ~1."""
-    from pyspark.sql import functions as F
+def test_poisson_weight_distribution():
+    """Across many (id, replicate) draws the kernel's draw -> weight
+    lookup must match Poisson(1): ~37% zeros, ~37% ones, mean ~1, for
+    each of the three 20-bit slices of a hash."""
+    import hashlib
 
-    from centimators_spark.ml.bootstrap import _weight
+    import numpy as np
 
-    df = spark.range(2000).select(F.col("id"))
-    w = df.select(_weight("id", 0).alias("w")).toPandas()["w"]
-    assert abs(w.mean() - 1.0) < 0.1
-    z = (w == 0).mean()
-    assert 0.30 < z < 0.45  # e^-1 = 0.368
-    assert w.max() <= 8
+    from centimators_spark.ml.bootstrap import _poisson_weights
+
+    # the kernel's draw for replicate r < 3 of id: md5(id || ':0')
+    H = np.array(
+        [[int(hashlib.md5(f"{i}:0".encode()).hexdigest()[:15], 16)]
+         for i in range(2000)],
+        dtype=np.int64,
+    )
+    W = _poisson_weights(H, 3)
+    assert W.shape == (2000, 3)
+    for w in W.T:
+        assert abs(w.mean() - 1.0) < 0.1
+        z = (w == 0).mean()
+        assert 0.30 < z < 0.45  # e^-1 = 0.368
+        assert 0 <= w.min() and w.max() <= 8
 
 
 def test_mann_whitney_hand_trace_and_oracle(spark):

@@ -318,39 +318,63 @@ def test_incremental_agg_composes_across_days(spark):
 
 def test_bootstrap_kernels_agree_across_md5_paths(spark):
     """r14: the Arrow kernels' vectorized single-block MD5 + reduceat
-    partial sums must be value-identical to the pure-JVM expression
-    kernel on ids exercising BOTH the fast path (short ASCII) and the
-    hashlib fallback (oversized / non-ASCII ids force pack_base to
-    reject the whole batch)."""
+    partial sums must match the DuckDB oracles on ids exercising BOTH
+    the fast path (short ASCII) and the hashlib fallback (oversized /
+    non-ASCII ids force pack_base to reject the whole batch)."""
+    import duckdb
     import pandas as pd
+    from check_oracle import compare
 
     from centimators_spark.ml.bootstrap import (
         bootstrap_mean_ci,
+        bootstrap_mean_ci_oracle_sql,
         permutation_sign_test,
+        permutation_sign_test_oracle_sql,
     )
 
     def frame(ids):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "g": [f"G{i % 3}" for i in range(len(ids))],
-                    "id": ids,
-                    "v": [(-1) ** i * (i * 13.37 + 0.01) for i in range(len(ids))],
-                }
-            )
+        return pd.DataFrame(
+            {
+                "g": [f"G{i % 3}" for i in range(len(ids))],
+                "id": ids,
+                "v": [(-1) ** i * (i * 13.37 + 0.01) for i in range(len(ids))],
+            }
         )
 
     short_ids = [f"{i * 7}:{i % 5}" for i in range(200)]
     long_ids = ["x" * 60 + str(i) for i in range(100)] + ["ünïcode" + str(i) for i in range(100)]
+    con = duckdb.connect()
     for ids in (short_ids, long_ids):
-        df = frame(ids)
-        for fn in (bootstrap_mean_ci, permutation_sign_test):
-            a = (
-                fn(df, "g", "id", "v", kernel="arrow")
-                .toPandas().sort_values("grp").reset_index(drop=True)
-            )
-            e = (
-                fn(df, "g", "id", "v", kernel="expr")
-                .toPandas().sort_values("grp").reset_index(drop=True)
-            )
-            pd.testing.assert_frame_equal(a, e)
+        pdf = frame(ids)
+        df = spark.createDataFrame(pdf)
+        con.register("tbl", pdf)
+        for fn, oracle in (
+            (bootstrap_mean_ci, bootstrap_mean_ci_oracle_sql),
+            (permutation_sign_test, permutation_sign_test_oracle_sql),
+        ):
+            got = fn(df, "g", "id", "v").toPandas()
+            want = con.execute(oracle("tbl", "g", "id", "v")).fetchdf()
+            assert len(got) == 3
+            assert compare(fn.__name__, got, want)
+
+
+def test_deleted_strategy_options_raise_type_error():
+    """Each operator has one implementation: the options that selected
+    a second one (``kernel=``, ``verify=``, ``fake=``) are gone, so
+    passing them fails at the call."""
+    from centimators_spark.dedup.semantic import semantic_dedup
+    from centimators_spark.ml.bootstrap import (
+        bootstrap_mean_ci,
+        permutation_sign_test,
+    )
+    from centimators_spark.multimodal import decode_images
+
+    calls = (
+        lambda: bootstrap_mean_ci(None, "g", "id", "v", kernel="expr"),
+        lambda: permutation_sign_test(None, "g", "id", "v", kernel="arrow"),
+        lambda: semantic_dedup(None, dim=8, verify="expr"),
+        lambda: decode_images(None, fake=True),
+    )
+    for call in calls:
+        with pytest.raises(TypeError, match="unexpected keyword argument"):
+            call()
