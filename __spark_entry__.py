@@ -141,7 +141,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_feature_neutralizer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-era gaussianize + OLS neutralization (applyInPandas kernel).
+    """Per-era gaussianize + OLS neutralization (Arrow kernel).
     Not SQL-expressible (Φ⁻¹) → driver records rows-only check; exact
     parity is covered by tests/test_neutralization.py differential test."""
     li = _lineitem(spark, sf_dir).withColumn(
@@ -575,7 +575,7 @@ def q_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_feature_penalizer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-era Adamax exposure capping (applyInPandas kernel); rows-only."""
+    """Per-era Adamax exposure capping (Arrow kernel); rows-only."""
     li = _lineitem(spark, sf_dir).withColumn(
         "era", F.date_trunc("year", F.col("l_shipdate"))
     )
@@ -645,7 +645,7 @@ _UNIQUE_KEY_COUNT_SQL = """(
 
 
 def q_neutralizer_kernel_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-hash contract tying the applyInPandas FeatureNeutralizer
+    """Driver-hash contract tying the Arrow FeatureNeutralizer
     KERNEL (#18, unrounded Φ⁻¹ + numpy lstsq — rows-only on its own) to
     the hash-verified expression twin (neutralizer_full_expr): Spark
     joins kernel and twin on the row keys and counts rows whose outputs

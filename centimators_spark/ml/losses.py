@@ -44,10 +44,13 @@ def soft_spearman_loss_np(
     documentation of the math when it is not. Returns NEGATIVE soft
     rank correlation (a loss)."""
 
-    # pairwise sigmoid soft rank: rank_i = 1 + Σ_j sigmoid((v_i - v_j)/T), j≠i
+    # pairwise sigmoid soft rank: rank_i = 1 + Σ_j sigmoid((v_i - v_j)/T), j≠i;
+    # the tanh form of the sigmoid saturates to 0/1 without overflowing
+    # (1 / (1 + exp(-x)) overflows once |x| > ~709, i.e. for values
+    # ~0.71 apart at the default strength)
     def soft_rank_exact(v: np.ndarray) -> np.ndarray:
         diff = (v[:, None] - v[None, :]) / regularization_strength
-        s = 1.0 / (1.0 + np.exp(-diff))
+        s = 0.5 * (1.0 + np.tanh(diff / 2.0))
         np.fill_diagonal(s, 0.0)
         return 1.0 + s.sum(axis=1)
 

@@ -1,48 +1,57 @@
-from centimators_spark.operators.mwu import (
-    brown_forsythe,
-    mann_whitney_u,
-)
-from centimators_spark.operators.ranking import RankTransformer
-from centimators_spark.operators.time_series import (
-    DiffTransformer,
-    EWMATransformer,
-    ExpandingAggTransformer,
-    ForwardReturnTransformer,
-    LagTransformer,
-    LogReturnTransformer,
-    MovingAverageTransformer,
-    DrawdownTransformer,
-    RollingAggTransformer,
-    RollingCorrTransformer,
-    RollingRankTransformer,
-)
-from centimators_spark.operators.stats import (
-    GroupStatsTransformer,
-    clip_by_quantile,
-    quantile_normalize,
-    robust_zscore,
-    trimmed_stats,
-)
-from centimators_spark.operators.anomaly import ewma_anomaly_flags, page_hinkley
-from centimators_spark.operators.drift import psi_drift, psi_drift_categorical
-from centimators_spark.operators.neutralization import FeatureNeutralizer
-from centimators_spark.operators.penalization import FeaturePenalizer
-from centimators_spark.operators.dimreduction import DimReducer
-from centimators_spark.operators.embedding import EmbeddingTransformer
-from centimators_spark.operators.asof import (
-    asof_join,
-    asof_join_forward,
-    asof_join_nearest,
-)
-from centimators_spark.operators.rangejoin import band_label, interval_join
-from centimators_spark.operators.skew import salted_join
-from centimators_spark.operators.encoding import (
-    feature_hash,
-    one_hot_encode,
-    quantile_bin,
-    target_encode,
-    woe_encode,
-)
+"""Operator surface: per-era kernels, panel/time-series transformers,
+joins, encoders and drift/anomaly statistics.
+
+Loads lazily (PEP 562), like the package itself: each exported name or
+submodule is imported on first access, so importing one operator module
+(say, the per-era kernels on a Python worker) runs no other.
+"""
+
+from centimators_spark import _lazy_surface
+
+# submodule -> the names it exports here; every submodule listed is
+# also an attribute of this package
+_EXPORTS = {
+    "mwu": ("brown_forsythe", "mann_whitney_u"),
+    "ranking": ("RankTransformer",),
+    "time_series": (
+        "DiffTransformer",
+        "EWMATransformer",
+        "ExpandingAggTransformer",
+        "ForwardReturnTransformer",
+        "LagTransformer",
+        "LogReturnTransformer",
+        "MovingAverageTransformer",
+        "DrawdownTransformer",
+        "RollingAggTransformer",
+        "RollingCorrTransformer",
+        "RollingRankTransformer",
+    ),
+    "stats": (
+        "GroupStatsTransformer",
+        "clip_by_quantile",
+        "quantile_normalize",
+        "robust_zscore",
+        "trimmed_stats",
+    ),
+    "anomaly": ("ewma_anomaly_flags", "page_hinkley"),
+    "drift": ("psi_drift", "psi_drift_categorical"),
+    "neutralization": ("FeatureNeutralizer",),
+    "penalization": ("FeaturePenalizer",),
+    "dimreduction": ("DimReducer",),
+    "embedding": ("EmbeddingTransformer",),
+    "asof": ("asof_join", "asof_join_forward", "asof_join_nearest"),
+    "rangejoin": ("band_label", "interval_join"),
+    "skew": ("salted_join",),
+    "encoding": (
+        "feature_hash",
+        "one_hot_encode",
+        "quantile_bin",
+        "target_encode",
+        "woe_encode",
+    ),
+    "bloomjoin": (),
+}
+__getattr__, __dir__ = _lazy_surface(__name__, _EXPORTS)
 
 __all__ = [
     "mann_whitney_u",

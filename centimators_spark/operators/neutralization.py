@@ -11,11 +11,16 @@ then a GLOBAL min-max of each output column to [0, 1]; constant column
 ``{pred}_neutralized_{prop}[_{suffix}]`` (:96-101).
 
 Spark plan:
-- one ``groupBy(era).applyInPandas`` — eras process in parallel across
-  executors (replaces the reference's serial era loop + joblib
-  process-parallelism over (pred×prop) tasks, :159-177; we compute ALL
-  (pred×prop) outputs in ONE kernel pass per era, sharing the
-  gaussianize+lstsq work the reference recomputes per task);
+- the kernel input is hash-partitioned on the era (``repartition(era)``
+  with no count: AQE sizes the partitions and coalesces small ones)
+  and read by ONE ``mapInPandas`` call per partition, which runs every
+  era of the partition in turn (replaces the reference's serial era
+  loop + joblib process-parallelism over (pred×prop) tasks, :159-177;
+  we compute ALL (pred×prop) outputs in ONE kernel pass per era,
+  sharing the gaussianize+lstsq work the reference recomputes per
+  task). Hashing keeps every era whole inside one partition, and one
+  Python call per partition instead of per era pays the call's fixed
+  cost once for all of the partition's eras;
 - the global min-max is a deliberate two-phase plan: tiny agg →
   broadcast crossJoin → column arithmetic (SURVEY.md §4 note 2), never
   an unpartitioned window. Both phases read the kernel output through
@@ -23,10 +28,15 @@ Spark plan:
   reuses, so each era's kernel runs once per transform.
 
 Scale: two shuffles — the era hash-partition into the kernel and the
-exchange of the kernel output that both min-max phases share. Each era
-must fit one task (inherent to exact per-era lstsq — at 100 TB choose
-era granularity accordingly). Arrow moves the batches; the kernel is
-vectorized numpy.
+exchange of the kernel output that both min-max phases share. One
+Python call holds one post-shuffle partition in memory: AQE merges
+small partitions up to its advisory size
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by default)
+and never splits one, so a partition is larger only when a single
+hash partition's eras are (an era must fit one task — inherent to
+exact per-era lstsq; at 100 TB choose era granularity accordingly).
+On small panels AQE coalesces the whole input into one task. Arrow
+moves the batches; the kernel is vectorized numpy.
 """
 
 from __future__ import annotations
@@ -356,8 +366,8 @@ class EraKernelTransformer:
     """Set-up shared by the per-era kernel transformers
     (FeatureNeutralizer, FeaturePenalizer): the column arguments, the
     ``era_col=None`` single-era fallback, feature inference, the narrow
-    kernel input and the kernel's output schema. Subclasses set
-    ``_output_names``."""
+    kernel input, the kernel's output schema and the one-call-per-
+    partition run. Subclasses set ``_output_names``."""
 
     def __init__(self, pred_name, feature_names, suffix, era_col, order_col, keep_cols):
         self.pred_names = [pred_name] if isinstance(pred_name, str) else list(pred_name)
@@ -402,6 +412,30 @@ class EraKernelTransformer:
         for name in self._output_names:
             schema = schema.add(name, "double")
         return narrow, era_col, feats, passthrough, schema
+
+    @staticmethod
+    def _per_partition(narrow: DataFrame, era_col: str, schema, kernel) -> DataFrame:
+        """Run ``kernel`` once per partition of ``narrow`` hash-partitioned
+        on the era: the partition's Arrow batches are concatenated and
+        every era in them goes through one Python call. Hashing keeps
+        each era whole inside one partition; AQE picks the partition
+        count and coalesces small partitions up to its advisory size. An
+        empty partition yields nothing."""
+
+        def run(batches):
+            parts = [b for b in batches if len(b)]
+            if parts:
+                yield kernel(pd.concat(parts, ignore_index=True))
+
+        return narrow.repartition(era_col).mapInPandas(run, schema)
+
+
+def era_blocks(pdf: pd.DataFrame, era_col: str) -> tuple[pd.DataFrame, np.ndarray]:
+    """→ (``pdf`` with each era's rows contiguous and in their incoming
+    order, the first row of each era). A null era is an era of its own."""
+    codes = pd.factorize(pdf[era_col], use_na_sentinel=False)[0]
+    idx = np.argsort(codes, kind="stable")
+    return pdf.iloc[idx], np.flatnonzero(np.diff(codes[idx], prepend=-1))
 
 
 def neutralize_era(
@@ -470,7 +504,7 @@ class FeatureNeutralizer(EraKernelTransformer):
         preds, props, order_col = self.pred_names, self.proportions, self.order_col
         out_names = self._output_names
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def era_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             if order_col:
                 pdf = pdf.sort_values(order_col, kind="stable")
             gauss = [gaussianize(pdf[pn].to_numpy(dtype=np.float64)) for pn in preds]
@@ -479,5 +513,10 @@ class FeatureNeutralizer(EraKernelTransformer):
             out.update(zip(out_names, cols))
             return pd.DataFrame(out)
 
-        raw = narrow.groupBy(era_col).applyInPandas(kernel, schema)
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf, starts = era_blocks(pdf, era_col)
+            ends = [*starts[1:], len(pdf)]
+            return pd.concat([era_kernel(pdf.iloc[a:b]) for a, b in zip(starts, ends)])
+
+        raw = self._per_partition(narrow, era_col, schema, kernel)
         return global_min_max_scale(raw, out_names)

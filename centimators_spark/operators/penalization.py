@@ -19,15 +19,17 @@ The reference itself accepts cross-framework slack (output correlation
 > 0.95, exposure ≤ cap + 0.01 — tests/test_penalizer_comparison.py:264,316),
 which is the parity bar for this kernel too.
 
-Spark plan: like FeatureNeutralizer's, but the kernel groups by an era
-BUCKET, ``pmod(hash(era), spark.sql.shuffle.partitions)``, instead of by
-era: one kernel call runs the Adamax loop for every era of its bucket
-at once (``reduce_exposure_factored``), so the loop's per-iteration
-Python overhead is paid once per bucket rather than once per era.
-Buckets run in parallel across executors. Two shuffles: the bucket
-hash-partition into the kernel and the exchange of the kernel output
-that both phases of the global min-max share (each era's kernel runs
-once per transform).
+Spark plan: FeatureNeutralizer's (see its module doc) — the kernel
+input is hash-partitioned on the era and read by one ``mapInPandas``
+call per partition. The call runs every era of its partition through
+ONE Adamax loop (``reduce_exposure_factored``), so the loop's
+per-iteration Python overhead is paid once per partition rather than
+once per era; an era's result does not depend on which eras share the
+loop. Two shuffles: the era hash-partition into the kernel and the
+exchange of the kernel output that both phases of the global min-max
+share (each era's kernel runs once per transform). Memory: one
+post-shuffle partition per Python call, at AQE's advisory size unless
+a single hash partition's eras are larger.
 """
 
 from __future__ import annotations
@@ -37,11 +39,11 @@ from typing import Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from centimators_spark.functions.normal import gaussianize
 from centimators_spark.operators.neutralization import (
     EraKernelTransformer,
+    era_blocks,
     global_min_max_scale,
 )
 
@@ -215,11 +217,11 @@ class FeaturePenalizer(EraKernelTransformer):
     """Spark port of the reference FeaturePenalizer (see module doc).
 
     Filter the input, not the output. A ``.where`` on the output is
-    pushed under the row side of ``global_min_max_scale`` only, so each
-    era bucket's Adamax kernel runs twice. A filtered input is scored on
-    the kept rows alone (per-era fits and min-max bounds cover only
-    those rows); to keep full-frame scaling and select rows, cut the
-    output first (write it, or ``localCheckpoint``) and filter that."""
+    pushed under the row side of ``global_min_max_scale`` only, so the
+    Adamax kernel runs twice. A filtered input is scored on the kept
+    rows alone (per-era fits and min-max bounds cover only those rows);
+    to keep full-frame scaling and select rows, cut the output first
+    (write it, or ``localCheckpoint``) and filter that."""
 
     def __init__(
         self,
@@ -254,16 +256,12 @@ class FeaturePenalizer(EraKernelTransformer):
         preds, exps, order_col = self.pred_names, self.max_exposures, self.order_col
         lr, max_iters, tol = self.lr, self.max_iters, self.tol
         out_names = self._output_names
-        buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             # rows of one era contiguous, each era in order_col order
             if order_col:
                 pdf = pdf.sort_values(order_col, kind="stable")
-            codes = pd.factorize(pdf[era_col], use_na_sentinel=False)[0]
-            idx = np.argsort(codes, kind="stable")
-            pdf, codes = pdf.iloc[idx], codes[idx]
-            starts = np.flatnonzero(np.diff(codes, prepend=-1))
+            pdf, starts = era_blocks(pdf, era_col)
             per_era = lambda v: np.split(v, starts[1:])  # noqa: E731
             X = pdf[feats].to_numpy(dtype=np.float64)
             out = {c: pdf[c] for c in passthrough}
@@ -277,6 +275,5 @@ class FeaturePenalizer(EraKernelTransformer):
                     out[next(names)] = np.concatenate([p / np.std(p) for p in per_era(pen)])
             return pd.DataFrame(out)
 
-        bucket = F.pmod(F.hash(F.col(era_col)), F.lit(buckets))
-        raw = narrow.groupBy(bucket).applyInPandas(kernel, schema)
+        raw = self._per_partition(narrow, era_col, schema, kernel)
         return global_min_max_scale(raw, out_names)

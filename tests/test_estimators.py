@@ -3,6 +3,7 @@ sequence reshape, multimodal plumbing."""
 
 import os
 import struct
+import sys
 import tempfile
 import zlib
 from contextlib import contextmanager
@@ -117,7 +118,9 @@ def test_ordinal_uniform_ties_by_position():
     np.testing.assert_allclose(u, [(3 - 0.5) / 4, 0.5 / 4, 3.5 / 4, 1.5 / 4])
 
 
-def test_keras_estimator_gated(spark):
+def test_keras_estimator_gated(spark, monkeypatch):
+    # hide keras, real or the stub an earlier test installed
+    monkeypatch.setitem(sys.modules, "keras", None)
     df = spark.createDataFrame([(1.0, 2.0)], "a double, target double")
     est = KerasEstimator(lambda: None, ["a"])
     with pytest.raises(ImportError, match="keras"):
@@ -211,6 +214,35 @@ def test_soft_spearman_negative_for_correlated():
     rng = np.random.default_rng(42)
     y = rng.normal(size=50)
     assert soft_spearman_loss_np(y, y + 0.01 * rng.normal(size=50)) < -0.9
+
+
+def test_soft_spearman_default_strength_stable():
+    """At the default strength 1e-3 the pairwise sigmoids saturate
+    without an overflow warning, and where ``1 / (1 + exp(-x))`` does
+    not overflow the loss matches that formula."""
+    import warnings
+
+    def loss_exp(a, b, t):
+        def soft_rank(v):
+            s = 1.0 / (1.0 + np.exp(-(v[:, None] - v[None, :]) / t))
+            np.fill_diagonal(s, 0.0)
+            r = 1.0 + s.sum(axis=1)
+            return (r - r.mean()) / r.std()
+
+        return -float((soft_rank(a) * soft_rank(b)).mean())
+
+    rng = np.random.default_rng(3)
+    y = rng.standard_normal(40)
+    p = y + 0.5 * rng.standard_normal(40)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = soft_spearman_loss_np(y, p)
+        # values ~1e-4 apart keep every exp(-x) finite at 1e-3
+        near = [(1e-4 * y, 1e-4 * p, 1e-3), (y, p, 0.1), (y, p, 1.0)]
+        for a, b, t in near:
+            want = loss_exp(a, b, t)
+            assert abs(soft_spearman_loss_np(a, b, t) - want) <= 1e-12
+    assert -1.0 <= got < -0.5
 
 
 def test_keras_cortex_needs_propose(spark):

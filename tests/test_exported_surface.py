@@ -142,9 +142,71 @@ def test_make_keras_losses(monkeypatch):
         want, rel=1e-12
     )
     combined = combined_cls(mse_weight=0.5, spearman_weight=2.0)
-    # the default strength 1e-3 saturates the sigmoids (exp overflows
-    # to inf, which rounds them to exactly 0 or 1 on both sides)
+    # the default strength 1e-3 saturates the sigmoids to exactly 0 or
+    # 1 on both sides (the stand-in's exp overflows to inf on the way)
     with np.errstate(over="ignore"):
         got = combined(y, p)
         want = 0.5 * np.mean((y - p) ** 2) + 2.0 * soft_spearman_loss_np(y, p)
     assert got == pytest.approx(want, rel=1e-12)
+
+
+def test_kernel_module_import_stays_narrow():
+    """Importing a per-era kernel module, as a Python worker does when it
+    unpickles the kernel, loads neither ``pyspark.ml`` nor the package's
+    ML surface: the package ``__init__``s are lazy."""
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    probe = (
+        "import sys\n"
+        "import centimators_spark.operators.penalization\n"
+        "print(sorted(m for m in ('pyspark.ml', 'centimators_spark.ml', "
+        "'centimators_spark.base') if m in sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.strip() == "[]"
+
+
+# the submodules each package exposes as attributes right after import
+SUBMODULES = {
+    "centimators_spark": (
+        "analytics", "base", "config", "dedup", "functions", "graphs", "io",
+        "ml", "operators", "profile", "reconcile", "scanstats", "session",
+        "similarity", "text", "validate",
+    ),
+    "centimators_spark.operators": (
+        "anomaly", "asof", "bloomjoin", "dimreduction", "drift", "embedding",
+        "encoding", "mwu", "neutralization", "penalization", "rangejoin",
+        "ranking", "skew", "stats", "time_series",
+    ),
+}
+
+
+def test_lazy_surface_resolves():
+    """Every name ``dir()`` lists resolves, ``__all__`` is inside it, and
+    each submodule the package exposes resolves to that submodule, as do
+    the names in the submodule's own ``__all__``."""
+    import importlib
+
+    import centimators_spark as cs
+    from centimators_spark import operators
+
+    for pkg in (cs, operators):
+        listed = dir(pkg)
+        assert set(pkg.__all__) <= set(listed)
+        for name in listed:
+            getattr(pkg, name)
+        for name in SUBMODULES[pkg.__name__]:
+            assert name in listed
+            want = importlib.import_module(f"{pkg.__name__}.{name}")
+            assert getattr(pkg, name) is want
+            for sub in getattr(want, "__all__", ()):
+                getattr(want, sub)
+        with pytest.raises(AttributeError):
+            getattr(pkg, "no_such_name")
+    assert cs.FeaturePenalizer is operators.FeaturePenalizer
+    assert cs.operators is operators

@@ -420,8 +420,9 @@ def test_batched_adamax_matches_per_era_loop():
 
 @pytest.mark.parametrize("era_col", ["era", None])
 def test_penalizer_transform_matches_per_era_loop(spark, era_col):
-    """The Spark transform (era buckets, or the single-era fallback) ==
-    per-era gaussianize → per-era loop → per-era std → global min-max."""
+    """The Spark transform (era-hashed partitions, or the single-era
+    fallback) == per-era gaussianize → per-era loop → per-era std →
+    global min-max."""
     X, P = _unequal_eras()
     feats = [f"feature{i}" for i in range(X[0].shape[1])]
     pdf = pd.DataFrame(np.vstack(X), columns=feats)
@@ -483,17 +484,52 @@ def test_era_kernel_runs_once_per_era(spark, era_df, monkeypatch, which, downstr
 
 @pytest.mark.parametrize("which", [0, 1], ids=["neutralizer", "penalizer"])
 def test_era_kernel_plan_reuses_exchange(spark, era_df, which):
-    """The executed plan holds the Python kernel once and reads its
-    output a second time through a ReusedExchange — no cache, no
-    checkpoint."""
+    """The executed plan holds the Python kernel once, as one
+    per-partition map (not a grouped map), and reads its output a
+    second time through a ReusedExchange — no cache, no checkpoint."""
     _, t, _ = _kernel_transformers()[which]
     out = t.transform(era_df)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in plan
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan
     assert "InMemoryRelation" not in plan and "Scan ExistingRDD" not in plan
+
+
+def test_penalizer_runs_one_adamax_loop_per_partition(spark, era_df, monkeypatch):
+    """Every era of a kernel partition goes through one Adamax loop: an
+    accumulator counts the ``reduce_exposure_factored`` calls on the
+    executors, one per non-empty partition of the era-hashed input —
+    a single partition for these five small eras under AQE, although
+    their era hashes fall into several shuffle partitions."""
+    from pyspark.sql import functions as F
+
+    from centimators_spark.operators import penalization
+
+    n_parts = (
+        era_df.repartition("era")
+        .select(F.spark_partition_id().alias("p"))
+        .distinct()
+        .count()
+    )
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_hash = era_df.select(
+        F.pmod(F.hash("era"), F.lit(shuffle)).alias("h")
+    ).distinct().count()
+    assert n_parts == 1 < n_hash
+    acc = spark.sparkContext.accumulator(0)
+    real = penalization.reduce_exposure_factored
+
+    def counted(*args, **kwargs):
+        acc.add(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(penalization, "reduce_exposure_factored", counted)
+    _, t, _ = _kernel_transformers()[1]
+    assert t.transform(era_df).count() == 100
+    assert acc.value == n_parts
 
 
 def _layouts(a: np.ndarray) -> list[np.ndarray]:
