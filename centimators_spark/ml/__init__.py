@@ -1,26 +1,40 @@
-from centimators_spark.ml.estimators import (
-    BaseKerasEstimator,
-    BottleneckEncoder,
-    KerasEstimator,
-    LinearRegressor,
-    LSTMRegressor,
-    MLPRegressor,
-    NeuralDecisionForestRegressor,
-    SequenceEstimator,
-    TransformerRegressor,
-    sequence_reshape,
-)
-from centimators_spark.ml import architectures
-from centimators_spark.ml.architectures import TemperatureAnnealing
-from centimators_spark.ml.bootstrap import bootstrap_mean_ci
-from centimators_spark.ml.calibration import isotonic_calibration
-from centimators_spark.ml.dspymator import DSPyMator
-from centimators_spark.ml.keras_cortex import KerasCortex
-from centimators_spark.ml.losses import make_keras_losses, spearman_corr
-from centimators_spark.ml.conformal import conformal_interval, conformal_quantiles
-from centimators_spark.ml.ensemble import rank_ensemble
-from centimators_spark.ml.feature_selection import mutual_information
-from centimators_spark.ml.metrics import autocorr, era_corr, era_report
+"""Model surface: the reference's Keras estimators, era metrics,
+ensembling, calibration and conformal intervals.
+
+Loads lazily (PEP 562), like the package itself: each exported name or
+submodule is imported on first access, so importing one ``ml`` module
+(say, ``ml.metrics``) loads neither the estimators nor ``pyspark.ml``.
+"""
+
+from centimators_spark import _lazy_surface
+
+# submodule -> the names it exports here; every submodule listed is
+# also an attribute of this package
+_EXPORTS = {
+    "estimators": (
+        "BaseKerasEstimator",
+        "BottleneckEncoder",
+        "KerasEstimator",
+        "LinearRegressor",
+        "LSTMRegressor",
+        "MLPRegressor",
+        "NeuralDecisionForestRegressor",
+        "SequenceEstimator",
+        "TransformerRegressor",
+        "sequence_reshape",
+    ),
+    "architectures": ("TemperatureAnnealing",),
+    "bootstrap": ("bootstrap_mean_ci",),
+    "calibration": ("isotonic_calibration",),
+    "dspymator": ("DSPyMator",),
+    "keras_cortex": ("KerasCortex",),
+    "losses": ("make_keras_losses", "spearman_corr"),
+    "conformal": ("conformal_interval", "conformal_quantiles"),
+    "ensemble": ("rank_ensemble",),
+    "feature_selection": ("mutual_information",),
+    "metrics": ("autocorr", "era_corr", "era_report"),
+}
+__getattr__, __dir__ = _lazy_surface(__name__, _EXPORTS)
 
 __all__ = [
     "bootstrap_mean_ci",

@@ -9,25 +9,37 @@ ranking.py:37-92): for each feature f, within each group (date):
 
 Nulls receive a null rank and do not consume ranks.
 
-Spark plan: average rank is composed from built-ins —
-    min_rank  = F.rank().over(W(group, orderBy f NULLS LAST))
-    tie_count = F.count(f).over(W(group, f))
-    avg_rank  = min_rank + (tie_count - 1) / 2
-All features share the same partition key, so Catalyst collapses the
-window functions into a handful of WindowExec nodes over ONE shuffle by
-group — no UDFs, full whole-stage codegen. Scale: one shuffle on the
-group column; skewed groups are split by AQE skew handling; no
-driver-side work.
+Spark plan: ``repartition(*group_cols)`` (no partition count: AQE sizes
+the partitions) and ONE ``mapInArrow`` call per post-shuffle partition,
+which ranks every feature of every group in the partition with
+``pyarrow.compute.rank`` (``functions/rank.py``). One exchange and no
+sort in Spark, against one sort per ranked column for a window per
+feature. The kernel's ``((min_rank + max_rank) / 2.0) / count`` is the
+arithmetic of ``avg_rank`` below, so the output is bit-identical to
+``avg_rank(f) / count(f)`` over a window on the group.
+
+Scale: one shuffle on the group columns; hashing keeps every group
+whole inside one partition. One Python call holds one post-shuffle
+partition in memory: AQE merges small partitions up to its advisory
+size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) and never
+splits one, so a partition is larger only when a single hash
+partition's groups are. Passthrough columns travel as Arrow arrays and
+are never converted to pandas, so they must be of Arrow-convertible
+types; ranked features must be of an orderable Arrow type (numeric,
+decimal, string, binary, boolean, date or timestamp).
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from centimators_spark.base import PanelTransformer
+from centimators_spark.functions.rank import rank_batches
 
 
 def avg_rank(feature: str | Column, group_cols: Sequence[str]) -> Column:
@@ -40,7 +52,11 @@ def avg_rank(feature: str | Column, group_cols: Sequence[str]) -> Column:
     group. Both windows share ONE (partition, order) spec, so Catalyst
     plans a single exchange + single sort (the tie-count formulation
     needs a second hash partitioning on (group, value)). Arithmetic is
-    exact integer halves → bit-identical to rank + (ties−1)/2."""
+    exact integer halves → bit-identical to rank + (ties−1)/2.
+
+    For ranking a Column inside a larger plan (``ml/ensemble.py``,
+    ``ml/losses.py``); ``RankTransformer`` runs the same arithmetic in
+    its Arrow kernel."""
     f = F.col(feature) if isinstance(feature, str) else feature
     order_win = Window.partitionBy(*group_cols).orderBy(f.asc_nulls_last())
     min_rank = F.rank().over(order_win)
@@ -51,7 +67,8 @@ def avg_rank(feature: str | Column, group_cols: Sequence[str]) -> Column:
 
 
 class RankTransformer(PanelTransformer):
-    """Normalized per-group average rank: ``{f}_rank = avg_rank(f)/count(f)``."""
+    """Normalized per-group average rank, ``{f}_rank = avg_rank(f)/count(f)``,
+    computed by one Arrow call per post-shuffle partition."""
 
     def __init__(
         self,
@@ -80,16 +97,24 @@ class RankTransformer(PanelTransformer):
     def _metadata_cols(self) -> list[str]:
         return list(self.group_cols)
 
-    def _derived_columns(self, df: DataFrame) -> list[Column]:
+    def _transform(self, df: DataFrame) -> DataFrame:
         feats = self._resolve_features(df)
         self.feature_names_ = feats
-        count_win = Window.partitionBy(*self.group_cols)
-        cols = []
-        for f in feats:
-            r = avg_rank(f, self.group_cols)
-            cnt = F.count(F.col(f)).over(count_win)
-            cols.append((r / cnt).alias(f"{f}_rank"))
-        return cols
+        if self.output_mode == "append":
+            keep = list(df.columns)
+        else:
+            keep = list(self.keep_cols)
+            df = df.select(*dict.fromkeys(keep + self.group_cols + feats))
+        fields = df.schema
+        schema = StructType(
+            [fields[c] for c in keep]
+            + [StructField(f"{f}_rank", DoubleType()) for f in feats]
+        )
+        kernel = partial(
+            rank_batches, group_cols=self.group_cols, features=feats, keep=keep
+        )
+        spread = df.repartition(*self.group_cols) if self.group_cols else df.repartition(1)
+        return spread.mapInArrow(kernel, schema)
 
     def get_feature_names_out(self) -> list[str]:
         feats = self.feature_names or getattr(self, "feature_names_", None)

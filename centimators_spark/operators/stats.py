@@ -6,8 +6,11 @@ Reference (/root/reference/src/centimators/feature_transformers/stats.py:
 has fewer columns than the stat's minimum (mean/range 1, std/cv 2,
 skew 3, kurtosis 4).
 
-Spark plan: staged `select`s of pure column arithmetic (see
-`_staged_group_stats`) — row-local, zero shuffles, whole-stage codegen.
+Spark plan: staged ``selectExpr`` projections of pure column arithmetic
+(see `_staged_group_stats`), building only the moments the requested
+stats read — row-local, zero shuffles, whole-stage codegen. Scale: no
+memory beyond one row; the build costs a few Py4J calls per stage,
+whatever the number of groups and columns.
 """
 
 from __future__ import annotations
@@ -35,6 +38,37 @@ _MIN_COLS = {
 }
 
 
+# moments each stat reads besides n: the mean needs s1 and mu, the
+# spread stats m2 (over mu), skew m3 and kurtosis m4; range reads only
+# the row's greatest/least, guarded by n
+_NEEDS = {
+    "mean": ("s1", "mu"),
+    "std": ("s1", "mu", "m2"),
+    "cv": ("s1", "mu", "m2"),
+    "skew": ("s1", "mu", "m2", "m3"),
+    "kurt": ("s1", "mu", "m2", "m4"),
+    "range": (),
+}
+
+_NAN = "CAST('NaN' AS DOUBLE)"
+_INF = "CAST('Infinity' AS DOUBLE)"
+
+
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _d(x: float) -> str:
+    """A finite double as an exact SQL DOUBLE literal."""
+    return f"{x!r}D"
+
+
+def _sum(terms: Sequence[str]) -> str:
+    # left to right, like the reduce it replaces: ((a + b) + c) + ...
+    return " + ".join(terms)
+
+
 def _staged_group_stats(
     df: DataFrame,
     mapping: Mapping[str, Sequence[str]],
@@ -42,101 +76,79 @@ def _staged_group_stats(
     passthrough: Sequence[str],
 ) -> DataFrame:
     """Multi-stat plan as staged projections: per group compute n, sum,
-    mu, then centered moment sums m2/m3/m4 ONCE, then all stats as cheap
-    arithmetic. The staging keeps Catalyst from inlining the (expensive,
-    multiply-referenced) intermediates into every stat expression —
-    ~6x less codegen than the one-shot per-stat formulas. Skew/kurtosis
-    divide by s³/s² AFTER summing (algebraically equal to the
-    reference's per-term standardization; both sides of the DuckDB
-    differential oracle use this same form)."""
-    import pyspark.sql.functions as F
-    from functools import reduce
-
-    NAN = F.lit(float("nan"))
-    out = df
-    inter: dict[str, dict[str, str]] = {}
-    stage1, stage2, stage3 = [], [], []
+    mu, then the centered moment sums m2/m3/m4 ONCE, then all stats as
+    cheap arithmetic. Only the moments the requested stats read are
+    built (``_NEEDS``). The staging keeps Catalyst from inlining the
+    (expensive, multiply-referenced) intermediates into every stat
+    expression — ~6x less codegen than the one-shot per-stat formulas.
+    Each stage is ONE ``selectExpr`` over SQL text with every column
+    name backquoted, so building the plan costs a few Py4J calls per
+    stage rather than one per Column node. Skew/kurtosis divide by
+    s³/s² AFTER summing (algebraically equal to the reference's
+    per-term standardization; both sides of the DuckDB differential
+    oracle use this same form)."""
+    needs = {m for s in stats for m in _NEEDS[s]}
+    stage1, stage2, stage3, final = [], [], [], [_q(c) for c in passthrough]
     for g, cols in mapping.items():
-        ts = [F.col(c).cast("double") for c in cols]
-        guard = lambda t, e: F.when(t.isNotNull(), e).otherwise(F.lit(0.0))  # noqa: E731
-        n = reduce(
-            lambda a, b: a + b,
-            [F.when(t.isNotNull(), F.lit(1.0)).otherwise(F.lit(0.0)) for t in ts],
+        n, s1, mu, m2, m3, m4 = (
+            _q(f"__{m}_{g}") for m in ("n", "s1", "mu", "m2", "m3", "m4")
         )
-        s1 = reduce(lambda a, b: a + b, [guard(t, t) for t in ts])
-        names = {
-            "n": f"__n_{g}",
-            "s1": f"__s1_{g}",
-            "mu": f"__mu_{g}",
-            "m2": f"__m2_{g}",
-            "m3": f"__m3_{g}",
-            "m4": f"__m4_{g}",
-        }
-        inter[g] = names
-        stage1 += [n.alias(names["n"]), s1.alias(names["s1"])]
-        nc, s1c = F.col(names["n"]), F.col(names["s1"])
-        stage2.append(F.when(nc > 0, s1c / nc).alias(names["mu"]))
-        muc = F.col(names["mu"])
-        d = [t - muc for t in ts]
-        stage3 += [
-            reduce(lambda a, b: a + b, [guard(t, x * x) for t, x in zip(ts, d)]).alias(names["m2"]),
-            reduce(lambda a, b: a + b, [guard(t, x * x * x) for t, x in zip(ts, d)]).alias(names["m3"]),
-            reduce(lambda a, b: a + b, [guard(t, (x * x) * (x * x)) for t, x in zip(ts, d)]).alias(names["m4"]),
-        ]
-    out = out.select("*", *stage1).select("*", *stage2).select("*", *stage3)
+        ts = [f"CAST({_q(c)} AS DOUBLE)" for c in cols]
 
-    final = [F.col(c) for c in passthrough]
-    for g, cols in mapping.items():
-        names = inter[g]
-        n, mu = F.col(names["n"]), F.col(names["mu"])
-        m2, m3, m4 = F.col(names["m2"]), F.col(names["m3"]), F.col(names["m4"])
+        def guarded(e):
+            return [f"CASE WHEN {t} IS NOT NULL THEN {x} ELSE 0.0D END" for t, x in zip(ts, e)]
+
+        stage1.append(f"{_sum(guarded(['1.0D'] * len(ts)))} AS {n}")
+        if "s1" in needs:
+            stage1.append(f"{_sum(guarded(ts))} AS {s1}")
+            stage2.append(f"CASE WHEN {n} > 0 THEN {s1} / {n} END AS {mu}")
+        d = [f"({t} - {mu})" for t in ts]
+        if "m2" in needs:
+            stage3.append(f"{_sum(guarded([f'{x} * {x}' for x in d]))} AS {m2}")
+        if "m3" in needs:
+            stage3.append(f"{_sum(guarded([f'{x} * {x} * {x}' for x in d]))} AS {m3}")
+        if "m4" in needs:
+            stage3.append(
+                f"{_sum(guarded([f'({x} * {x}) * ({x} * {x})' for x in d]))} AS {m4}"
+            )
+
         # Reference parity (narwhals_utils.py:43-57,93-121,146-160): the
         # denominators and bias corrections use the STATIC column count
         # ns = len(cols) — only the mean and the centered-moment sums skip
         # per-row nulls. ns < min → constant NaN, decided at plan build.
         ns = float(len(cols))
-        var_s = m2 / F.lit(ns - 1.0) if ns > 1 else NAN
-        std = F.sqrt(var_s)
-        mean_e = mu
-        std_e = NAN if ns < 2 else std
-        skew_e = (
-            NAN
-            if ns < 3
-            else F.when(m2 == 0, NAN).otherwise(
-                F.lit(ns / ((ns - 1) * (ns - 2))) * (m3 / (std * std * std))
-            )
-        )
-        kurt_e = (
-            NAN
-            if ns < 4
-            else F.when(m2 == 0, NAN).otherwise(
-                F.lit(ns * (ns + 1) / ((ns - 1) * (ns - 2) * (ns - 3)))
-                * (m4 / (var_s * var_s))
-                - F.lit(3 * ((ns - 1) * (ns - 1)) / ((ns - 2) * (ns - 3)))
-            )
-        )
-        ts = [F.col(c).cast("double") for c in cols]
-        range_e = F.when(
-            n > 0,
-            (F.greatest(*ts) if len(ts) > 1 else ts[0])
-            - (F.least(*ts) if len(ts) > 1 else ts[0]),
-        )
-        cv_e = (
-            F.when(mu.isNull() | F.isnan(std_e), NAN)
-            .when((mu == 0) & (std == 0), NAN)
-            .when(mu == 0, F.lit(float("inf")))
-            .otherwise(std_e / mu)
-        )
+        var_s = f"({m2} / {_d(ns - 1.0)})" if ns > 1 else _NAN
+        std = f"SQRT({var_s})"
+        std_e = _NAN if ns < 2 else std
+        if len(ts) > 1:
+            hi, lo = f"GREATEST({', '.join(ts)})", f"LEAST({', '.join(ts)})"
+        else:
+            hi = lo = ts[0]
         exprs = {
-            "mean": mean_e,
+            "mean": mu,
             "std": std_e,
-            "skew": skew_e,
-            "kurt": kurt_e,
-            "range": range_e,
-            "cv": cv_e,
+            "skew": _NAN
+            if ns < 3
+            else f"CASE WHEN {m2} = 0 THEN {_NAN} ELSE "
+            f"{_d(ns / ((ns - 1) * (ns - 2)))} * ({m3} / ({std} * {std} * {std})) END",
+            "kurt": _NAN
+            if ns < 4
+            else f"CASE WHEN {m2} = 0 THEN {_NAN} ELSE "
+            f"{_d(ns * (ns + 1) / ((ns - 1) * (ns - 2) * (ns - 3)))}"
+            f" * ({m4} / ({var_s} * {var_s}))"
+            f" - {_d(3 * ((ns - 1) * (ns - 1)) / ((ns - 2) * (ns - 3)))} END",
+            "range": f"CASE WHEN {n} > 0 THEN {hi} - {lo} END",
+            "cv": f"CASE WHEN {mu} IS NULL OR isnan({std_e}) THEN {_NAN}"
+            f" WHEN ({mu} = 0) AND ({std} = 0) THEN {_NAN}"
+            f" WHEN {mu} = 0 THEN {_INF} ELSE {std_e} / {mu} END",
         }
-        final += [exprs[s].alias(f"{g}_groupstats_{s}") for s in stats]
-    return out.select(*final)
+        final += [f"{exprs[s]} AS {_q(f'{g}_groupstats_{s}')}" for s in stats]
+
+    out = df
+    for stage in (stage1, stage2, stage3):
+        if stage:
+            out = out.selectExpr("*", *stage)
+    return out.selectExpr(*final)
 
 
 class GroupStatsTransformer(PanelTransformer):

@@ -506,3 +506,299 @@ def test_melt_panel_matches_duckdb_unpivot(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan and "Exchange" not in plan
+
+
+# --- RankTransformer's Arrow kernel against the window formula -------------
+#
+# The oracle is the window plan RankTransformer ran before its Arrow kernel:
+# ``avg_rank(f) / count(f)`` over a window on the group columns. Spark's
+# window orders NaN above every number (NaN ties NaN), ties -0.0 with 0.0,
+# and normalizes NaN/-0.0 group keys; the kernel must agree bit for bit.
+
+NAN = float("nan")
+
+
+def _window_rank(df, feats, group_cols, keep):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from centimators_spark.operators.ranking import avg_rank
+
+    w = Window.partitionBy(*group_cols)
+    return df.select(
+        *keep,
+        *[
+            (avg_rank(f, group_cols) / F.count(F.col(f)).over(w)).alias(f"{f}_rank")
+            for f in feats
+        ],
+    )
+
+
+def _bits(v):
+    import struct
+
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+def _assert_same_ranks(got, want):
+    assert got.columns == want.columns
+    g = [tuple(map(_bits, r)) for r in got.orderBy("rid").collect()]
+    w = [tuple(map(_bits, r)) for r in want.orderBy("rid").collect()]
+    assert g == w
+
+
+def _rank_both(df, feats, group_cols, keep=("rid",)):
+    t = RankTransformer(
+        feats, group_col=group_cols, keep_cols=list(keep), output_mode="replace"
+    )
+    _assert_same_ranks(t.transform(df), _window_rank(df, feats, group_cols, list(keep)))
+
+
+def test_rank_kernel_ties_nan_null_signed_zero(spark):
+    vals = [1.0, -0.0, 0.0, NAN, NAN, None, float("inf"), 0.0, 2.0, None, -1.0]
+    rows = [(i, "ab"[i % 2], v) for i, v in enumerate(vals * 2)]
+    df = spark.createDataFrame(rows, "rid long, g string, v double")
+    _rank_both(df, ["v"], "g")
+
+
+def test_rank_kernel_decimal_integer_string_features(spark):
+    from decimal import Decimal
+
+    rows = [
+        (0, "x", Decimal("1.50"), 3, "b"),
+        (1, "x", Decimal("1.5"), None, "a"),
+        (2, "x", None, 3, "é"),
+        (3, "x", Decimal("-2.25"), -7, "Z"),
+        (4, "y", Decimal("0.00"), 1, "b"),
+        (5, "y", Decimal("0"), 1, None),
+        (6, "y", Decimal("9.99"), 2, "b"),
+    ]
+    df = spark.createDataFrame(
+        rows, "rid long, g string, d decimal(6,2), i int, s string"
+    )
+    _rank_both(df, ["d", "i", "s"], "g")
+
+
+def test_rank_kernel_date_null_nan_group_keys(spark):
+    import datetime
+
+    day = datetime.date(2024, 1, 1)
+    keys = [day, day, None, None, datetime.date(2024, 1, 2), day]
+    dates = spark.createDataFrame(
+        [(i, k, float(10 - i)) for i, k in enumerate(keys)],
+        "rid long, d date, v double",
+    )
+    _rank_both(dates, ["v"], "d")
+    fkeys = [NAN, NAN, -0.0, 0.0, None, None, 1.0, NAN]
+    floats = spark.createDataFrame(
+        [(i, k, float(i % 3)) for i, k in enumerate(fkeys)],
+        "rid long, k double, v double",
+    )
+    _rank_both(floats, ["v"], "k")
+
+
+def test_rank_kernel_two_group_columns(spark):
+    import random
+
+    rnd = random.Random(7)
+    choices = [0.0, -0.0, 1.0, 2.0, NAN, None]
+    rows = [
+        (i, rnd.choice("ab"), rnd.choice([1, 2, None]), rnd.choice(choices), rnd.random())
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "rid long, g string, h int, u double, v double")
+    _rank_both(df, ["u", "v"], ["g", "h"])
+
+
+def test_rank_kernel_global_and_append(spark):
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate([3.0, NAN, None, 1.0, 3.0, -0.0, 0.0])],
+        "rid long, v double",
+    )
+    with pytest.warns(UserWarning, match="single partition"):
+        t = RankTransformer(["v"], group_col=None, keep_cols=["rid"], output_mode="replace")
+    _assert_same_ranks(t.transform(df), _window_rank(df, ["v"], [], ["rid"]))
+    appended = RankTransformer(["v"], group_col="g").transform(df.withColumn("g", df.rid % 2))
+    _assert_same_ranks(
+        appended,
+        _window_rank(df.withColumn("g", df.rid % 2), ["v"], ["g"], ["rid", "v", "g"]),
+    )
+
+
+def test_rank_kernel_empty_partitions(spark):
+    """Partitions with no rows reach the kernel when AQE does not
+    coalesce them; an empty frame gives no rows and the full schema."""
+    from centimators_spark.functions.rank import rank_batches
+
+    df = spark.createDataFrame(
+        [(i, "g1" if i % 2 else "g2", float(i % 5)) for i in range(20)],
+        "rid long, g string, v double",
+    )
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        _rank_both(df, ["v"], "g")
+    finally:
+        spark.conf.set(key, before)
+    empty = RankTransformer(["v"], group_col="g").transform(df.where("rid < 0"))
+    assert empty.columns == ["rid", "g", "v", "v_rank"]
+    assert empty.collect() == []
+    assert list(rank_batches(iter([]), ["g"], ["v"], ["rid"])) == []
+    import pyarrow as pa
+
+    no_rows = pa.RecordBatch.from_pydict(
+        {"rid": pa.array([], pa.int64()), "g": pa.array([], pa.string()),
+         "v": pa.array([], pa.float64())}
+    )
+    assert list(rank_batches(iter([no_rows]), ["g"], ["v"], ["rid"])) == []
+
+
+# --- GroupStats against the Column formulas it was built from -------------
+#
+# The oracle below is GroupStatsTransformer's earlier Column-expression
+# plan, which built every moment for every group. The SQL-text stages must
+# give the same bits for each stat subset.
+
+
+def _column_group_stats(df, mapping, stats, passthrough):
+    from functools import reduce
+
+    import pyspark.sql.functions as F
+
+    NAN = F.lit(float("nan"))
+    inter = {}
+    stage1, stage2, stage3 = [], [], []
+    for g, cols in mapping.items():
+        ts = [F.col(c).cast("double") for c in cols]
+        guard = lambda t, e: F.when(t.isNotNull(), e).otherwise(F.lit(0.0))  # noqa: E731
+        n = reduce(
+            lambda a, b: a + b,
+            [F.when(t.isNotNull(), F.lit(1.0)).otherwise(F.lit(0.0)) for t in ts],
+        )
+        s1 = reduce(lambda a, b: a + b, [guard(t, t) for t in ts])
+        names = {m: f"__{m}_{g}" for m in ("n", "s1", "mu", "m2", "m3", "m4")}
+        inter[g] = names
+        stage1 += [n.alias(names["n"]), s1.alias(names["s1"])]
+        nc, s1c = F.col(names["n"]), F.col(names["s1"])
+        stage2.append(F.when(nc > 0, s1c / nc).alias(names["mu"]))
+        muc = F.col(names["mu"])
+        d = [t - muc for t in ts]
+        stage3 += [
+            reduce(lambda a, b: a + b, [guard(t, x * x) for t, x in zip(ts, d)]).alias(names["m2"]),
+            reduce(lambda a, b: a + b, [guard(t, x * x * x) for t, x in zip(ts, d)]).alias(names["m3"]),
+            reduce(lambda a, b: a + b, [guard(t, (x * x) * (x * x)) for t, x in zip(ts, d)]).alias(names["m4"]),
+        ]
+    out = df.select("*", *stage1).select("*", *stage2).select("*", *stage3)
+    final = [F.col(c) for c in passthrough]
+    for g, cols in mapping.items():
+        names = inter[g]
+        n, mu = F.col(names["n"]), F.col(names["mu"])
+        m2, m3, m4 = F.col(names["m2"]), F.col(names["m3"]), F.col(names["m4"])
+        ns = float(len(cols))
+        var_s = m2 / F.lit(ns - 1.0) if ns > 1 else NAN
+        std = F.sqrt(var_s)
+        std_e = NAN if ns < 2 else std
+        skew_e = (
+            NAN
+            if ns < 3
+            else F.when(m2 == 0, NAN).otherwise(
+                F.lit(ns / ((ns - 1) * (ns - 2))) * (m3 / (std * std * std))
+            )
+        )
+        kurt_e = (
+            NAN
+            if ns < 4
+            else F.when(m2 == 0, NAN).otherwise(
+                F.lit(ns * (ns + 1) / ((ns - 1) * (ns - 2) * (ns - 3)))
+                * (m4 / (var_s * var_s))
+                - F.lit(3 * ((ns - 1) * (ns - 1)) / ((ns - 2) * (ns - 3)))
+            )
+        )
+        ts = [F.col(c).cast("double") for c in cols]
+        range_e = F.when(
+            n > 0,
+            (F.greatest(*ts) if len(ts) > 1 else ts[0])
+            - (F.least(*ts) if len(ts) > 1 else ts[0]),
+        )
+        cv_e = (
+            F.when(mu.isNull() | F.isnan(std_e), NAN)
+            .when((mu == 0) & (std == 0), NAN)
+            .when(mu == 0, F.lit(float("inf")))
+            .otherwise(std_e / mu)
+        )
+        exprs = {"mean": mu, "std": std_e, "skew": skew_e, "kurt": kurt_e,
+                 "range": range_e, "cv": cv_e}
+        final += [exprs[s].alias(f"{g}_groupstats_{s}") for s in stats]
+    return out.select(*final)
+
+
+GROUPS = {
+    "one": ["a"],
+    "two": ["a", "b"],
+    "three": ["a", "b", "c"],
+    "four": ["a", "b", "c", "d"],
+    "five": ["b", "d", "i", "dec", "e"],
+}
+
+
+@pytest.fixture(scope="module")
+def stats_frame(spark):
+    import random
+
+    rnd = random.Random(11)
+    pool = [None, 0.0, -0.0, 1.0, -2.5, 3.25, 1e-9, 7.0, NAN]
+    rows = [(0, 0.0, 0.0, 0.0, 0.0, 0, "0.00", 0.0), (1, None, None, None, None, None, None, None),
+            (2, 2.0, 2.0, 2.0, 2.0, 2, "2.00", 2.0), (3, 1.0, None, None, None, None, None, None)]
+    rows += [
+        (i, *(rnd.choice(pool) for _ in range(4)), rnd.choice([None, -3, 0, 5]),
+         rnd.choice([None, "1.25", "-0.50", "3.00"]), rnd.gauss(0, 1))
+        for i in range(4, 120)
+    ]
+    from decimal import Decimal
+
+    rows = [(*r[:6], None if r[6] is None else Decimal(r[6]), r[7]) for r in rows]
+    return spark.createDataFrame(
+        rows,
+        "rid long, a double, b double, c double, d double, i int, dec decimal(6,2), e double",
+    )
+
+
+@pytest.mark.parametrize(
+    "stats", [[s] for s in ("mean", "std", "skew", "kurt", "range", "cv")]
+    + [["mean", "std", "skew", "kurt", "range", "cv"]],
+    ids=lambda s: "-".join(s),
+)
+def test_group_stats_sql_stages_match_column_formulas(spark, stats_frame, stats):
+    from centimators_spark.operators.stats import _staged_group_stats
+
+    passthrough = list(stats_frame.columns)
+    got = _staged_group_stats(stats_frame, GROUPS, stats, passthrough)
+    want = _column_group_stats(stats_frame, GROUPS, stats, passthrough)
+    assert got.columns == want.columns
+    assert [tuple(map(_bits, r)) for r in got.orderBy("rid").collect()] == [
+        tuple(map(_bits, r)) for r in want.orderBy("rid").collect()
+    ]
+
+
+def test_group_stats_builds_only_needed_moments(spark, stats_frame):
+    out = GroupStatsTransformer(GROUPS, ["mean", "std", "range"]).transform(stats_frame)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "__m2_" in analyzed
+    assert "__m3_" not in analyzed and "__m4_" not in analyzed
+
+
+def test_group_stats_quotes_names(spark, stats_frame):
+    """Column and group names with dots and backticks are quoted in the
+    SQL text: renaming them leaves every value unchanged."""
+    plain = GroupStatsTransformer({"g": ["a", "b", "c", "d"]}, keep_cols=["rid"],
+                                  output_mode="replace")
+    odd = GroupStatsTransformer({"g.`x": ["a.1", "b`", "c", "d"]}, keep_cols=["rid"],
+                                output_mode="replace")
+    renamed = stats_frame.withColumnsRenamed({"a": "a.1", "b": "b`"})
+    want = plain.transform(stats_frame)
+    got = odd.transform(renamed)
+    assert got.columns == [c.replace("g_", "g.`x_") for c in want.columns]
+    assert [tuple(map(_bits, r)) for r in got.orderBy("rid").collect()] == [
+        tuple(map(_bits, r)) for r in want.orderBy("rid").collect()
+    ]

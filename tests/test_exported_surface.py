@@ -150,25 +150,53 @@ def test_make_keras_losses(monkeypatch):
     assert got == pytest.approx(want, rel=1e-12)
 
 
-def test_kernel_module_import_stays_narrow():
-    """Importing a per-era kernel module, as a Python worker does when it
-    unpickles the kernel, loads neither ``pyspark.ml`` nor the package's
-    ML surface: the package ``__init__``s are lazy."""
+def _loaded_after_import(module: str, watched: tuple[str, ...]) -> list[str]:
+    """The ``watched`` modules a fresh interpreter holds after
+    ``import module``."""
+    import ast
     import subprocess
     import sys
 
     root = pathlib.Path(__file__).resolve().parents[1]
     probe = (
         "import sys\n"
-        "import centimators_spark.operators.penalization\n"
-        "print(sorted(m for m in ('pyspark.ml', 'centimators_spark.ml', "
-        "'centimators_spark.base') if m in sys.modules))\n"
+        f"import {module}\n"
+        f"print(sorted(m for m in {watched!r} if m in sys.modules))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", probe],
         cwd=root, capture_output=True, text=True, check=True,
     ).stdout
-    assert out.strip() == "[]"
+    return ast.literal_eval(out)
+
+
+def test_kernel_module_import_stays_narrow():
+    """Importing a per-era kernel module, as a Python worker does when it
+    unpickles the kernel, loads neither ``pyspark.ml`` nor the package's
+    ML surface: the package ``__init__``s are lazy."""
+    watched = ("pyspark.ml", "centimators_spark.ml", "centimators_spark.base")
+    assert _loaded_after_import("centimators_spark.operators.penalization", watched) == []
+
+
+def test_rank_kernel_import_stays_narrow():
+    """The rank kernel's module, which a Python worker imports to run
+    ``RankTransformer``'s Arrow call, loads neither ``pyspark.ml`` nor the
+    transformer surface."""
+    watched = (
+        "pyspark.ml", "centimators_spark.ml", "centimators_spark.base",
+        "centimators_spark.operators",
+    )
+    assert _loaded_after_import("centimators_spark.functions.rank", watched) == []
+
+
+def test_ml_module_import_stays_narrow():
+    """Importing one ``ml`` module loads neither the Keras estimators,
+    ``pyspark.ml`` nor ``dspymator``: ``ml/__init__`` is lazy."""
+    watched = (
+        "pyspark.ml", "centimators_spark.ml.estimators",
+        "centimators_spark.ml.dspymator",
+    )
+    assert _loaded_after_import("centimators_spark.ml.metrics", watched) == []
 
 
 # the submodules each package exposes as attributes right after import
@@ -183,6 +211,11 @@ SUBMODULES = {
         "encoding", "mwu", "neutralization", "penalization", "rangejoin",
         "ranking", "skew", "stats", "time_series",
     ),
+    "centimators_spark.ml": (
+        "architectures", "bootstrap", "calibration", "conformal", "dspymator",
+        "ensemble", "estimators", "feature_selection", "keras_cortex",
+        "losses", "metrics",
+    ),
 }
 
 
@@ -193,9 +226,9 @@ def test_lazy_surface_resolves():
     import importlib
 
     import centimators_spark as cs
-    from centimators_spark import operators
+    from centimators_spark import ml, operators
 
-    for pkg in (cs, operators):
+    for pkg in (cs, operators, ml):
         listed = dir(pkg)
         assert set(pkg.__all__) <= set(listed)
         for name in listed:

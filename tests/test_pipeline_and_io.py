@@ -302,3 +302,61 @@ def test_host_defaults_fit_host_and_env_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     assert session.host_defaults() == ("5", "2g")
+
+
+def _plan_nodes(plan: str) -> dict[str, int]:
+    """How many times each node name heads a line of a plan tree."""
+    import re
+    from collections import Counter
+
+    node = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s*)?([A-Za-z]\w*)(.*)$")
+    counts = Counter()
+    for line in plan.splitlines():
+        m = node.match(line)
+        if m:
+            name = m.group(1)
+            if name == "Exchange" and m.group(2).startswith(" hashpartitioning"):
+                name = "Exchange hashpartitioning"
+            counts[name] += 1
+    return counts
+
+
+def test_feature_chain_plan_shape(spark, tmp_path):
+    """The benchmark's feature pipeline (LogReturn → Rank by era → Lag →
+    MovingAverage → GroupStats) plans three hash exchanges (ticker, era,
+    ticker), one sort and one window per ticker window spec, and ranks
+    every feature of an era in ONE Arrow call: no window or sort per
+    ranked column."""
+    from centimators_spark.operators import GroupStatsTransformer
+
+    rng = np.random.default_rng(0)
+    eras, tickers, n_feats = 8, 25, 10
+    feats = [f"feature{j}" for j in range(n_feats)]
+    rows = [
+        (e, f"T{t:03d}", *(rng.integers(0, 5, n_feats) / 4.0).tolist(),
+         float(100 + e + t))
+        for e in range(1, eras + 1)
+        for t in range(tickers)
+    ]
+    path = str(tmp_path / "panel.parquet")
+    spark.createDataFrame(
+        rows, ["era", "ticker", *feats, "close"]
+    ).write.parquet(path)
+
+    df = spark.read.parquet(path)
+    order = {"ticker_col": "ticker", "order_cols": ["era"]}
+    ranked = [f"{f}_rank" for f in feats]
+    df = LogReturnTransformer(["close"], **order).transform(df)
+    df = RankTransformer(feats + ["close_logreturn"], group_col="era").transform(df)
+    df = LagTransformer([1, 2], ranked, **order).transform(df)
+    df = MovingAverageTransformer([3, 5], ["close_logreturn"], **order).transform(df)
+    df = GroupStatsTransformer(
+        {"g0": feats[:5], "g1": feats[5:]}, ["mean", "std", "range"]
+    ).transform(df)
+
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan().toString())
+    shape = {k: nodes[k] for k in ("Exchange hashpartitioning", "Sort", "Window", "MapInArrow")}
+    assert shape == {"Exchange hashpartitioning": 3, "Sort": 2, "Window": 2, "MapInArrow": 1}
+    out = str(tmp_path / "features.parquet")
+    df.write.parquet(out)
+    assert spark.read.parquet(out).count() == eras * tickers

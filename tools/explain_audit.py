@@ -73,7 +73,8 @@ def main():
         f"bhj={p.count('BroadcastHashJoin')}",
     )
 
-    # 5. rank: ONE exchange total (avg-rank shares a single window spec)
+    # 5. rank: ONE exchange total (the group-key repartition feeding the
+    # one Arrow call per partition that ranks every feature)
     p = plan_of(q["rank_transformer"](spark, sf_dir))
     n_ex = len(re.findall(r"Exchange hashpartitioning", p))
     ok &= audit("rank: single exchange", n_ex == 1, f"exchanges={n_ex}")
